@@ -90,6 +90,12 @@ object Tables {
       parquetRowCount(spark, sfDir, "lineitem")
     }
 
+  /** A long-valued gate setting (`spark.graft.*`): the set value when
+    * it parses as an integer, else `default` — a malformed setting must
+    * not fail the query it only tunes. */
+  private[graft] def longSetting(value: Option[String], default: Long): Long =
+    value.flatMap(_.trim.toLongOption).getOrElse(default)
+
   def documents(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "embeddings")
 

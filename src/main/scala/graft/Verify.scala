@@ -35,8 +35,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Same session hygiene as Bench: a 180+-key dump session otherwise
-      // accumulates every query's localCheckpoint blocks.
+      // Between-queries session hygiene: a 180+-key dump session
+      // otherwise accumulates every query's localCheckpoint blocks.
       graft.ext.Frames.freeSessionState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

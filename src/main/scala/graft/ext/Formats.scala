@@ -23,9 +23,10 @@ import graft.Tables
 object Formats {
 
   // Per-JVM unique root: a fixed shared path would let two concurrent
-  // sessions (Verify + Bench, parallel CI) overwrite each other's
-  // export mid-read and fail the gate on phantom corruption. Within
-  // one JVM reruns reuse the dir; mode("overwrite") keeps them clean.
+  // sessions (Verify + a benchmark run, parallel CI) overwrite each
+  // other's export mid-read and fail the gate on phantom corruption.
+  // Within one JVM reruns reuse the dir; mode("overwrite") keeps them
+  // clean.
   private lazy val scratchRoot: String =
     java.nio.file.Files.createTempDirectory("graft-roundtrip-").toString
 

@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
   * ever frees them — fine for one query, but an iterative loop that
   * checkpoints per round (connected components, BFS) pins every
   * superseded round's blocks for the life of the session, and a long
-  * bench/verify session accumulates thousands of dead RDDs (the round-8
+  * multi-query session accumulates thousands of dead RDDs (the round-8
   * in-session elevation: alphabetically-late iterative keys ran up to
   * 18× slower under the accumulated block-manager/GC pressure).
   *
@@ -54,7 +54,7 @@ object Frames {
     checkpointLeaves(df).foreach(lr => protectedIds -= lr.rdd.id)
   }
 
-  /** Between-queries session hygiene for long bench/verify sessions:
+  /** Between-queries session hygiene for long multi-query sessions:
     * drop every cached plan and every persistent RDD except protected
     * memo frames. Runs OUTSIDE any timed window. */
   def freeSessionState(spark: org.apache.spark.sql.SparkSession): Unit =
@@ -85,16 +85,6 @@ object Frames {
 
   private[graft] def buildsOf(tag: String): Int =
     synchronized { buildCounts(tag) }
-
-  /** Immutable snapshot of every memo tag's build count — emitted in
-    * the bench record (r17 verdict item 3) so a memoized key's per-key
-    * median is auditable as first-build vs memo-hit cost: a session
-    * where `builds["bpe_run"] == 1` shows the learn run was paid once
-    * (in the untimed warm-up or the first consumer), and the 0.06 s
-    * medians downstream are marginal cost by design, not a claim that
-    * merge learning is free. */
-  private[graft] def buildCountsSnapshot: Map[String, Int] =
-    synchronized { buildCounts.toMap }
 
   /** Session-scoped shared-frame memo, keyed by (tag, SparkContext,
     * sfDir) — the cross-query seam for an intermediate several gated
@@ -139,8 +129,8 @@ object Frames {
   /** Size-adaptive shuffle-partition count for an ITERATIVE loop's
     * round frames (guide §2.2 fewer-larger partitions, made adaptive):
     * one partition per ~1M rows of the frame the rounds actually
-    * shuffle, floor 8, capped at the session setting. The r18 sf30
-    * probe (tools.GraphScaleProbe) measured the graph loops' runtime
+    * shuffle, floor 8, capped at the session setting. An sf30
+    * partition sweep measured the graph loops' runtime
     * ~LINEAR in the partition count with data held constant (BFS:
     * 8 parts 6.7 s / 32 parts 17 s / 64 parts 31 s) — per-task fixed
     * overhead dwarfs per-task data on node-sized round frames, and

@@ -58,16 +58,15 @@ object Hits {
 
   /** Fact-row gate for the past-the-gate round-join strategy below —
     * shares the input-size dial family of `Sketches.maybeBloomPrefilter`
-    * (footer-derived, memoized; conf/env-overridable, default 10⁸).
+    * (footer-derived, memoized; conf-overridable, default 10⁸).
     * Below the gate the node-score frames broadcast and the per-round
     * joins never sort or exchange the edge frame, so the hint would
     * only force a worse plan; above it the score frames outgrow
     * broadcast and the rounds fall back to edge-sorting sort-merge
     * joins. */
   private def shjRoundGate(spark: SparkSession, sfDir: String): Boolean = {
-    val gate = spark.conf.getOption("spark.graft.graph.shjRoundRowGate")
-      .orElse(sys.env.get("SPARK_GRAFT_GRAPH_GATE"))
-      .map(_.toLong).getOrElse(100000000L)
+    val gate = graft.Tables.longSetting(
+      spark.conf.getOption("spark.graft.graph.shjRoundRowGate"), 100000000L)
     graft.Tables.lineitemRowsMemo(spark, sfDir) >= gate
   }
 

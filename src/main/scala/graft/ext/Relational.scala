@@ -709,15 +709,15 @@ object Relational {
         "l_partkey", p.select(col("p_partkey")))
       .join(p, col("l_partkey") === col("p_partkey"))
     // r18: the per-part average rides ONE whole-partition window instead
-    // of a self-agg + join-back. The sf30 capture (plans/r18/
-    // q17_..._sf30_before.txt) showed the fact scanned AND exchanged
-    // TWICE — the join-back subtree pruned columns differently from the
-    // agg subtree, so the exchanges could never unify. A window
-    // partitioned by l_partkey (guide §2.4: a window keyed like the
-    // preceding aggregation needs no second shuffle — here it REPLACES
-    // the aggregation) is one scan + one exchange structurally, and it
-    // is literally the oracle SQL's own formulation (SUM/COUNT OVER
-    // PARTITION BY l_partkey), so values are unchanged by construction.
+    // of a self-agg + join-back. The sf30 plan showed the fact scanned
+    // AND exchanged TWICE — the join-back subtree pruned columns
+    // differently from the agg subtree, so the exchanges could never
+    // unify. A window partitioned by l_partkey (guide §2.4: a window
+    // keyed like the preceding aggregation needs no second shuffle —
+    // here it REPLACES the aggregation) is one scan + one exchange
+    // structurally, and it is literally the oracle SQL's own
+    // formulation (SUM/COUNT OVER PARTITION BY l_partkey), so values are
+    // unchanged by construction.
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("l_partkey"))
     l.withColumn("sum_c", sum(col("qty_c")).over(w))
@@ -953,8 +953,8 @@ object Relational {
       // partitioning from the agg/window branch's hash(l_orderkey), so
       // the shared-exchange reuse this shape exists for silently breaks
       // exactly when the blame side outgrows broadcast: the fact was
-      // scanned AND shuffled TWICE plus fully sorted on two keys
-      // (SpotPlan capture, plans/r17/q21_late_suppliers_sf30_*.txt).
+      // scanned AND shuffled TWICE plus fully sorted on two keys (the
+      // AQE-final plan captured at sf30).
       // Keyed on l_orderkey only, both fact consumers demand the SAME
       // partitioning, the exchange is reused at any scale, and the
       // blame side (already hash(l_orderkey) from the window) needs no

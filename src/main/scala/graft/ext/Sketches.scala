@@ -260,9 +260,9 @@ object Sketches {
     * past 10⁸ fact rows (≈ sf17 on this generator). Below it the
     * selective dim broadcasts (or the fact shuffle is trivial) and the
     * bloom's extra dim scan + probe pass is pure overhead; above it the
-    * filtered dim has outgrown the 10 MB broadcast estimate (the
-    * sf30-measured flip, OPTIMIZATION_r17 §attribution) and the
-    * post-flip plan shuffles the WHOLE fact for a ~2–3%-selective join.
+    * filtered dim has outgrown the 10 MB broadcast estimate (the flip
+    * measured at sf30) and the post-flip plan shuffles the WHOLE fact
+    * for a ~2–3%-selective join.
     * Overridable per session via `spark.graft.bloom.factRowGate`
     * (tests force 1 to pin gated ≡ plain; production tunes it with the
     * broadcast threshold, the two dials this trade actually hangs on). */
@@ -290,9 +290,9 @@ object Sketches {
     * oracle, which never sees the bloom, pins it at the gate SFs). */
   private[graft] def maybeBloomPrefilter(spark: SparkSession, sfDir: String,
       fact: DataFrame, factKey: String, dimKeys: DataFrame): DataFrame = {
-    val gate = spark.conf.getOption("spark.graft.bloom.factRowGate")
-      .orElse(sys.env.get("SPARK_GRAFT_BLOOM_GATE"))
-      .map(_.toLong).getOrElse(BloomFactRowGateDefault)
+    val gate = graft.Tables.longSetting(
+      spark.conf.getOption("spark.graft.bloom.factRowGate"),
+      BloomFactRowGateDefault)
     if (graft.Tables.lineitemRowsMemo(spark, sfDir) < gate) fact
     else {
       val keys = dimKeys.toDF("k").localCheckpoint()

@@ -148,8 +148,8 @@ case class TopKPerKeyExec(k: Int, partition: Seq[Expression],
     val orderLocal = order
     val outputLocal = output
     val childSchema = DataTypeUtils.fromAttributes(childOutput)
-    val maxBufferedRows = conf.getConfString(
-      "spark.graft.topKPerKey.maxBufferedRows", "1000000").toLong
+    val maxBufferedRows = graft.Tables.longSetting(Option(conf.getConfString(
+      "spark.graft.topKPerKey.maxBufferedRows", null)), 1000000L)
     val fallbackMetric = longMetric("fallbackPartitions")
     child.execute().mapPartitions { iter =>
       val keyProj = UnsafeProjection.create(partLocal, childOutput)

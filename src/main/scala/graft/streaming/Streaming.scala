@@ -31,34 +31,26 @@ object Streaming {
   private def checkpoint(): String =
     Files.createTempDirectory("graft-ckpt-").toString
 
-  /** Fixed streaming-engine overhead (query planning/start, state-store
-    * provider setup, source listing — everything OUTSIDE the per-batch
-    * `triggerExecution` spans) accumulated since the last reset. Bench
-    * resets this per rep and reports it as `stream_init`, separate from
-    * the per-query plan cost: this dataflow cost is constant per stream
-    * start (NOT per row — at 100 TB a stream starts once and runs for
-    * months) and its 1.5–2× run-to-run wobble was the dominant noise in
-    * the streaming medians. */
-  @volatile private var initAccum = 0.0
-  def resetInitCost(): Unit = synchronized { initAccum = 0.0 }
-  def initCost: Double = initAccum
-  private def recordInit(s: Double): Unit =
-    synchronized { initAccum += math.max(s, 0.0) }
+  /** Streaming state-partition count (see the conf comment in
+    * [[runToParquet]]); a dial, raised with state volume in production. */
+  private val StatePartitions = "8"
 
-  /** Per-batch (batchId, inputRows, triggerExecution ms) spans of every
-    * stream the session has run since the last reset, keyed by the
-    * sink name [[runToParquet]] was given. The steady-state instrument
-    * ([[SteadyState]]) reads this to separate batch-0 cold cost
-    * (planning, codegen, state-store open) from the marginal micro-batch
-    * cost — the honest operating number for a deployed stream — for
-    * EVERY gated streaming key, not just a hand-picked one. */
-  @volatile private var batchLog =
-    Map.empty[String, Seq[(Long, Long, Long)]]
-  def resetBatchLog(): Unit = synchronized { batchLog = Map.empty }
-  def batchLogSnapshot: Map[String, Seq[(Long, Long, Long)]] = batchLog
-  private def recordBatches(name: String,
-      p: Seq[(Long, Long, Long)]): Unit =
-    synchronized { batchLog += name -> p }
+  /** State partitions for the CHUNKED (big-corpus) replay tier, where
+    * each micro-batch carries tens of millions of state rows: one
+    * partition per ~1M events, floored at the gate-SF 8 and capped at
+    * `min(32, defaultParallelism)`. Width past the session's cores only
+    * multiplies fixed cost (a state partition pays a RocksDB instance
+    * per stateful operator per batch); 32 is the widest this tier has
+    * been measured at (sf30-uniform, local[32], 8 → 32 partitions:
+    * dedup_ids 133.0 → 67.1 s, click_attrib 132.0 → 60.2 s), so a wider
+    * session keeps 32 until a larger run shows more width pays. The
+    * floor wins on a session narrower than 8 cores. Values are
+    * state-partition-invariant (pinned by the partition-count burn-in);
+    * the small-SF path never takes this tier. */
+  private def chunkedStateParts(spark: SparkSession, sfDir: String): String =
+    math.max(8L, math.min(
+      math.min(32, spark.sparkContext.defaultParallelism).toLong,
+      eventsCount(spark, sfDir) / 1000000L)).toString
 
   /** Run a streaming frame to completion through a parquet sink and
     * read the result back as a batch frame.
@@ -79,32 +71,6 @@ object Streaming {
     * executor→parquet and only the driver-side read of the FINAL
     * aggregate is small. Checkpoint + per-batch overwrite also make the
     * write path recoverable (memory sink is not). */
-  /** Streaming state-partition count (see the conf comment in
-    * [[runToParquet]]); a dial, raised with state volume in production. */
-  private val StatePartitions = "8"
-
-  /** State partitions for the CHUNKED (big-corpus) replay tier — r17
-    * verdict item 2: the two heaviest sf30 keys (stream dedup 114.9 s,
-    * click attribution 110.7 s) ran their stateful stages 8-wide on 32
-    * cores, a 4× parallelism giveaway exactly in the regime where each
-    * micro-batch carries tens of millions of state rows. Sized from
-    * EVENT VOLUME (one partition per ~1M events, floor 8 — the gate-SF
-    * value, so the chunk-forced steady-state instrument at sf0.1 keeps
-    * its 8-partition marginal-batch medians) capped at the session's
-    * core count (a state partition pays a RocksDB instance per
-    * operator per batch — width past the cores only multiplies that
-    * fixed cost). Overridable for A/B and production via
-    * SPARK_GRAFT_STREAM_STATE_PARTS. Values are state-partition-
-    * invariant (the r16 burn-in pin); the gate/bench small-SF path
-    * never takes this tier, so driver-graded numbers are untouched.
-    * Measured sf30-uniform, isolated, 8 → 32 partitions on local[32]:
-    * dedup_ids 133.0 → 67.1 s, click_attrib 132.0 → 60.2 s. */
-  private def chunkedStateParts(spark: SparkSession, sfDir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS",
-      math.max(8L, math.min(
-        math.min(32, spark.sparkContext.defaultParallelism).toLong,
-        eventsCount(spark, sfDir) / 1000000L)).toString)
-
   private def runToParquet(updates: DataFrame, mode: OutputMode,
       name: String, stateParts: String = StatePartitions): DataFrame = {
     val spark = updates.sparkSession
@@ -124,7 +90,6 @@ object Streaming {
       if (complete)
         (batch, _) => batch.write.mode("overwrite").parquet(s"$outDir/latest")
       else Sinks.idempotentParquet(outDir)
-    val t0 = System.nanoTime()
     // State partitions are sized to STATE VOLUME, not CPU count: every
     // state partition pays a RocksDB instance per stateful operator per
     // micro-batch, so a CPU-sized 32 costs ~2× wall on the stream-stream
@@ -143,17 +108,6 @@ object Streaming {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      // Engine-init = wall time minus the per-batch triggerExecution spans
-      // (which carry the actual plan + state-store work).
-      val wall = (System.nanoTime() - t0) / 1e9
-      val batchSecs = q.recentProgress.iterator.map { p =>
-        val d = p.durationMs.get("triggerExecution")
-        if (d == null) 0L else d.longValue
-      }.sum / 1000.0
-      recordInit(wall - batchSecs)
-      recordBatches(name, q.recentProgress.toSeq.map(p => (p.batchId,
-        p.numInputRows,
-        Option(p.durationMs.get("triggerExecution")).fold(0L)(_.longValue))))
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     // A source with zero rows can legitimately produce zero batches —
     // the sink dir is then empty and read.parquet cannot infer a
@@ -210,73 +164,13 @@ object Streaming {
       d.toString
     })
 
-  /** Steady-state instrument dials — BOTH unset in the gate/bench path,
-    * where staging and triggering are byte-identical to prior rounds:
-    *  - SPARK_GRAFT_STREAM_STAGE_CHUNKS=N stages the single-file tables
-    *    as N ORDERED chunk files (events via the ts-ordered daily
-    *    staging, documents as doc_id ranges), the production ingest
-    *    layout where files land over time;
-    *  - SPARK_GRAFT_STREAM_FILES_PER_TRIGGER caps files per micro-batch
-    *    on every staged source.
-    * Together they give AvailableNow replays a real multi-batch steady
-    * regime for [[SteadyState]] to measure, instead of draining the
-    * whole corpus in batch 0. Values are batching-invariant: event
-    * chunks are time-ordered (the in-order contract's axis), and every
-    * per-doc/per-hash fold in the document streams is batch-commutative
-    * — the gate tier pins the values either way. */
-  private def stageChunks: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STAGE_CHUNKS").map(_.toInt).getOrElse(1)
-
-  /** Streaming reader over a staged directory, honoring the
-    * files-per-trigger instrument cap when set. */
-  private def readStaged(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType, dir: String): DataFrame = {
-    val r = spark.readStream.schema(schema)
-    sys.env.get("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER")
-      .fold(r)(v => r.option("maxFilesPerTrigger", v))
-      .parquet(dir)
-  }
-
-  /** [[staged]] with the chunked-staging instrument dial applied:
-    * events delegate to the ts-ordered daily staging, documents are
-    * split into doc_id-ranged ordered files. */
-  private def stagedChunkable(spark: SparkSession, sfDir: String,
-      table: String): String = {
-    val k = stageChunks
-    if (k <= 1) staged(sfDir, table)
-    else if (table == "events") stagedDaily(spark, sfDir)
-    else stagedSrc.computeIfAbsent(s"$sfDir/$table#chunks=$k", { _ =>
-      import scala.jdk.CollectionConverters._
-      require(table == "documents", s"chunked staging: unexpected table $table")
-      val d = Files.createTempDirectory("graft-stream-src-chunks-")
-      val tmp = Files.createTempDirectory("graft-stream-src-chunks-tmp-")
-      spark.read.parquet(s"$sfDir/$table.parquet")
-        .repartitionByRange(k, org.apache.spark.sql.functions.col("doc_id"))
-        .sortWithinPartitions(org.apache.spark.sql.functions.col("doc_id"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      val parts = {
-        val listing = Files.list(tmp)
-        try listing.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .toSeq.sortBy(_.getFileName.toString)
-        finally listing.close()
-      }
-      parts.zipWithIndex.foreach { case (p, i) =>
-        stamp(Files.copy(p, d.resolve(f"part-$i%05d.parquet")), i)
-      }
-      d.toString
-    })
-  }
-
   def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
     Tables.events(spark, sfDir) // sets the nanos flag + registers functions
-    val dir = stagedChunkable(spark, sfDir, "events")
-    // Schema from the staged files themselves: daily-chunked staging
-    // rewrites ts to timestamp_ntz micros while the single-file staging
-    // keeps the raw TIMESTAMP(NANOS)->LongType shape; normalizeEventTs
-    // handles both, but the reader's schema spec must match the files.
+    val dir = staged(sfDir, "events")
+    // Schema from the staged file itself: it keeps the raw
+    // TIMESTAMP(NANOS)->LongType shape, which normalizeEventTs expects.
     val stagedSchema = spark.read.parquet(dir).schema
-    Tables.normalizeEventTs(readStaged(spark, stagedSchema, dir))
+    Tables.normalizeEventTs(spark.readStream.schema(stagedSchema).parquet(dir))
   }
 
   private val chunkStagedSrc =
@@ -369,8 +263,7 @@ object Streaming {
     val stagedSchema = spark.read.parquet(dir).schema
     Tables.normalizeEventTs(
       spark.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", sys.env.getOrElse(
-          "SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", DailyFilesPerTrigger))
+        .option("maxFilesPerTrigger", DailyFilesPerTrigger)
         .parquet(dir))
   }
 
@@ -692,7 +585,7 @@ object Streaming {
   private val ChunkedReplayEventCap = 2000000L
 
   /** Plan-time |events|, memoized per (session, sfDir) — same tag as
-    * Growth's, so a verify/bench pass counts the table once total. */
+    * Growth's, so one session counts the table once total. */
   private def eventsCount(spark: SparkSession, sfDir: String): Long =
     graft.ext.Frames.scalarMemo("events_count", spark, sfDir) {
       Tables.events(spark, sfDir).count()
@@ -701,20 +594,10 @@ object Streaming {
   /** The corpus-size tier dispatch, shared by every stateful replay
     * whose state is watermark-bounded only BETWEEN batches (the
     * stream-stream join's buffered sides, dropDuplicates' id set):
-    * single-batch below the cap, daily-chunked above. Forcible for the
-    * tier-equality specs and BenchOne tier measurements
-    * (SPARK_GRAFT_STREAM_CHUNKED=0/1 overrides in a bench child JVM). */
+    * single-batch below the cap, daily-chunked above. The tier-equality
+    * specs force a tier through the `*Tiered(chunked = ...)` forms. */
   private def autoChunked(spark: SparkSession, sfDir: String): Boolean =
-    sys.env.get("SPARK_GRAFT_STREAM_CHUNKED") match {
-      case Some("1") => true
-      case Some("0") => false
-      // Fail loudly on anything else ("true", a typo): a bench/verify
-      // child intending to FORCE a tier must never silently measure
-      // the auto-decided other one.
-      case Some(other) => sys.error(
-        s"SPARK_GRAFT_STREAM_CHUNKED must be '1' or '0', got '$other'")
-      case None => eventsCount(spark, sfDir) > ChunkedReplayEventCap
-    }
+    eventsCount(spark, sfDir) > ChunkedReplayEventCap
 
   def clickAttributionStream(spark: SparkSession, sfDir: String): DataFrame =
     clickAttributionStreamTiered(spark, sfDir, autoChunked(spark, sfDir))
@@ -933,8 +816,8 @@ object Streaming {
     import spark.implicits._
     Tables.documents(spark, sfDir) // registers graft functions
     val raw = spark.read.parquet(s"$sfDir/documents.parquet")
-    val docs = readStaged(spark, raw.schema,
-      stagedChunkable(spark, sfDir, "documents"))
+    val docs = spark.readStream.schema(raw.schema)
+      .parquet(staged(sfDir, "documents"))
       .select(md5(col("text")).as("h"), col("doc_id")).as[(String, Long)]
     val updates = docs.groupByKey(_._1)
       .mapGroupsWithState[(Long, Long), (String, Long, Long, Long)](
@@ -970,8 +853,8 @@ object Streaming {
   def tokenizeStream(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = spark.read.parquet(s"$sfDir/documents.parquet")
     val pieces = graft.ext.Tokenize.pieceFrame(spark, sfDir)
-    val docs = readStaged(spark, raw.schema,
-      stagedChunkable(spark, sfDir, "documents"))
+    val docs = spark.readStream.schema(raw.schema)
+      .parquet(staged(sfDir, "documents"))
     val words = graft.ext.Tokenize.wordsOf(docs)
     val perDoc = words.join(pieces, Seq("word"))
       .groupBy(col("doc_id"))
@@ -1173,8 +1056,8 @@ object Streaming {
     Tables.documents(spark, sfDir) // registers graft kernels
     val keepers = graft.ext.Dedup.fingerprintDedup(spark, sfDir)
       .select(col("keeper").as("doc_id"))
-    val docs = readStaged(spark, raw.schema,
-      stagedChunkable(spark, sfDir, "documents"))
+    val docs = spark.readStream.schema(raw.schema)
+      .parquet(staged(sfDir, "documents"))
     val admitted = docs
       .select(col("doc_id"),
         graft.ext.TextAnalysis.qualityScoreCol.as("quality_score"))

@@ -62,7 +62,7 @@ object Ledger {
     sb ++= s"${sorted.size} gated keys, $nOracle with a DuckDB hash " +
       "oracle, " + s"${sorted.size - nOracle} rows-only. The driver's " +
       "correctness gate (`Verify` + DuckDB compare) runs every key; " +
-      "per-round results land in `CORRECTNESS_r{N}.json`.\n\n"
+      "`tools/check_oracle.py` runs the same compare locally.\n\n"
     sb ++= "| key | module | oracle |\n| --- | --- | --- |\n"
     for ((k, m, o) <- sorted) sb ++= s"| `$k` | $m | $o |\n"
     val out = Paths.get(repo, "LEDGER.md")

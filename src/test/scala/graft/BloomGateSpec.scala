@@ -12,10 +12,13 @@ class BloomGateSpec extends SparkSpec {
 
   private val GateKey = "spark.graft.bloom.factRowGate"
 
-  private def withGate[T](forcedOn: Boolean)(body: => T): T = {
+  /** Runs `body` with the gate key set to `value` (unset on None). */
+  private def withGate[T](value: Option[String])(body: => T): T = {
     val prev = spark.conf.getOption(GateKey)
-    if (forcedOn) spark.conf.set(GateKey, "1")
-    else spark.conf.unset(GateKey)
+    value match {
+      case Some(v) => spark.conf.set(GateKey, v)
+      case None => spark.conf.unset(GateKey)
+    }
     try body
     finally {
       prev match {
@@ -33,21 +36,23 @@ class BloomGateSpec extends SparkSpec {
     ("q2_min_cost_supplier", SupplyChain.q2MinCostSupplier _))
 
   test("default gate at test SF: no bloom probe in any plan") {
-    queries.foreach { case (name, fn) =>
-      val plan = withGate(forcedOn = false) {
+    // Unset, and a malformed value: both fall back to the default gate
+    // instead of failing the query.
+    for (gate <- Seq(None, Some("1e8x")); (name, fn) <- queries) {
+      val plan = withGate(gate) {
         fn(spark, sf).queryExecution.optimizedPlan.toString
       }
       assert(!plan.contains("shiftright"),
-        s"$name: bloom probe present below the gate")
+        s"$name (gate $gate): bloom probe present below the gate")
     }
   }
 
   test("forced gate: bloom probe in plan, results row-identical") {
     queries.foreach { case (name, fn) =>
-      val plain = withGate(forcedOn = false) {
+      val plain = withGate(None) {
         fn(spark, sf).collect().map(_.toString).sorted.toSeq
       }
-      val gated = withGate(forcedOn = true) {
+      val gated = withGate(Some("1")) {
         val df = fn(spark, sf)
         assert(df.queryExecution.optimizedPlan.toString.contains("shiftright"),
           s"$name: bloom probe missing with the gate forced on")

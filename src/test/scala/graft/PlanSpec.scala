@@ -130,13 +130,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q17: one lineitem scan + one fact exchange (window, no join-back)") {
-    // Round-18: the sf30 capture showed q17's self-agg + join-back
+    // Round-18: the sf30 plan showed q17's self-agg + join-back
     // scanning and shuffling the fact TWICE — the two fact subtrees
-    // pruned columns differently, so the exchanges could never unify
-    // (plans/r18/q17_small_qty_revenue_sf30_before.txt). The whole-
-    // partition window formulation (the oracle SQL's own shape) must
-    // keep exactly one lineitem scan, one l_partkey fact exchange, and
-    // a Window node instead of a second join.
+    // pruned columns differently, so the exchanges could never unify.
+    // The whole-partition window formulation (the oracle SQL's own
+    // shape) must keep exactly one lineitem scan, one l_partkey fact
+    // exchange, and a Window node instead of a second join.
     val df = ext.Relational.q17SmallQtyRevenue(spark, sf)
     df.collect() // finalize the adaptive plan
     val p = plan(df).split("== Initial Plan ==")(0)
