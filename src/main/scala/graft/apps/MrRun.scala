@@ -45,15 +45,8 @@ object MrRun {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    try {
-      // wholeFiles keys are file:// URIs; the reference's apps see the
-      // CLI-given path (`os.Args`), so normalize to a plain path before
-      // the map UDF — keeps indexer/catenate output diffable against
-      // reference mr-out files.
-      val pathMapF: MapReduce.MapF =
-        (f, c) => mapF(f.stripPrefix("file:").replaceAll("^/+", "/"), c)
-      val result = MapReduce.runJobOnFiles(spark, Seq(inGlob), pathMapF, reduceF)
-      MapReduce.sortedTextSink(result, outDir)
-    } finally spark.stop()
+    try MapReduce.sortedTextSink(
+      MapReduce.runJobOnFiles(spark, Seq(inGlob), mapF, reduceF), outDir)
+    finally spark.stop()
   }
 }

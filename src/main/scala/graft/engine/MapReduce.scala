@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference dataflow's one value type: a string key/value pair
@@ -12,8 +12,8 @@ case class KV(key: String, value: String)
   * loaded from Go plugins at `/root/reference/src/main/mrworker.go:32-49`)
   * re-expressed as one lazy Spark plan:
   *
-  *   whole-file scan → typed flatMap(mapF) → hash shuffle → per-key
-  *   reduceF → (key, value) dataset
+  *   whole-file scan → flatMap(mapF) → one hash exchange on `key`
+  *   (`nReduce` buckets) → [[GenericReduce]] per key → (key, value) dataset
   *
   * Scheduling concerns the reference hand-rolls (pull-based assignment,
   * the map→reduce phase barrier, 10 s straggler re-execution, at-least-once
@@ -28,23 +28,25 @@ case class KV(key: String, value: String)
   *    folding would be wrong — this is collect-then-finish by design.
   *    Value order within a group is unspecified, exactly as the
   *    reference's hash-map grouping makes it.
-  *  - `nReduce` maps to the number of output partitions; the hash
-  *    partitioner differs (Murmur3 vs FNV-1a) but bucket layout is not an
-  *    observable output (the reference's own tests sort-merge all
-  *    partitions before comparing, `src/main/test-mr.sh:103`).
+  *  - `nReduce` is the bucket count of the one exchange, hence of output
+  *    partitions; the hash differs (Murmur3 vs FNV-1a) but bucket layout
+  *    is not an observable output (the reference's own tests sort-merge
+  *    all partitions before comparing, `src/main/test-mr.sh:103`).
   */
 object MapReduce {
 
   type MapF = (String, String) => Seq[KV]
   type ReduceF = (String, Seq[String]) => String
 
-  /** Whole-file text scan (S1): one row per file, `(filename, contents)`
-    * (`src/mr/worker.go:166-173`). Parity path only — whole-file rows are
-    * wrong at 100 TB; the ext layer reads columnar parquet instead. */
+  /** Whole-file scan (S1) via the `wholefile` source: one `(path,
+    * contents)` row per file, empty files too (`src/mr/worker.go:166-173`).
+    * Keys are plain local paths, as the reference's apps see `os.Args`.
+    * Parity path only — whole-file rows are wrong at 100 TB; the ext
+    * layer reads columnar parquet instead. */
   def wholeFiles(spark: SparkSession, paths: Seq[String]): Dataset[KV] = {
     import spark.implicits._
-    spark.read.option("wholetext", "true").textFile(paths: _*)
-      .select(input_file_name().as("key"), col("value"))
+    spark.read.format("wholefile").load(paths: _*)
+      .select(col("path").as("key"), col("content").as("value"))
       .as[KV]
   }
 
@@ -54,9 +56,10 @@ object MapReduce {
     import input.sparkSession.implicits._
     input
       .flatMap(kv => mapF(kv.key, kv.value))
-      .groupByKey(_.key)
-      .mapGroups((k, vs) => KV(k, reduceF(k, vs.map(_.value).toSeq)))
       .repartition(nReduce, col("key"))
+      .groupBy(col("key"))
+      .agg(udaf(new GenericReduce(reduceF)).apply(col("key"), col("value")).as("value"))
+      .as[KV]
   }
 
   /** Run a job over files on disk (the reference's

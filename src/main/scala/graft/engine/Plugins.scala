@@ -10,7 +10,7 @@ import org.apache.spark.sql.Dataset
   * `Lookup("Map")`/`Lookup("Reduce")`); the JVM equivalent is a jar on
   * a path, loaded through a URLClassLoader. [[MrPlugin]] is the ABI
   * (Java-friendly so plugin jars can be authored in any JVM language
-  * with no Scala toolchain), [[MapReduce.runJobFromJar]] the entry
+  * with no Scala toolchain), [[Plugins.runJobFromJar]] the entry
   * point.
   *
   * Distribution contract: the job closures capture only the (jarPath,

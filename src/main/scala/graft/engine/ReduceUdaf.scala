@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions.udaf
 /** The reference's whole application aggregate API —
   * `Reduce(key string, values []string) string`
   * (`/root/reference/src/main/mrworker.go:32-49`) — as a first-class
-  * Spark `Aggregator`, so arbitrary full-group reduces are usable from
-  * BOTH the typed API and SQL (`SELECT key, mr_reduce_*(key, value) …
-  * GROUP BY key`).
+  * Spark `Aggregator`: the one reduce of [[MapReduce.runJob]], and of
+  * SQL (`SELECT key, mr_reduce_*(key, value) … GROUP BY key`).
   *
   * Collect-then-finish by design: reference reduces are NOT required to
   * be commutative monoids (indexer/crash sort inside the group,

@@ -4,6 +4,8 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -21,6 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * {{{
   *   spark.read.format("wholefile").load("/data/dir")      // or .load(glob)
+  *   spark.read.format("wholefile").load(file, dir, glob)  // several paths
   * }}}
   *
   * Implements `SupportsPushDownRequiredColumns`, so `SELECT path` never
@@ -91,32 +94,33 @@ object WholeFileSource {
 
 class WholeFileTable(properties: Map[String, String])
     extends Table with SupportsRead {
-  private val path: String =
-    properties.getOrElse("path", throw new IllegalArgumentException(
-      "wholefile source requires a load path"))
-  override def name(): String = s"wholefile($path)"
+  // load(p) sets `path`; load(p1, p2, ...) sets `paths`, a JSON array.
+  private val paths: Seq[String] = properties.get("paths").toSeq
+    .flatMap(new ObjectMapper().readValue(_, classOf[Array[String]])) ++ properties.get("path")
+  require(paths.nonEmpty, "wholefile source requires a load path")
+  override def name(): String = s"wholefile(${paths.mkString(",")})"
   override def schema(): StructType = WholeFileSource.fullSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WholeFileScanBuilder(path)
+    new WholeFileScanBuilder(paths)
 }
 
-class WholeFileScanBuilder(path: String)
+class WholeFileScanBuilder(paths: Seq[String])
     extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = WholeFileSource.fullSchema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  override def build(): Scan = new WholeFileScan(path, required)
+  override def build(): Scan = new WholeFileScan(paths, required)
 }
 
-class WholeFileScan(path: String, required: StructType) extends Scan with Batch {
+class WholeFileScan(paths: Seq[String], required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"WholeFileScan(path=$path, columns=${required.fieldNames.mkString(",")})"
+    s"WholeFileScan(path=${paths.mkString(",")}, columns=${required.fieldNames.mkString(",")})"
   override def planInputPartitions(): Array[InputPartition] =
-    WholeFileSource.listFiles(path)
+    paths.flatMap(WholeFileSource.listFiles)
       .map(f => WholeFilePartition(f): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     new WholeFileReaderFactory(required.fieldNames)

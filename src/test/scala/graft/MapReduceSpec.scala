@@ -166,10 +166,14 @@ class MapReduceSpec extends SparkSpec {
   test("wholeFiles reads (filename, contents) one row per file") {
     val dir = java.nio.file.Files.createTempDirectory("mr-files")
     val f1 = dir.resolve("a.txt"); val f2 = dir.resolve("b.txt")
+    val f3 = dir.resolve("empty.txt")
     java.nio.file.Files.writeString(f1, "hello world\nhello")
     java.nio.file.Files.writeString(f2, "spark")
+    java.nio.file.Files.writeString(f3, "")
     val rows = MapReduce.wholeFiles(spark, Seq(dir.toString + "/*.txt"))
-      .collect().map(kv => kv.key.split("/").last -> kv.value).toMap
-    assert(rows == Map("a.txt" -> "hello world\nhello", "b.txt" -> "spark"))
+      .collect().map(kv => kv.key -> kv.value).toMap
+    // Plain local-path keys; the empty file keeps its row (and map task).
+    assert(rows == Map(f1.toString -> "hello world\nhello",
+      f2.toString -> "spark", f3.toString -> ""))
   }
 }

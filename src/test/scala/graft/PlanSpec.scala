@@ -158,6 +158,29 @@ class PlanSpec extends SparkSpec {
       "tokenize+filter must run before (under) the shuffle")
   }
 
+  test("MapReduce façade: one hash exchange on key into nReduce buckets") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import spark.implicits._
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val input = Seq(engine.KV("f1", "the quick brown fox the fox"),
+      engine.KV("f2", "quick quick brown"), engine.KV("f3", "lazy dog the")).toDS()
+    val ds = engine.MapReduce.runJob(input, engine.MapReduce.wcMap,
+      engine.MapReduce.wcReduce, nReduce = 10)
+    ds.collect() // finalize the adaptive plan
+    val exec = ds.queryExecution.executedPlan
+    val p = exec.toString
+    val exchanges = H.collect(exec) { case e: Exchange => e }
+    assert(exchanges.size == 1, "expected exactly one exchange:\n" + p)
+    assert(exchanges.head.outputPartitioning match {
+      case HashPartitioning(Seq(k: Attribute), 10) => k.name == "key"
+      case _ => false
+    }, "expected hashpartitioning(key, 10):\n" + p)
+    assert(ds.rdd.getNumPartitions == 10)
+    assert(!p.contains("MapGroups"), "typed group path is back:\n" + p)
+  }
+
   /** Column sets actually read by the plan's scans. When another suite
     * cached the table, the InMemoryTableScan line is the authoritative
     * pruned read (the FileScan inside the cached relation keeps all

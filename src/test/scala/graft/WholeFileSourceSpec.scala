@@ -71,8 +71,24 @@ class WholeFileSourceSpec extends SparkSpec {
       .map { case (p, c) => p.split("/").last -> c }.toMap
     val viaEngine = MapReduce.wholeFiles(spark, Seq(s"$dir/*.txt"))
       .collect().map(kv => kv.key.split("/").last -> kv.value).toMap
-    // wholetext text source drops empty files; the DSv2 source keeps them.
-    assert(viaSource.filter(_._2.nonEmpty) == viaEngine.filter(_._2.nonEmpty))
+    assert(viaEngine.size == 3)
+    assert(viaSource == viaEngine)
+  }
+
+  test("several load paths: a file plus a glob, each listed and checked") {
+    val other = java.nio.file.Files.createTempDirectory("wholefile-src2")
+    java.nio.file.Files.writeString(other.resolve("x.md"), "x")
+    java.nio.file.Files.writeString(other.resolve("y.md"), "yy")
+    java.nio.file.Files.writeString(other.resolve("z.txt"), "not matched")
+    val df = spark.read.format("wholefile").load(s"$dir/a.txt", s"$other/*.md")
+    val rows = df.select(col("path"), col("length")).as[(String, Long)].collect()
+      .map { case (p, l) => p.split("/").last -> l }.sortBy(_._1)
+    assert(rows.toSeq == Seq("a.txt" -> 17L, "x.md" -> 1L, "y.md" -> 2L))
+    assert(df.rdd.getNumPartitions == 3)
+    // A zero-match glob among several paths still fails.
+    intercept[Exception] {
+      spark.read.format("wholefile").load(s"$dir/a.txt", s"$other/*.nope").collect()
+    }
   }
 
   test("wordcount over the source equals the corpus oracle") {
