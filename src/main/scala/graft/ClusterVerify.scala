@@ -89,6 +89,8 @@ object ClusterVerify {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-smoke-wh").toString)
       .config("spark.ui.enabled", "false")

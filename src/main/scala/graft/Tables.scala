@@ -30,7 +30,6 @@ object Tables {
         String, java.lang.ref.SoftReference[DataFrame]]]())
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val perSession = {
       var m = relationCache.get(spark)
       if (m == null) {
@@ -99,19 +98,20 @@ object Tables {
   def documents(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = apply(spark, sfDir, "embeddings")
 
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark only reads via
-    * the nanosAsLong legacy flag. Normalize it to timestamp_ntz micros
-    * (the driver data is micro-precision, so `div 1000` is lossless) to
-    * align with every other timestamp column and with DuckDB's naive
-    * TIMESTAMP semantics. Session timezone is UTC everywhere.
-    */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** The events table with `ts` normalized to timestamp_ntz micros,
+    * aligned with every other timestamp column and with DuckDB's naive
+    * TIMESTAMP semantics (session timezone is UTC everywhere). A pure
+    * read: it sets no session setting. A TIMESTAMP(NANOS) events file
+    * needs `spark.sql.legacy.parquet.nanosAsLong=true` at session setup;
+    * it then reads as epoch nanos and [[normalizeEventTs]] divides by
+    * 1000, lossless for micro-precision data. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeEventTs(apply(spark, sfDir, "events"))
-  }
 
   /** Shared ts normalization — used by the batch loader above AND the
-    * streaming source (graft.streaming), so the two can never diverge. */
+    * streaming source (graft.streaming), so the two can never diverge.
+    * The `LongType` branch is the nanosAsLong read of a TIMESTAMP(NANOS)
+    * file. */
   def normalizeEventTs(df: DataFrame): DataFrame =
     if (df.schema("ts").dataType == LongType)
       df.withColumn("ts",

@@ -37,11 +37,11 @@ object Bfs {
     * derives from the MEASURED frontier+visited size — the frames are
     * eagerly checkpointed, so the size is a cheap count, and a 100 TB
     * frontier (billions of nodes) still spreads to the session's full
-    * width. */
+    * width. The width is chosen in the plan ([[expand]]); no session
+    * setting is written. */
   /** BFS over an arbitrary undirected pair frame (part_a, part_b). */
   private[graft] def bfsHopsOf(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val cap = pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val edges = pairs
       .select(col("part_a").as("src"), col("part_b").as("dst"))
       .unionAll(pairs.select(col("part_b").as("src"),
@@ -55,35 +55,45 @@ object Bfs {
     var visitedRows = NumSeeds.toLong
     var frontier = visited.select(col("node"))
     var prevNext: Option[DataFrame] = None
-    // Scoped set + restore, the runToParquet discipline: every action in
-    // the loop (the per-round checkpoints) plans under the adaptive
-    // count; the returned frame is a pure projection of the final
-    // checkpoint, so nothing outside the scope re-plans a shuffle.
-    try {
-      for (k <- 1 to MaxHops) {
-        spark.conf.set("spark.sql.shuffle.partitions",
-          Frames.roundShuffleParts(visitedRows, sessionParts))
-        val next = edges.join(frontier, edges("src") === frontier("node"))
-          .select(col("dst").as("node")).distinct()
-          .join(visited.select(col("node")), Seq("node"), "left_anti")
-          .select(col("node"), lit(k.toLong).as("hop"))
-          .localCheckpoint()
-        // `next` is materialized (eager checkpoint): the previous round's
-        // frontier frame has no further consumer — free its blocks now
-        // instead of pinning every round's frontier for the session.
-        prevNext.foreach(Frames.freeCheckpoint)
-        val grown = visited.unionAll(next).localCheckpoint()
-        Frames.freeCheckpoint(visited) // superseded by `grown`
-        visited = grown
-        visitedRows += next.count() // block-metadata read on a checkpoint
-        frontier = next.select(col("node"))
-        prevNext = Some(next)
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions",
-      sessionParts.toString)
+    for (k <- 1 to MaxHops) {
+      val next = expand(edges, frontier, visited, k,
+        Frames.roundShuffleParts(visitedRows, cap)).localCheckpoint()
+      // `next` is materialized (eager checkpoint): the previous round's
+      // frontier frame has no further consumer — free its blocks now
+      // instead of pinning every round's frontier for the session.
+      prevNext.foreach(Frames.freeCheckpoint)
+      val grown = visited.unionAll(next).localCheckpoint()
+      Frames.freeCheckpoint(visited) // superseded by `grown`
+      visited = grown
+      visitedRows += next.count() // block-metadata read on a checkpoint
+      frontier = next.select(col("node"))
+      prevNext = Some(next)
+    }
     prevNext.foreach(Frames.freeCheckpoint) // rows live on in `visited`
     visited.select(col("node").as("part"), col("hop"))
   }
+
+  /** One round: the nodes first reached at hop `k` — the frontier's
+    * neighbours over `edges`, deduplicated and minus `visited` — with
+    * every exchange `parts` wide. Each join side and the distinct's
+    * input are repartitioned explicitly (a localCheckpoint does not keep
+    * a layout from one round to the next). The frontier is renamed
+    * AFTER its repartition: when both sides of a join are bare shuffles
+    * narrower than the session setting, Spark re-plans both at the
+    * session's width (EnsureRequirements' minimum-parallelism rule),
+    * and a projection over one side keeps the join at `parts`. The
+    * distinct's exchange carries raw rows (no map-side combine), the
+    * trade [[Basket.copurchaseOf]] makes too. */
+  private[graft] def expand(edges: DataFrame, frontier: DataFrame,
+      visited: DataFrame, k: Int, parts: Int): DataFrame =
+    edges.repartition(parts, col("src"))
+      .join(frontier.repartition(parts, col("node")).select(col("node").as("via")),
+        col("src") === col("via"))
+      .select(col("dst").as("node"))
+      .repartition(parts, col("node")).distinct()
+      .join(visited.select(col("node")).repartition(parts, col("node")),
+        Seq("node"), "left_anti")
+      .select(col("node"), lit(k.toLong).as("hop"))
 
   /** Gate: hops to the nearest of 4 seed parts over the co-purchase
     * graph, capped at [[MaxHops]]. */

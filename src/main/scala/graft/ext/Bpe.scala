@@ -64,6 +64,12 @@ object Bpe {
     // the conf window and the restored conf governs everything after,
     // so the scope is exactly the merge loop. Values are
     // codegen-invariant (the fold was CodegenFallback already).
+    //
+    // One of the two session writes left in a query path (the other is
+    // Streaming.runToParquet's state-partition window): both settings
+    // are read from the session conf at planning and execution time,
+    // and a Dataset has no per-plan form of either, so turning codegen
+    // off for these rounds alone takes a scoped set and restore.
     val session = wordTypes.sparkSession
     val keys = Seq("spark.sql.codegen.wholeStage",
       "spark.sql.codegen.factoryMode")

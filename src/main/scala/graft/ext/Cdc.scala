@@ -49,7 +49,6 @@ object Cdc {
   /** One row per chunk instance: (doc_id, chunk_idx, chunk_hash,
     * chunk_words). The seam CdcSpec drives with hand texts. */
   private[graft] def chunkInstances(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val d = docs
       .select(col("doc_id"), Hashing.wordHashes(col("text")).as("whs"))
       .withColumn("n", size(col("whs")))

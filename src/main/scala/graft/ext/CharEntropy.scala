@@ -65,7 +65,6 @@ object CharEntropy {
     * docs are absent (as in the explode formulation, which emitted no
     * rows for them); oversized docs raise in the kernel. */
   private[graft] def entropyOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         graft.functions.GraftFunctions.charEntropyStats(col("text")).as("st"))

@@ -193,49 +193,58 @@ object Communities {
     * with their degree at admission (their degree in the round's
     * surviving subgraph). */
   private[graft] def kcoreOf(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val edges = pairs
       .select(col("part_a").as("src"), col("part_b").as("dst"))
       .unionAll(pairs.select(col("part_b").as("src"),
         col("part_a").as("dst")))
       .localCheckpoint()
     // Size-adaptive round partitioning ([[Frames.roundShuffleParts]],
-    // where the r18 sf30 probe evidence lives): every per-round frame
-    // here (sub, degree agg, survivor set) is bounded by the edge list,
-    // whose size one cheap count on the fresh checkpoint gives.
-    val edgeRows = edges.count()
+    // where the r18 sf30 probe evidence lives), chosen in the plan
+    // ([[degrees]]): every per-round frame here (sub, degree agg,
+    // survivor set) is bounded by the edge list, whose size one cheap
+    // count on the fresh checkpoint gives.
+    val parts = Frames.roundShuffleParts(edges.count(),
+      pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     var nodes: DataFrame = null // null ⇒ round 1: survivors = all nodes
     var deg: DataFrame = null
     var prevDeg: DataFrame = null
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions",
-        Frames.roundShuffleParts(edgeRows, sessionParts))
-      for (_ <- 1 to PeelRounds) {
-        // Round 1's survivor set is every node, so filtering the edge
-        // list against it is the identity — skip the two joins and
-        // compute plain degree (the oracle's s1-over-n0 round is the
-        // same identity, so results are unchanged; at scale this drops
-        // 2 of the 8 edge-list joins).
-        val sub =
-          if (nodes == null) edges
-          else edges
-            .join(nodes.select(col("node").as("sa")), col("src") === col("sa"))
-            .join(nodes.select(col("node").as("sb")), col("dst") === col("sb"))
-        val d = sub.groupBy(col("src")).agg(count(lit(1)).as("c"))
-          .localCheckpoint()
-        prevDeg = deg
-        deg = d
-        val grown = deg.filter(col("c") >= CoreK)
-          .select(col("src").as("node")).localCheckpoint()
-        if (nodes != null) Frames.freeCheckpoint(nodes) // superseded by `grown`
-        if (prevDeg != null) Frames.freeCheckpoint(prevDeg)
-        nodes = grown
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions",
-      sessionParts.toString)
+    for (_ <- 1 to PeelRounds) {
+      val d = degrees(edges, Option(nodes), parts).localCheckpoint()
+      prevDeg = deg
+      deg = d
+      val grown = deg.filter(col("c") >= CoreK)
+        .select(col("src").as("node")).localCheckpoint()
+      if (nodes != null) Frames.freeCheckpoint(nodes) // superseded by `grown`
+      if (prevDeg != null) Frames.freeCheckpoint(prevDeg)
+      nodes = grown
+    }
     deg.filter(col("c") >= CoreK)
       .select(col("src").as("part"), col("c").as("core_deg"))
+  }
+
+  /** One peel round's (src, c): each node's degree in the subgraph the
+    * survivor set `nodes` induces on `edges`, with every exchange
+    * `parts` wide. Round 1's survivor set is every node (`None`), so
+    * filtering the edge list against it is the identity — skip the two
+    * joins and compute plain degree (the oracle's s1-over-n0 round is
+    * the same identity, so results are unchanged; at scale this drops 2
+    * of the 8 edge-list joins). Each join side and the count's input
+    * are repartitioned explicitly, and each survivor side is renamed
+    * after its repartition so that Spark keeps the join at `parts` (see
+    * [[Bfs.expand]]). The count runs after its exchange (no map-side
+    * combine), the trade [[Basket.copurchaseOf]] makes too. */
+  private[graft] def degrees(edges: DataFrame, nodes: Option[DataFrame],
+      parts: Int): DataFrame = {
+    val sub = nodes.fold(edges) { n =>
+      def side(as: String) =
+        n.repartition(parts, col("node")).select(col("node").as(as))
+      edges.repartition(parts, col("src"))
+        .join(side("sa"), col("src") === col("sa"))
+        .repartition(parts, col("dst"))
+        .join(side("sb"), col("dst") === col("sb"))
+    }
+    sub.repartition(parts, col("src"))
+      .groupBy(col("src")).agg(count(lit(1)).as("c"))
   }
 
   def partsKcore(spark: SparkSession, sfDir: String): DataFrame =

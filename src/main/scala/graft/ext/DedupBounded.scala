@@ -85,9 +85,6 @@ object DedupBounded {
   /** The capped pipeline over an arbitrary `(doc_id, sh)` frame — the
     * seam DedupBoundedSpec drives with planted mega-posting families. */
   private[graft] def containmentCappedPairsOf(shIn: DataFrame): DataFrame = {
-    // Planted spec frames bypass Tables (the usual registration point)
-    // — idempotent re-register, same as Quality.statsOf.
-    graft.functions.GraftFunctions.register(shIn.sparkSession)
     val sh = shIn.filter(size(col("sh")) > 0).localCheckpoint()
     containmentCappedPairsSides(sh, sh, sh)
   }
@@ -143,7 +140,6 @@ object DedupBounded {
 
   /** The bounded report over any verified-pairs frame (spec seam). */
   private[graft] def containmentTopKOf(pairs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(pairs.sparkSession)
     pairs
       .groupBy(col("doc_a"))
       .agg(topKSmallest(struct((-col("cont_permille")).as("nc"),
@@ -245,7 +241,6 @@ object DedupBounded {
   /** The capped pipeline over an arbitrary `(doc_id, simhash)` frame —
     * the seam DedupBoundedSpec drives with planted mega-buckets. */
   private[graft] def hammingDegreeHistOf(sig: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(sig.sparkSession)
     val banded = sig
       .select(col("doc_id"), col("simhash"),
         posexplode(Dedup.simhashBandKeys(col("simhash"))))
@@ -406,7 +401,6 @@ object DedupBounded {
   private[graft] def jaccardTopKOf(shIn: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions.{minhashSig, sigMatchCount,
       sortedIntersectSize}
-    graft.functions.GraftFunctions.register(shIn.sparkSession)
     val sh = shIn.filter(size(col("sh")) > 0).localCheckpoint()
     val prefix = Dedup.prefixTokensOf(sh, Dedup.PrefixTauPermille)
     val capped = prefix.groupBy(col("h"))
@@ -516,7 +510,6 @@ object DedupBounded {
     * snapshot's posting-CAPPED inverted index. */
   def incrementalContainmentTopK(spark: SparkSession,
       sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val sh = Dedup.shingled(spark, sfDir)
       .filter(size(col("sh")) > 0).localCheckpoint()
     val pairs = containmentCappedPairsSides(

@@ -129,18 +129,19 @@ object Frames {
   /** Size-adaptive shuffle-partition count for an ITERATIVE loop's
     * round frames (guide §2.2 fewer-larger partitions, made adaptive):
     * one partition per ~1M rows of the frame the rounds actually
-    * shuffle, floor 8, capped at the session setting. An sf30
-    * partition sweep measured the graph loops' runtime
-    * ~LINEAR in the partition count with data held constant (BFS:
-    * 8 parts 6.7 s / 32 parts 17 s / 64 parts 31 s) — per-task fixed
-    * overhead dwarfs per-task data on node-sized round frames, and
+    * shuffle, floor 8, and never above `cap`, the session's
+    * `spark.sql.shuffle.partitions` (so a session narrower than 8 keeps
+    * its own width). An sf30 partition sweep measured the graph loops'
+    * runtime ~LINEAR in the partition count with data held constant
+    * (BFS: 8 parts 6.7 s / 32 parts 17 s / 64 parts 31 s) — per-task
+    * fixed overhead dwarfs per-task data on node-sized round frames, and
     * AQE's parallelism-first coalescing floor keeps CPU-count
-    * partitions alive however small the data. `cap` is the SESSION
-    * setting read BEFORE the loop mutates it (reading it per round
-    * would ratchet the cap down to the floor). Callers scope the conf
-    * set/restore around their loop (the runToParquet discipline). */
-  private[graft] def roundShuffleParts(rows: Long, cap: Int): String =
-    math.max(8L, math.min(cap.toLong, rows / 1000000L)).toString
+    * partitions alive however small the data. Callers put the width in
+    * the plan, as an explicit `repartition(n, key)` on every round frame
+    * before its join, distinct or aggregate; the session setting is only
+    * read, never written. */
+  private[graft] def roundShuffleParts(rows: Long, cap: Int): Int =
+    math.min(cap.toLong, math.max(8L, rows / 1000000L)).toInt
 
   private[graft] def sessionMemo(tag: String,
       spark: org.apache.spark.sql.SparkSession, sfDir: String)(

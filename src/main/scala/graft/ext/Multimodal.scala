@@ -1006,7 +1006,6 @@ object Multimodal {
     * the seam DedupBoundedSpec drives with planted mega-families. */
   private[graft] def phashDegreeHistOf(ph: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions.topKSmallest
-    graft.functions.GraftFunctions.register(ph.sparkSession)
     val bands = ph.select(col("doc_id"), col("phash"),
       explode(sequence(lit(0), lit(PhashBands - 1))).as("band"))
       .withColumn("bv",

@@ -33,7 +33,6 @@ object Novelty {
   /** The composition over an arbitrary (doc_id, text) frame — the seam
     * NoveltySpec drives with hand corpora. */
   private[graft] def noveltyOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sh = docs
       .select(col("doc_id"),
         explode(Hashing.shingleHashes(

@@ -66,7 +66,6 @@ object Paragraph {
 
   /** (doc_id, blk, h, pos) — pos is the encoded global keep-first order. */
   private[graft] def blocksOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       posexplode(blockHashes(wordHashes(col("text")),
         wordHashes37(col("text")))))

@@ -68,9 +68,6 @@ object Quality {
     * 'k') would make n_tokens and n_2grams disagree within a row. */
   private[graft] def statsOf(docs: DataFrame): DataFrame = {
     import graft.functions.GraftFunctions._
-    // Planted frames arrive without going through Tables (which is what
-    // normally registers the kernel functions) — idempotent re-register.
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         wordTokens(col("text")).as("ws"),

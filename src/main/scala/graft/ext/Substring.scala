@@ -54,7 +54,6 @@ object Substring {
   /** [[spans]] over an explicit (doc_id, text) frame — SubstringSpec's
     * seam for the exact-verify pass and planted-collision cases. */
   private[graft] def spansOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       explode(spanHashes64(wordHashes(col("text")),
         wordHashes37(col("text")), SpanK)).as("h"))
@@ -153,7 +152,6 @@ object Substring {
   /** [[multiscaleCoverage]] over an explicit (doc_id, text) frame —
     * the planted long-repeat spec's seam. */
   private[graft] def multiscaleCoverageOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val w = docs.select(col("doc_id"),
       wordHashes(col("text")).as("w1"), wordHashes37(col("text")).as("w2"))
     val tagged = Scales.map { k =>
@@ -242,7 +240,6 @@ object Substring {
   /** [[exciseReport]] over an explicit (doc_id, aug) frame — the
     * planted-template spec's seam. */
   private[graft] def exciseOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // Checkpoint-free (round-17): the positional span frame previously
     // fed two consumers (first-doc/dup set + per-doc word counts)
     // through a localCheckpoint — the storage-cliff class the r16 sf30
@@ -357,7 +354,6 @@ object Substring {
   /** [[boilerplate]] over an explicit (doc_id, source, aug) frame —
     * SubstringSpec's seam for per-source scoping cases. */
   private[graft] def boilerplateOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // NO lineage cut here (round 16): the exploded span frame is
     // corpus × spans/doc rows (~450M at sf30) — a MEMORY_AND_DISK
     // checkpoint of it outgrows the storage pool past ~sf10 and the
@@ -499,7 +495,6 @@ object Substring {
   /** [[longestDupReport]] over an explicit (doc_id, aug) frame — the
     * spec's seam for constructed variable-length cases. */
   private[graft] def longestDupOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // "≥ 2 distinct docs share h" ⟺ min(doc) ≠ max(doc) over the h
     // partition: ONE exchange of the span frame (window) instead of the
     // groupBy(h) + join-back shape, whose second leg re-shuffles the

@@ -63,7 +63,6 @@ object Tokenize {
     * codegen'd pass per document, zero shuffle (the explode + groupBy
     * shape this replaces exchanged one row per corpus token). */
   private def wtfOf(docs: DataFrame): DataFrame = {
-    GF.register(docs.sparkSession)
     docs
       .select(col("doc_id"), explode(GF.wordTfPairs(col("text"))).as("p"))
       .select(col("doc_id"), col("p.word").as("word"), col("p.tf").as("tf"))

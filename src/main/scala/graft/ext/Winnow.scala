@@ -51,7 +51,6 @@ object Winnow {
 
   /** (doc_id, h, pos) — positional widened span hashes. */
   private def posSpans(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       posexplode(spanHashes64(wordHashes(col("text")),
         wordHashes37(col("text")), Substring.K)))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -421,35 +421,11 @@ object GraftExpressions {
     "graft_normalize_ws" -> (args => NormalizeWs(args.head)))
 }
 
-/** Session-scoped registration + typed Column helpers. `register` is
-  * idempotent and called from [[graft.Tables]], so every query/test path
-  * that touches a table can use the graft_* functions. */
+/** Typed Column helpers over the `graft_*` SQL functions. The functions
+  * themselves are installed once per session by
+  * [[graft.plans.GraftExtensions]]; a session built without the
+  * extensions cannot resolve them. */
 object GraftFunctions {
-
-  // Register once per session: [[graft.Tables]] calls register on every
-  // table load, and re-registering emitted a SimpleFunctionRegistry
-  // "function replaced" WARN per kernel per call — hundreds of lines
-  // that drowned the bench summary in the driver's stdout tail window
-  // (r10 ask #7). Weak keys so a stopped session doesn't pin.
-  private val registered = java.util.Collections.synchronizedSet(
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  def register(spark: SparkSession): Unit =
-    // Whole check-and-install under one lock: marking BEFORE installing
-    // let a concurrent second caller proceed mid-install, and a builder
-    // failure left the session permanently marked with functions missing
-    // (round-11 advisory). The flag is set only after success, so a
-    // failed install retries on the next call.
-    registered.synchronized {
-      if (!registered.contains(spark)) {
-        GraftExpressions.builders.foreach { case (name, builder) =>
-          spark.sessionState.functionRegistry
-            .createOrReplaceTempFunction(name, builder, "built-in")
-        }
-        registered.add(spark)
-      }
-    }
 
   def polyHash(c: Column): Column = call_function("graft_poly_hash", c)
   def wordHashes(c: Column): Column = call_function("graft_word_hashes", c)

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode, Window}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, UnspecifiedDistribution}
@@ -12,6 +12,8 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode, UnsafeExternalRowSorter}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
+
+import graft.functions.GraftExpressions
 
 /** Custom whole-operator optimization (SURVEY.md §7.6 escape hatch —
   * the one place the stock operator set genuinely leaves performance on
@@ -236,10 +238,18 @@ case class TopKPerKeyExec(k: Int, partition: Seq[Expression],
     copy(child = newChild)
 }
 
-/** Session-extension wiring: `.withExtensions(GraftExtensions.apply)`. */
+/** The one session setup: `.withExtensions(GraftExtensions.apply)`
+  * installs the TopKPerKey rule and strategy and every `graft_*` SQL
+  * function ([[graft.functions.GraftExpressions.builders]]) into each
+  * session the builder makes, `newSession()` children included. */
 object GraftExtensions {
   def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => TopKPerKeyRule)
     e.injectPlannerStrategy(_ => TopKPerKeyStrategy)
+    val className = GraftExpressions.getClass.getName.stripSuffix("$")
+    GraftExpressions.builders.foreach { case (name, builder) =>
+      e.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(className, name), builder))
+    }
   }
 }

@@ -51,8 +51,8 @@ object WholeFileSource {
     StructField("content", StringType, nullable = false),
     StructField("length", LongType, nullable = false)))
 
-  /** Expand the load path (dir or glob-in-filename) to concrete files,
-    * sorted for deterministic partition order. Like the built-in
+  /** Expand the load path (file, dir or glob-in-filename) to concrete
+    * files, sorted for deterministic partition order. Like the built-in
     * sources, a nonexistent path or a zero-match glob FAILS instead of
     * reading as an empty corpus (an existing empty directory is the one
     * legitimately-empty case). */
@@ -73,9 +73,14 @@ object WholeFileSource {
           s"'$scheme:' in $path. Stage remote data locally or use a " +
           "splittable format + built-in source for distributed storage.")
     val p = java.nio.file.Paths.get(path.stripPrefix("file:"))
+    // An existing file is read as named, even when its name holds glob
+    // characters (`a[1].txt`) or starts with `.` or `_`.
+    if (java.nio.file.Files.isRegularFile(p)) return Seq(p.toString)
     val isDir = java.nio.file.Files.isDirectory(p)
+    // A directory listing skips hidden and underscore files (`.crc`,
+    // `_SUCCESS`), as Spark's built-in file sources do.
     val (dir, glob) =
-      if (isDir) (p, "*")
+      if (isDir) (p, "[!._]*")
       else (p.getParent, p.getFileName.toString)
     if (dir == null || !java.nio.file.Files.isDirectory(dir))
       throw new IllegalArgumentException(

@@ -22,9 +22,14 @@ import graft.kv.KvOp
   *
   * Scale notes: the same code runs unbounded (continuous ingestion) by
   * swapping the trigger; state stores are per-key and spill via the
-  * state-store provider (RocksDB on a real cluster); the windowed agg
-  * shuffles once on the (window, type) grouping key exactly like its
-  * batch twin.
+  * state-store provider; the windowed agg shuffles once on the (window,
+  * type) grouping key exactly like its batch twin.
+  *
+  * Session setup: set `spark.sql.streaming.stateStore.providerClass` to
+  * `RocksDBStateStoreProvider` when the session is built (README). RocksDB
+  * spills keyed state to local disk instead of holding it on the JVM
+  * heap — at 100 TB the per-key state (dedup hashes, session state)
+  * outgrows executor heaps long before it outgrows local disk.
   */
 object Streaming {
 
@@ -74,16 +79,6 @@ object Streaming {
   private def runToParquet(updates: DataFrame, mode: OutputMode,
       name: String, stateParts: String = StatePartitions): DataFrame = {
     val spark = updates.sparkSession
-    // Production state-store posture: RocksDB spills keyed state to
-    // local disk instead of holding it on the JVM heap — at 100 TB the
-    // per-key state (dedup hashes, session state) outgrows executor
-    // heaps long before it outgrows local disk. Set lazily so batch
-    // sessions never pay for it; StreamingSpec pins checkpoint recovery
-    // on this same provider.
-    if (!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        .exists(_.contains("RocksDB")))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val outDir = Files.createTempDirectory(s"graft-sink-$name-").toString
     val complete = mode == OutputMode.Complete()
     val sink: (DataFrame, Long) => Unit =
@@ -96,19 +91,26 @@ object Streaming {
     // join (8.5 → 4.3 s measured) while the gate-SF state fits in a few
     // partitions with room to spare. Production raises this dial with
     // state size; result VALUES are partition-count-invariant (pinned by
-    // the 32-vs-16-thread burn-in). Scoped to the stream's run and
-    // restored after — batch plans keep the session setting.
+    // the 32-vs-16-thread burn-in).
+    //
+    // One of the two session writes left in a query path (the other is
+    // Bpe.runMerges' codegen window): a streaming query's state-partition
+    // count has no per-plan form — it is read from the session conf when
+    // the query starts, then fixed in the checkpoint. The window is just
+    // `start()`: StreamExecution clones the session, conf included, in
+    // its constructor, so the running query keeps `stateParts` while
+    // the session setting is restored before the batches run.
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", stateParts)
-    try {
-      val q = updates.writeStream
+    val q =
+      try updates.writeStream
         .foreachBatch(sink)
         .outputMode(mode)
         .option("checkpointLocation", checkpoint())
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    q.awaitTermination()
     // A source with zero rows can legitimately produce zero batches —
     // the sink dir is then empty and read.parquet cannot infer a
     // schema. "No data yet" is an empty result, not an error.
@@ -126,7 +128,7 @@ object Streaming {
   }
 
   /** Stream the events parquet as micro-batches, normalizing `ts` the same
-    * way Tables.events does (TIMESTAMP(NANOS) → timestamp_ntz micros).
+    * way Tables.events does (to timestamp_ntz micros).
     * The file source requires a directory, so the (read-only) single-file
     * table is staged into a temp dir first — in production the ingest
     * path IS a directory that files land in. */
@@ -165,10 +167,9 @@ object Streaming {
     })
 
   def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.events(spark, sfDir) // sets the nanos flag + registers functions
     val dir = staged(sfDir, "events")
-    // Schema from the staged file itself: it keeps the raw
-    // TIMESTAMP(NANOS)->LongType shape, which normalizeEventTs expects.
+    // Schema from the staged file itself, read the way the batch table
+    // is, so normalizeEventTs sees the same `ts` type on both paths.
     val stagedSchema = spark.read.parquet(dir).schema
     Tables.normalizeEventTs(spark.readStream.schema(stagedSchema).parquet(dir))
   }
@@ -250,14 +251,13 @@ object Streaming {
     * so no row is ever late to its own batch's watermark, and both join
     * sides read the same files per trigger. */
   def eventStreamDaily(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.events(spark, sfDir)
     val dir = stagedDaily(spark, sfDir)
     // Schema from the STAGED files themselves, never the raw source
     // file: staging rewrites ts through Tables.events (always
-    // timestamp_ntz micros), so a raw file in the legacy
-    // TIMESTAMP(NANOS)->LongType shape would hand readStream a
-    // LongType spec for micros data and normalizeEventTs would divide
-    // by 1000 AGAIN — silent timestamp corruption in this tier only.
+    // timestamp_ntz micros), so a raw TIMESTAMP(NANOS) file read under
+    // nanosAsLong would hand readStream a LongType spec for micros data
+    // and normalizeEventTs would divide by 1000 AGAIN — silent
+    // timestamp corruption in this tier only.
     // Deriving the spec from the staged write makes the two sides
     // definitionally agree.
     val stagedSchema = spark.read.parquet(dir).schema

@@ -56,4 +56,12 @@ class BfsSpec extends SparkSpec {
       assert(a.sameElements(b))
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
+
+  test("roundShuffleParts: floor 8, never above the session width") {
+    import graft.ext.Frames.roundShuffleParts
+    assert(roundShuffleParts(1000L, 4) == 4)
+    assert(roundShuffleParts(1000L, 200) == 8)
+    assert(roundShuffleParts(50000000L, 32) == 32)
+    assert(roundShuffleParts(20000000L, 200) == 20)
+  }
 }

@@ -10,14 +10,6 @@ import graft.ext.CharEntropy
 class CharEntropySpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    // Constructed frames bypass Tables' lazy registration — without
-    // this the suite only passed when run after a suite that had
-    // already registered the kernels on the shared session.
-    graft.functions.GraftFunctions.register(spark)
-  }
-
   test("log table is exactly floor(100*log2 k)") {
     // Powers of two are the exact lattice points; off-lattice values
     // bound-checked against the neighbors.

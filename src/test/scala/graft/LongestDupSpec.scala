@@ -12,11 +12,6 @@ import graft.functions.{GraftFunctions => GF}
 class LongestDupSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GF.register(spark)
-  }
-
   private def run(docs: Seq[(Long, String)]): Map[Long, (Long, Long)] =
     Substring.longestDupOf(docs.toDF("doc_id", "aug"))
       .collect()

@@ -542,6 +542,39 @@ class PlanSpec extends SparkSpec {
     assert(pm.contains("BroadcastExchange"), pm)
   }
 
+  test("bfs + kcore rounds: every exchange has the roundShuffleParts width") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.functions.col
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // A session 16 wide, so a round width of 8 is told apart from an
+    // exchange that fell back to the session setting; broadcasts off, so
+    // every join shuffles both sides.
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "16")
+    wide.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import wide.implicits._
+    val n = ext.Frames.roundShuffleParts(12L, 16)
+    assert(n == 8)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L))
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      .toDF("src", "dst").localCheckpoint()
+    val nodes = Seq(1L, 2L, 3L, 5L).toDF("node").localCheckpoint()
+    val seed = nodes.filter(col("node") === 1L)
+    for ((round, shuffles) <- Seq(
+        ext.Bfs.expand(edges, seed,
+          nodes.filter(col("node") < 3L).withColumn("hop", col("node") * 0L),
+          1, n) -> 4,
+        ext.Communities.degrees(edges, None, n) -> 1,
+        // The survivor side's shuffle is reused for both of its joins.
+        ext.Communities.degrees(edges, Some(nodes), n) -> 4)) {
+      round.collect() // finalize the adaptive plan
+      val exec = round.queryExecution.executedPlan
+      val widths = H.collect(exec) { case e: ShuffleExchangeLike => e.numPartitions }
+      assert(widths.size == shuffles && widths.forall(_ == n),
+        s"widths $widths, want $shuffles × $n:\n$exec")
+    }
+  }
+
   test("triangles: wedge + closure are equi-joins, no cartesian") {
     val p = plan(ext.PageRank.partsTriangles(spark, sf))
     assert(!p.contains("CartesianProduct"), p)

@@ -20,6 +20,11 @@ import graft.engine.MapReduce
   * exercised the stage machinery, not just task re-execution. */
 class ShuffleChaosSpec extends SparkSpec {
 
+  // The injected fetch failures unregister the shared session's block
+  // manager; register it again so later suites run on a whole session.
+  override def afterAll(): Unit =
+    try GraftChaos.restoreBlockManager() finally super.afterAll()
+
   /** Runs `body` while counting stage submissions with attempt > 0
     * (stage RETRIES). Listener bus is async — poll until stable, the
     * MapReduceSpec discipline. */

@@ -16,9 +16,6 @@ class SparseSimSpec extends SparkSpec {
       (2L, "alpha beta gamma alpha"),
       (3L, "delta epsilon zeta eta theta")
     ).toDF("doc_id", "text")
-    // Kernel registration normally rides on the first Tables load; this
-    // test builds its frame from literals, so register explicitly.
-    graft.functions.GraftFunctions.register(spark)
     // Run the full pipeline on a tiny corpus by dropping it through the
     // feature seam + the same pairing logic at the gate threshold.
     val feats = SparseSim.featuresOf(docs)

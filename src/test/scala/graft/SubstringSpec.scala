@@ -11,11 +11,6 @@ import graft.functions.{GraftFunctions => GF}
 class SubstringSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GF.register(spark) // planted frames don't pass through Tables
-  }
-
   test("spanHashes kernel == HOF fold (order + multiplicity)") {
     // Includes a doc with a repeated span ("a b c d e" twice) — the
     // set-semantic shingle kernel would collapse it; the span kernel

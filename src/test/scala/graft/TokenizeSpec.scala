@@ -11,11 +11,6 @@ import graft.functions.{GraftFunctions => GF}
 class TokenizeSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GF.register(spark)
-  }
-
   private def pieces(word: String, vocab: Seq[String]): (Long, Long) = {
     val Seq(n, nv) = Seq(word).toDF("w")
       .select(GF.greedyPieces(col("w"),

@@ -15,9 +15,6 @@ class TopKAggSpec extends AnyFunSuite with SparkSpec {
 
   test("topKSmallest keeps the k smallest, sorted ascending") {
     import spark.implicits._
-    // Kernel registration normally rides on the first Tables load; this
-    // test builds its frame from literals, so register explicitly.
-    GraftFunctions.register(spark)
     val df = Seq((1, 5L), (1, 2L), (1, 9L), (1, 1L), (2, 7L), (2, 3L), (3, 4L))
       .toDF("g", "v")
     val got = df.groupBy(col("g"))

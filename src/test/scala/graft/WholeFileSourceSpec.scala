@@ -98,4 +98,32 @@ class WholeFileSourceSpec extends SparkSpec {
     assert(got == Map("hello" -> 2L, "world" -> 1L, "spark" -> 1L,
       "engine" -> 1L))
   }
+
+  test("an exact file path is read as named, glob characters included") {
+    val d = java.nio.file.Files.createTempDirectory("wholefile-exact")
+    java.nio.file.Files.writeString(d.resolve("a[1].txt"), "bracketed")
+    java.nio.file.Files.writeString(d.resolve("a1.txt"), "glob match")
+    val rows = spark.read.format("wholefile").load(s"$d/a[1].txt")
+      .select(col("path"), col("content")).as[(String, String)].collect()
+    assert(rows.toSeq == Seq((s"$d/a[1].txt", "bracketed")))
+    // A glob that is not an existing file still expands.
+    assert(spark.read.format("wholefile").load(s"$d/a[0-9].txt")
+      .select("content").as[String].collect().toSeq == Seq("glob match"))
+  }
+
+  test("directory loads skip hidden and underscore files; exact paths keep them") {
+    val d = java.nio.file.Files.createTempDirectory("wholefile-hidden")
+    java.nio.file.Files.writeString(d.resolve("part-0.txt"), "kept")
+    java.nio.file.Files.writeString(d.resolve("_SUCCESS"), "")
+    java.nio.file.Files.writeString(d.resolve(".part-0.txt.crc"), "crc")
+    java.nio.file.Files.writeString(d.resolve(".hidden"), "hidden")
+    val names = spark.read.format("wholefile").load(d.toString)
+      .select("path").as[String].collect().map(_.split("/").last)
+    assert(names.toSeq == Seq("part-0.txt"))
+    assert(MapReduce.wholeFiles(spark, Seq(d.toString)).collect()
+      .map(_.value).toSeq == Seq("kept"))
+    // Named exactly, such a file is an input like any other.
+    assert(spark.read.format("wholefile").load(s"$d/.hidden")
+      .select("content").as[String].collect().toSeq == Seq("hidden"))
+  }
 }

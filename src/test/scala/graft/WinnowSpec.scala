@@ -12,11 +12,6 @@ import graft.functions.{GraftFunctions => GF}
 class WinnowSpec extends SparkSpec {
   import spark.implicits._
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    GF.register(spark)
-  }
-
   private def fps(docs: org.apache.spark.sql.DataFrame) =
     Winnow.fingerprintsOf(docs)
 
