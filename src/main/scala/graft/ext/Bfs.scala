@@ -32,14 +32,12 @@ object Bfs {
   val MaxHops = 4
   val NumSeeds = 4
 
-  /** Round partitioning is size-adaptive ([[Frames.roundShuffleParts]],
+  /** BFS over an arbitrary undirected pair frame (part_a, part_b).
+    * Round partitioning is size-adaptive ([[Frames.roundShuffleParts]],
     * where the sf30 probe evidence lives): each round's partition count
-    * derives from the MEASURED frontier+visited size — the frames are
-    * eagerly checkpointed, so the size is a cheap count, and a 100 TB
-    * frontier (billions of nodes) still spreads to the session's full
-    * width. The width is chosen in the plan ([[expand]]); no session
-    * setting is written. */
-  /** BFS over an arbitrary undirected pair frame (part_a, part_b). */
+    * derives from the MEASURED visited size — the frames are eagerly
+    * checkpointed, so the size is a cheap count, and a 100 TB frontier
+    * still spreads to the session's full width. */
   private[graft] def bfsHopsOf(pairs: DataFrame): DataFrame = {
     val cap = pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val edges = pairs
@@ -74,25 +72,16 @@ object Bfs {
   }
 
   /** One round: the nodes first reached at hop `k` — the frontier's
-    * neighbours over `edges`, deduplicated and minus `visited` — with
-    * every exchange `parts` wide. Each join side and the distinct's
-    * input are repartitioned explicitly (a localCheckpoint does not keep
-    * a layout from one round to the next). The frontier is renamed
-    * AFTER its repartition: when both sides of a join are bare shuffles
-    * narrower than the session setting, Spark re-plans both at the
-    * session's width (EnsureRequirements' minimum-parallelism rule),
-    * and a projection over one side keeps the join at `parts`. The
-    * distinct's exchange carries raw rows (no map-side combine), the
-    * trade [[Basket.copurchaseOf]] makes too. */
+    * neighbours over `edges`, deduplicated and minus `visited`. The
+    * frontier is the round side ([[Frames.roundSide]]), so the edge join
+    * is broadcast or `parts` wide; the distinct combines map-side, and
+    * it and the anti-join are node-sized. */
   private[graft] def expand(edges: DataFrame, frontier: DataFrame,
       visited: DataFrame, k: Int, parts: Int): DataFrame =
-    edges.repartition(parts, col("src"))
-      .join(frontier.repartition(parts, col("node")).select(col("node").as("via")),
+    edges.join(Frames.roundSide(frontier, "node", "via", parts),
         col("src") === col("via"))
-      .select(col("dst").as("node"))
-      .repartition(parts, col("node")).distinct()
-      .join(visited.select(col("node")).repartition(parts, col("node")),
-        Seq("node"), "left_anti")
+      .select(col("dst").as("node")).distinct()
+      .join(visited.select(col("node")), Seq("node"), "left_anti")
       .select(col("node"), lit(k.toLong).as("hop"))
 
   /** Gate: hops to the nearest of 4 seed parts over the co-purchase

@@ -199,7 +199,7 @@ object Communities {
         col("part_a").as("dst")))
       .localCheckpoint()
     // Size-adaptive round partitioning ([[Frames.roundShuffleParts]],
-    // where the r18 sf30 probe evidence lives), chosen in the plan
+    // where the r18 sf30 probe evidence lives), put in the plan
     // ([[degrees]]): every per-round frame here (sub, degree agg,
     // survivor set) is bounded by the edge list, whose size one cheap
     // count on the fresh checkpoint gives.
@@ -223,28 +223,22 @@ object Communities {
   }
 
   /** One peel round's (src, c): each node's degree in the subgraph the
-    * survivor set `nodes` induces on `edges`, with every exchange
-    * `parts` wide. Round 1's survivor set is every node (`None`), so
-    * filtering the edge list against it is the identity — skip the two
-    * joins and compute plain degree (the oracle's s1-over-n0 round is
-    * the same identity, so results are unchanged; at scale this drops 2
-    * of the 8 edge-list joins). Each join side and the count's input
-    * are repartitioned explicitly, and each survivor side is renamed
-    * after its repartition so that Spark keeps the join at `parts` (see
-    * [[Bfs.expand]]). The count runs after its exchange (no map-side
-    * combine), the trade [[Basket.copurchaseOf]] makes too. */
+    * survivor set `nodes` induces on `edges`. Round 1's survivor set is
+    * every node (`None`), so filtering the edge list against it is the
+    * identity — skip the two joins and compute plain degree (the
+    * oracle's s1-over-n0 round is the same identity, so results are
+    * unchanged; at scale this drops 2 of the 8 edge-list joins). The
+    * survivor set is the round side ([[Frames.roundSide]]) of both edge
+    * joins, so each is broadcast or `parts` wide; the `src` join comes
+    * last, so a shuffled one leaves the rows partitioned for the count
+    * (a broadcast one: the count combines map-side). */
   private[graft] def degrees(edges: DataFrame, nodes: Option[DataFrame],
       parts: Int): DataFrame = {
     val sub = nodes.fold(edges) { n =>
-      def side(as: String) =
-        n.repartition(parts, col("node")).select(col("node").as(as))
-      edges.repartition(parts, col("src"))
-        .join(side("sa"), col("src") === col("sa"))
-        .repartition(parts, col("dst"))
-        .join(side("sb"), col("dst") === col("sb"))
+      edges.join(Frames.roundSide(n, "node", "sb", parts), col("dst") === col("sb"))
+        .join(Frames.roundSide(n, "node", "sa", parts), col("src") === col("sa"))
     }
-    sub.repartition(parts, col("src"))
-      .groupBy(col("src")).agg(count(lit(1)).as("c"))
+    sub.groupBy(col("src")).agg(count(lit(1)).as("c"))
   }
 
   def partsKcore(spark: SparkSession, sfDir: String): DataFrame =

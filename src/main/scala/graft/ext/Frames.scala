@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -137,11 +138,23 @@ object Frames {
     * fixed overhead dwarfs per-task data on node-sized round frames, and
     * AQE's parallelism-first coalescing floor keeps CPU-count
     * partitions alive however small the data. Callers put the width in
-    * the plan, as an explicit `repartition(n, key)` on every round frame
-    * before its join, distinct or aggregate; the session setting is only
-    * read, never written. */
+    * the plan through [[roundSide]]; the session setting is only read,
+    * never written. */
   private[graft] def roundShuffleParts(rows: Long, cap: Int): Int =
     math.min(cap.toLong, math.max(8L, rows / 1000000L)).toInt
+
+  /** A round's node-sized join side, `key` renamed `as` above a shuffle
+    * into `parts`, so the planner shuffles the edge list into `parts` to
+    * match (a join over bare shuffles only is widened to the session
+    * width). Left unshuffled at the session width, or when its estimate
+    * fits the broadcast threshold: it is broadcast, the edges stay put. */
+  private[graft] def roundSide(df: DataFrame, key: String, as: String,
+      parts: Int): DataFrame = {
+    val conf = df.sparkSession.sessionState.conf
+    val planned = parts == conf.numShufflePartitions ||
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold
+    (if (planned) df else df.repartition(parts, col(key))).select(col(key).as(as))
+  }
 
   private[graft] def sessionMemo(tag: String,
       spark: org.apache.spark.sql.SparkSession, sfDir: String)(

@@ -57,6 +57,8 @@ object Streaming {
       math.min(32, spark.sparkContext.defaultParallelism).toLong,
       eventsCount(spark, sfDir) / 1000000L)).toString
 
+  private val startWindow = new Object // one runToParquet start() at a time
+
   /** Run a streaming frame to completion through a parquet sink and
     * read the result back as a batch frame.
     *
@@ -99,10 +101,11 @@ object Streaming {
     // the query starts, then fixed in the checkpoint. The window is just
     // `start()`: StreamExecution clones the session, conf included, in
     // its constructor, so the running query keeps `stateParts` while
-    // the session setting is restored before the batches run.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts)
-    val q =
+    // the session setting is restored before the batches run. Two
+    // interleaved windows would restore each other's `stateParts`.
+    val q = startWindow.synchronized {
+      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", stateParts)
       try updates.writeStream
         .foreachBatch(sink)
         .outputMode(mode)
@@ -110,6 +113,7 @@ object Streaming {
         .trigger(Trigger.AvailableNow())
         .start()
       finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     q.awaitTermination()
     // A source with zero rows can legitimately produce zero batches —
     // the sink dir is then empty and read.parquet cannot infer a

@@ -542,36 +542,58 @@ class PlanSpec extends SparkSpec {
     assert(pm.contains("BroadcastExchange"), pm)
   }
 
-  test("bfs + kcore rounds: every exchange has the roundShuffleParts width") {
+  test("bfs + kcore rounds: the edge list is broadcast past or shuffled at the round width") {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions.col
     object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def unwrap(p: SparkPlan) = p match {
+      case w: WholeStageCodegenExec => w.child
+      case o => o
+    }
     // A session 16 wide, so a round width of 8 is told apart from an
-    // exchange that fell back to the session setting; broadcasts off, so
-    // every join shuffles both sides.
-    val wide = spark.newSession()
-    wide.conf.set("spark.sql.shuffle.partitions", "16")
-    wide.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    import wide.implicits._
+    // exchange planned at the session setting.
     val n = ext.Frames.roundShuffleParts(12L, 16)
     assert(n == 8)
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L))
-      .flatMap { case (a, b) => Seq((a, b), (b, a)) }
-      .toDF("src", "dst").localCheckpoint()
-    val nodes = Seq(1L, 2L, 3L, 5L).toDF("node").localCheckpoint()
-    val seed = nodes.filter(col("node") === 1L)
-    for ((round, shuffles) <- Seq(
-        ext.Bfs.expand(edges, seed,
-          nodes.filter(col("node") < 3L).withColumn("hop", col("node") * 0L),
-          1, n) -> 4,
-        ext.Communities.degrees(edges, None, n) -> 1,
-        // The survivor side's shuffle is reused for both of its joins.
-        ext.Communities.degrees(edges, Some(nodes), n) -> 4)) {
-      round.collect() // finalize the adaptive plan
-      val exec = round.queryExecution.executedPlan
-      val widths = H.collect(exec) { case e: ShuffleExchangeLike => e.numPartitions }
-      assert(widths.size == shuffles && widths.forall(_ == n),
-        s"widths $widths, want $shuffles × $n:\n$exec")
+    for (broadcast <- Seq(true, false)) {
+      val wide = spark.newSession()
+      wide.conf.set("spark.sql.shuffle.partitions", "16")
+      if (!broadcast) wide.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      import wide.implicits._
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L))
+        .flatMap { case (a, b) => Seq((a, b), (b, a)) }
+        .toDF("src", "dst").localCheckpoint()
+      val nodes = Seq(1L, 2L, 3L, 5L).toDF("node").localCheckpoint()
+      val seed = nodes.filter(col("node") === 1L)
+      // (round frame, joins against the edge list, broadcast joins with
+      // broadcasts on: Bfs also broadcasts `visited` into its anti-join)
+      for ((round, joins, broadcasts) <- Seq(
+          (ext.Bfs.expand(edges, seed,
+            nodes.filter(col("node") < 3L).withColumn("hop", col("node") * 0L),
+            1, n), 1, 2),
+          (ext.Communities.degrees(edges, None, n), 0, 0),
+          (ext.Communities.degrees(edges, Some(nodes), n), 2, 2))) {
+        round.collect() // finalize the adaptive plan
+        val exec = round.queryExecution.executedPlan
+        val shuffles = H.collect(exec) { case e: ShuffleExchangeLike => e }
+        // An exchange of `src` rows other than the count's moves edges.
+        val edgeWidths = shuffles.filter(e => e.child.output.exists(_.name == "src") &&
+          !unwrap(e.child).isInstanceOf[HashAggregateExec]).map(_.numPartitions)
+        val bhj = H.collect(exec) { case j: BroadcastHashJoinExec => j }.size
+        if (broadcast)
+          assert(edgeWidths.isEmpty && bhj == broadcasts,
+            s"edge shuffles $edgeWidths, $bhj broadcast joins:\n$exec")
+        else
+          assert(edgeWidths.size == joins && edgeWidths.forall(_ == n),
+            s"edge shuffles $edgeWidths, want $joins × $n:\n$exec")
+        // The distinct / degree count combines map-side before its
+        // shuffle; after k-core's shuffled `src` join it needs none.
+        val combined = shuffles.exists(e => unwrap(e.child).isInstanceOf[HashAggregateExec])
+        assert(combined == (broadcast || joins < 2),
+          s"partial aggregate under a shuffle: $combined\n$exec")
+      }
     }
   }
 

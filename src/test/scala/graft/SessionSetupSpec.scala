@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 
 import graft.ext.{Bfs, Communities}
 import graft.functions.GraftExpressions
+import graft.streaming.Streaming
 
 /** One session setup: the extensions install every `graft_*` function,
   * and query paths read the session's settings without writing them, so
@@ -51,5 +52,24 @@ class SessionSetupSpec extends SparkSpec {
       sampler.join()
     }
     assert(seen.size == 1 && seen.contains(own), s"sampled $seen, own $own")
+  }
+
+  test("concurrent stream starts restore the session's own shuffle width") {
+    // Each start sets the state-partition count (8) on this 4-wide
+    // session and restores it; interleaved windows would restore each
+    // other's 8 and leave it behind.
+    val key = "spark.sql.shuffle.partitions"
+    val own = spark.conf.get(key)
+    val want = Streaming.windowedAgg(spark, sf).collect().map(_.toString).sorted
+    val errors = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val threads = (1 to 2).map(_ => new Thread(() =>
+      try for (_ <- 1 to 3) {
+        val got = Streaming.windowedAgg(spark, sf).collect().map(_.toString).sorted
+        if (!got.sameElements(want)) errors.add("rows differ")
+      } catch { case t: Throwable => errors.add(t.toString) }))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors)
+    assert(spark.conf.get(key) == own)
   }
 }
