@@ -112,7 +112,6 @@ object ClusterVerify {
           Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString)
         fail += 1
       }
-      graft.ext.Frames.freeSessionState(spark)
     }
 
     // Plugin-jar job across JVM boundaries: author + compile + jar a

@@ -37,9 +37,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Between-queries session hygiene: a 180+-key dump session
-      // otherwise accumulates every query's localCheckpoint blocks.
-      graft.ext.Frames.freeSessionState(spark)
+      // A query's localCheckpoint blocks are unpersisted by the
+      // ContextCleaner once its plan is dropped; only the bounded session
+      // memo frames outlive it (graft.ext.Frames).
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -152,7 +152,7 @@ object Bpe {
     * vocabulary-sized checkpoint per session (≤ |merges| + |word types|
     * rows — 39 here, ~1M at a 100 TB corpus), both artifacts carried in
     * one frame under a `kind` discriminator ('m' = merge-table row,
-    * 's' = word-state row) because [[Frames.sessionMemo]] protects one
+    * 's' = word-state row) because [[Frames.sessionMemo]] keeps one
     * frame per tag. At a real deployment this IS the shape: BPE learning
     * runs once, every downstream report reads the learned artifacts. */
   private def bpeRun(spark: SparkSession, sfDir: String): DataFrame =

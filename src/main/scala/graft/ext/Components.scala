@@ -24,58 +24,58 @@ object Components {
       .union(edges.select(col("b").as("a"), col("a").as("b")))
       .distinct()
       .persist()
-    // localCheckpoint each round: the next round's plan references THIS
-    // round's labels twice, so without lineage truncation the logical
-    // plan doubles per iteration (2^rounds nodes — OOMs the driver on
-    // long chains long before the data does). Each round's checkpoint is
-    // FREED as soon as the next round's is materialized (eager) — only
-    // the final labels frame's blocks outlive the call.
-    var labels = sym.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
-    var changed = 1L
-    var iters = 0
-    while (changed > 0) {
-      iters += 1
-      if (iters > 64) {
-        sym.unpersist()
-        throw new IllegalStateException(
-          "connectedComponents failed to converge in 64 rounds")
-      }
-      val neighborMin = sym
-        .join(labels.withColumnRenamed("node", "b"), Seq("b"))
-        .groupBy(col("a").as("node"))
-        .agg(min(col("label")).as("nlabel"))
-      // Distinct column names end-to-end: self-join attribute
-      // deduplication must never be able to conflate old and new labels.
-      val viaNeighbors = labels.withColumnRenamed("label", "oldLabel")
-        .join(neighborMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("oldLabel"), coalesce(col("nlabel"), col("oldLabel")))
-            .as("label"),
-          col("oldLabel"))
-      // Pointer jumping: also adopt the label OF the current label —
-      // doubles the propagation distance per round, so convergence is
-      // O(log n) rounds even on long chains (64-round cap is then far
-      // beyond any real graph).
-      val jumpSrc = labels.select(col("node").as("jnode"),
-        col("label").as("jlabel"))
-      val updated = viaNeighbors
-        .join(jumpSrc, col("label") === col("jnode"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("jlabel"), col("label")))
-            .as("label"),
-          col("oldLabel"))
+    // `sym` is a cached plan, which no cleaner frees: unpersist it on
+    // every exit, a failed round included.
+    try {
+      // localCheckpoint each round: the next round's plan references THIS
+      // round's labels twice, so without lineage truncation the logical
+      // plan doubles per iteration (2^rounds nodes — OOMs the driver on
+      // long chains long before the data does). Each round's checkpoint is
+      // FREED as soon as the next round's is materialized (eager) — only
+      // the final labels frame's blocks outlive the call.
+      var labels = sym.select(col("a").as("node")).distinct()
+        .withColumn("label", col("node"))
         .localCheckpoint()
-      // `updated` is materialized (localCheckpoint is eager), so the
-      // previous round's blocks have no remaining consumer — free them
-      // before they pile up across rounds and sessions.
-      Frames.freeCheckpoint(labels)
-      changed = updated.filter(col("label") =!= col("oldLabel")).count()
-      labels = updated.select("node", "label")
-    }
-    sym.unpersist()
-    labels.select(col("node").as("doc_id"), col("label").as("component"))
+      var changed = 1L
+      var iters = 0
+      while (changed > 0) {
+        iters += 1
+        if (iters > 64) throw new IllegalStateException(
+          "connectedComponents failed to converge in 64 rounds")
+        val neighborMin = sym
+          .join(labels.withColumnRenamed("node", "b"), Seq("b"))
+          .groupBy(col("a").as("node"))
+          .agg(min(col("label")).as("nlabel"))
+        // Distinct column names end-to-end: self-join attribute
+        // deduplication must never be able to conflate old and new labels.
+        val viaNeighbors = labels.withColumnRenamed("label", "oldLabel")
+          .join(neighborMin, Seq("node"), "left")
+          .select(col("node"),
+            least(col("oldLabel"), coalesce(col("nlabel"), col("oldLabel")))
+              .as("label"),
+            col("oldLabel"))
+        // Pointer jumping: also adopt the label OF the current label —
+        // doubles the propagation distance per round, so convergence is
+        // O(log n) rounds even on long chains (64-round cap is then far
+        // beyond any real graph).
+        val jumpSrc = labels.select(col("node").as("jnode"),
+          col("label").as("jlabel"))
+        val updated = viaNeighbors
+          .join(jumpSrc, col("label") === col("jnode"), "left")
+          .select(col("node"),
+            least(col("label"), coalesce(col("jlabel"), col("label")))
+              .as("label"),
+            col("oldLabel"))
+          .localCheckpoint()
+        // `updated` is materialized (localCheckpoint is eager), so the
+        // previous round's blocks have no remaining consumer — free them
+        // before they pile up across rounds and sessions.
+        Frames.freeCheckpoint(labels)
+        changed = updated.filter(col("label") =!= col("oldLabel")).count()
+        labels = updated.select("node", "label")
+      }
+      labels.select(col("node").as("doc_id"), col("label").as("component"))
+    } finally sym.unpersist()
   }
 
   /** Number of actual CC-chain builds — observability seam for the

@@ -8,13 +8,17 @@ import org.apache.spark.storage.StorageLevel
 /** Lifecycle helpers for `localCheckpoint`ed frames.
   *
   * `Dataset.localCheckpoint()` persists its materialized rows as
-  * MEMORY_AND_DISK blocks on the session's block manager and nothing
-  * ever frees them — fine for one query, but an iterative loop that
-  * checkpoints per round (connected components, BFS) pins every
-  * superseded round's blocks for the life of the session, and a long
-  * multi-query session accumulates thousands of dead RDDs (the round-8
-  * in-session elevation: alphabetically-late iterative keys ran up to
-  * 18× slower under the accumulated block-manager/GC pressure).
+  * MEMORY_AND_DISK blocks on the session's block manager, and Spark
+  * registers the persisted RDD with its ContextCleaner. One rule decides
+  * when those blocks go:
+  *   - an iterative loop's superseded rounds (BFS, k-core, connected
+  *     components) are freed eagerly with [[freeCheckpoint]] — the loop
+  *     knows a round is dead before GC does;
+  *   - [[sessionMemo]] frames live with the session: the memo references
+  *     them, so the cleaner never sees them unreachable;
+  *   - every other checkpoint belongs to the plans that read it, and the
+  *     ContextCleaner unpersists it once no plan references it.
+  * No caller sweeps the session between queries.
   *
   * The checkpointed Dataset's analyzed plan is a [[LogicalRDD]] leaf
   * whose `rdd` IS the persisted RDD, so the blocks can be dropped (and
@@ -35,49 +39,11 @@ object Frames {
     checkpointLeaves(df).foreach(_.rdd.unpersist(blocking = false))
 
   /** True iff every checkpointed leaf of `df` still has its blocks —
-    * the validity test a cross-query memo must pass before reusing a
-    * cached frame (the session cleanup below invalidates any memoized
-    * checkpoint it does not know about). */
+    * the validity test [[sessionMemo]] applies before reusing a frame
+    * (an explicit [[freeCheckpoint]] of a memo frame, or a lost block
+    * store, leaves a lineage-truncated frame that must be rebuilt). */
   private[graft] def checkpointAlive(df: DataFrame): Boolean =
     checkpointLeaves(df).forall(_.rdd.getStorageLevel != StorageLevel.NONE)
-
-  /** RDD ids [[freeSessionState]] must NOT drop: the backing blocks of
-    * deliberately session-scoped memos (one bounded frame per memo key,
-    * e.g. [[Components]]' shared cluster labels) — everything else
-    * persisted is per-query lineage-cut debris. */
-  private val protectedIds = collection.mutable.Set.empty[Int]
-
-  private[graft] def protect(df: DataFrame): Unit = synchronized {
-    checkpointLeaves(df).foreach(lr => protectedIds += lr.rdd.id)
-  }
-
-  private[graft] def unprotect(df: DataFrame): Unit = synchronized {
-    checkpointLeaves(df).foreach(lr => protectedIds -= lr.rdd.id)
-  }
-
-  /** Between-queries session hygiene for long multi-query sessions:
-    * drop every cached plan and every persistent RDD except protected
-    * memo frames. Runs OUTSIDE any timed window. */
-  def freeSessionState(spark: org.apache.spark.sql.SparkSession): Unit =
-    synchronized {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => protectedIds.contains(r.id))
-        .foreach(_.unpersist(blocking = false))
-      // Broadcast blocks are only released when ContextCleaner's weak
-      // references are collected — on a large idle heap GC may not run
-      // for hundreds of queries, so thousands of dead broadcasts pile up
-      // in block-manager storage. Nudge the collector periodically
-      // (untimed, between queries; throttled — a full GC on a big heap
-      // costs ~0.5-2 s and per-rep nudging would bloat wall clock).
-      cleanups += 1
-      if (cleanups % 24 == 0) System.gc()
-    }
-
-  private var cleanups = 0L
-
-  private val memo =
-    collection.mutable.Map.empty[(String, String, String), DataFrame]
 
   /** Per-tag count of actual builds — observability for reuse-pinning
     * specs (a same-session second consumer must not rebuild). */
@@ -87,44 +53,63 @@ object Frames {
   private[graft] def buildsOf(tag: String): Int =
     synchronized { buildCounts(tag) }
 
-  /** Session-scoped shared-frame memo, keyed by (tag, SparkContext,
-    * sfDir) — the cross-query seam for an intermediate several gated
-    * queries need (cluster labels, the co-purchase graph): within one
-    * session it is computed once; across sessions or after
-    * [[freeSessionState]] invalidation it transparently rebuilds
-    * (liveness-checked, so a cleanup can never surface as a truncated-
-    * lineage failure). `build` must return a `localCheckpoint`-backed,
-    * BOUNDED frame: its blocks are protected from session cleanup for
-    * the session's lifetime, which is only sound for frames far smaller
-    * than the corpus (pair graphs, label maps — never raw scans). */
   /** One-shot holder: the `lazy val` monitor gives per-KEY once-only
     * semantics, so a cold build (a Spark count that can take seconds at
-    * sf10) blocks only same-key callers — not every other memoized
-    * build behind one shared Frames lock (r13 advisory). */
+    * sf10) blocks only same-key callers — never a build or a warm hit
+    * of another key. */
   private final class LazyBox(thunk: () => Any) { lazy val value: Any = thunk() }
 
-  private val scalars = new java.util.concurrent.ConcurrentHashMap[
+  private val boxes = new java.util.concurrent.ConcurrentHashMap[
     (String, String, String), LazyBox]()
 
+  /** The box for `key`, inserted unevaluated (putIfAbsent) if absent:
+    * the build runs OUTSIDE any map or Frames lock, so concurrent builds
+    * of different keys — and a build that itself calls back into a
+    * memo — can never deadlock or serialize. */
+  private def boxOf(key: (String, String, String), build: => Any): LazyBox = {
+    val box = boxes.get(key)
+    if (box != null) box
+    else {
+      val fresh = new LazyBox(() => build)
+      val prev = boxes.putIfAbsent(key, fresh)
+      if (prev == null) fresh else prev
+    }
+  }
+
   /** Session-scoped memo for a SMALL plan-time statistic (a corpus
-    * count, a derived parameter) — same (tag, SparkContext, sfDir) key
-    * discipline as [[sessionMemo]], without the checkpoint lifecycle
-    * (scalars have no blocks to free or liveness to check). The build
-    * runs OUTSIDE any map/Frames lock (insertion is putIfAbsent of an
-    * unevaluated box), so concurrent builds of different keys — and a
-    * build that itself calls back into sessionMemo — can never
-    * deadlock or serialize on this path. */
+    * count, a derived parameter), keyed by (tag, SparkContext, sfDir);
+    * built once per key. */
   private[graft] def scalarMemo[T](tag: String,
       spark: org.apache.spark.sql.SparkSession, sfDir: String)(
-      build: => T): T = {
+      build: => T): T =
+    boxOf((tag, spark.sparkContext.applicationId, sfDir), build)
+      .value.asInstanceOf[T]
+
+  /** Session-scoped shared-frame memo, keyed like [[scalarMemo]] — the
+    * cross-query seam for an intermediate several gated queries need
+    * (cluster labels, the co-purchase graph): within one session it is
+    * computed once. A frame whose blocks are gone ([[checkpointAlive]]
+    * false) is dropped and transparently rebuilt, so a lost block can
+    * never surface as a truncated-lineage failure. `build` must return
+    * a `localCheckpoint`-backed, BOUNDED frame: the memo keeps its
+    * blocks for the session's lifetime, which is only sound for frames
+    * far smaller than the corpus (pair graphs, label maps — never raw
+    * scans). */
+  private[graft] def sessionMemo(tag: String,
+      spark: org.apache.spark.sql.SparkSession, sfDir: String)(
+      build: => DataFrame): DataFrame = {
     val key = (tag, spark.sparkContext.applicationId, sfDir)
-    var box = scalars.get(key)
-    if (box == null) {
-      val fresh = new LazyBox(() => build)
-      val prev = scalars.putIfAbsent(key, fresh)
-      box = if (prev == null) fresh else prev
+    val box = boxOf(key, {
+      val built = build
+      synchronized { buildCounts(tag) += 1 }
+      built
+    })
+    val df = box.value.asInstanceOf[DataFrame]
+    if (checkpointAlive(df)) df
+    else {
+      boxes.remove(key, box)
+      sessionMemo(tag, spark, sfDir)(build)
     }
-    box.value.asInstanceOf[T]
   }
 
   /** Size-adaptive shuffle-partition count for an ITERATIVE loop's
@@ -154,19 +139,5 @@ object Frames {
     val planned = parts == conf.numShufflePartitions ||
       df.queryExecution.optimizedPlan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold
     (if (planned) df else df.repartition(parts, col(key))).select(col(key).as(as))
-  }
-
-  private[graft] def sessionMemo(tag: String,
-      spark: org.apache.spark.sql.SparkSession, sfDir: String)(
-      build: => DataFrame): DataFrame = synchronized {
-    val key = (tag, spark.sparkContext.applicationId, sfDir)
-    memo.get(key).filter(checkpointAlive).getOrElse {
-      memo.get(key).foreach(unprotect)
-      val built = build
-      buildCounts(tag) += 1
-      protect(built)
-      memo(key) = built
-      built
-    }
   }
 }

@@ -889,7 +889,7 @@ object Relational {
     // counted blamed lines with an array filter — fastest isolated
     // (6.7 s at sf10) but collect_list is an OBJECT aggregate: it
     // always falls back to sort-based aggregation (128-key threshold),
-    // and in the full 292-key session — where protected memo frames and
+    // and in the full 292-key session — where session memo frames and
     // checkpoint blocks squeeze execution memory — that object sort
     // degraded 8× (54 s in-session vs 9.3 for the r14 shape; the
     // full-session number is the one the driver grades). This form

@@ -280,7 +280,10 @@ object Sketches {
     * bit build share it), broadcasts the single-row vector, and drops
     * fact rows by pure row-local shift/mask arithmetic BEFORE any
     * exchange. ~2–3% of the fact (+ ≤1% FP tax) reaches the join
-    * instead of 100%.
+    * instead of 100%. The keys checkpoint feeds the broadcast bit vector
+    * of the returned plan, so it cannot be freed here: that plan owns
+    * it, and the ContextCleaner frees it once the plan is dropped
+    * (pinned by CheckpointLifecycleSpec).
     *
     * Result-identical BY CONSTRUCTION at any gate setting: a Bloom
     * filter has no false negatives, every surviving non-match is

@@ -51,7 +51,7 @@ object Ledger {
   }
 
   def main(args: Array[String]): Unit = {
-    val repo = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo")
+    val repo = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir"))
     val sorted = checkedRows(repo).sortBy(_._1)
     val nOracle = sorted.count(_._3 == "DuckDB hash")
     val sb = new StringBuilder

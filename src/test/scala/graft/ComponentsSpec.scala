@@ -40,12 +40,9 @@ class ComponentsSpec extends SparkSpec {
     assert(Components.labelBuilds == afterFirst,
       "clusterKeepers rebuilt the label frame instead of reusing the memo")
     assert(comp > 0 && keepers > 0)
-    // Session hygiene invalidates the memo; the next call must REBUILD
-    // (not serve a lineage-truncated corpse) and still be correct.
-    graft.ext.Frames.freeSessionState(spark)
-    graft.ext.Frames.unprotect(Components.dedupComponents(spark, sf))
-    // unprotect+free so the rebuild path is actually exercised:
-    graft.ext.Frames.freeSessionState(spark)
+    // Simulated block loss invalidates the memo; the next call must
+    // REBUILD (not serve a lineage-truncated corpse) and still be correct.
+    graft.ext.Frames.freeCheckpoint(Components.dedupComponents(spark, sf))
     val n2 = Components.dedupComponents(spark, sf).count()
     assert(n2 == comp)
     assert(Components.labelBuilds > afterFirst,

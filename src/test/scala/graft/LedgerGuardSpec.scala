@@ -12,7 +12,7 @@ class LedgerGuardSpec extends AnyFunSuite {
     // checkedRows throws on: duplicate key across modules, module file
     // missing, oracle-without-query orphan, registry != queries fold.
     val rows = tools.Ledger.checkedRows(
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo"))
+      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir")))
     assert(rows.nonEmpty)
     assert(rows.map(_._1).distinct.size == rows.size)
   }

@@ -7,10 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guard for the one-session-setup rule, run on every `sbt test`:
-  * the `graft_*` functions are installed only by `GraftExtensions`, and
-  * no query path writes a session setting outside the two documented
+  * the `graft_*` functions are installed only by `GraftExtensions`, no
+  * query path writes a session setting outside the two documented
   * windows (Bpe's codegen-off merge rounds and Streaming's
-  * state-partition count around `start()`). No SparkSession needed. */
+  * state-partition count around `start()`), and no code sweeps the
+  * session's persisted state. No SparkSession needed. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO_DIR",
@@ -46,5 +47,13 @@ class SessionGuardSpec extends AnyFunSuite {
     val windows = Map("graft/ext/Bpe.scala" -> 2,
       "graft/streaming/Streaming.scala" -> 2)
     assert(occurrences("conf.set(") == windows)
+  }
+
+  test("no session-wide checkpoint sweep") {
+    // Checkpoints are freed by the plans that read them (graft.ext.Frames):
+    // nothing in the library lists, clears or GC-nudges the session's
+    // persisted state.
+    for (pattern <- Seq("getPersistentRDDs", "clearCache(", "System.gc("))
+      assert(occurrences(pattern).isEmpty, s"$pattern in ${occurrences(pattern)}")
   }
 }
