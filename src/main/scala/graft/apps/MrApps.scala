@@ -3,7 +3,7 @@ package graft.apps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tokenizer
+import graft.engine.{GenericReduce, MapReduce, Tokenizer}
 
 /** The reference's eight MapReduce applications re-expressed as declarative
   * DataFrame pipelines (SURVEY.md §2.2/§2.4). Input stand-in corpus is the
@@ -99,34 +99,29 @@ object MrApps {
     (s, dir) => f(graft.Tables.documents(s, dir))
 
   /** The GENERIC-reduce twins (round 15): the same three reference
-    * reduces, but run through the [[graft.engine.GenericReduce]]
-    * Aggregator — the reference's whole `Reduce(key, values) string`
-    * application API (`src/main/mrworker.go:32-49`) — resolved via SQL
-    * (`expr("mr_reduce_*(…)")`), so the driver's DuckDB gate pins the
-    * collect-then-finish façade itself, not only the declarative
-    * pipelines above. Group buffers materialize the group's values BY
+    * reduces through the [[graft.engine.GenericReduce]] Aggregator — the
+    * reference's `Reduce(key, values) string` API
+    * (`src/main/mrworker.go:32-49`) — applied as a `Column` (no session
+    * registration), so the DuckDB gate pins the collect-then-finish
+    * aggregate itself. Group buffers materialize the group's values BY
     * CONTRACT (non-monoid reduces; SURVEY §2.9): per-group memory is the
     * key's value multiplicity, so the token-fan-out twins run on a
-    * deterministic 1-in-20 doc subset (`doc_id % 20`, the same
-    * workload-predicate idiom as the knn keys) to bound the hottest
-    * word's buffer at any SF; the declarative twins above are the
-    * unbounded-scale path. */
-  private def withGenericReduce(spark: SparkSession): Unit =
-    graft.engine.GenericReduce.register(spark)
+    * deterministic 1-in-20 doc subset (`doc_id % 20`, the knn keys'
+    * workload-predicate idiom) to bound the hottest word's buffer at any
+    * SF; the declarative twins above are the unbounded-scale path. */
+  private def genericReduce(f: MapReduce.ReduceF) = udaf(new GenericReduce(f))
 
   private def docSubset(docs: DataFrame): DataFrame =
     docs.filter(col("doc_id") % 20 === 0)
 
   def reduceWordCount(spark: SparkSession, dir: String): DataFrame = {
-    withGenericReduce(spark)
     docSubset(graft.Tables.documents(spark, dir))
       .select(Tokenizer.words(col("text")).as("key"))
       .groupBy("key")
-      .agg(expr("mr_reduce_count(key, '1')").as("cnt"))
+      .agg(genericReduce(MapReduce.wcReduce)(col("key"), lit("1")).as("cnt"))
   }
 
   def reduceSortedConcat(spark: SparkSession, dir: String): DataFrame = {
-    withGenericReduce(spark)
     // Same 1-in-20 subset bound as the other generic-reduce twins
     // (round-15 advisory): grouping by lang over the FULL corpus would
     // buffer every doc_id of a language in one in-memory List — the
@@ -137,17 +132,16 @@ object MrApps {
     docSubset(graft.Tables.documents(spark, dir))
       .select(col("lang").as("key"), col("doc_id").cast("string").as("v"))
       .groupBy("key")
-      .agg(expr("mr_reduce_sorted_concat(key, v)").as("vals"))
+      .agg(genericReduce(MapReduce.sortedJoinReduce)(col("key"), col("v")).as("vals"))
   }
 
   def reduceIndexer(spark: SparkSession, dir: String): DataFrame = {
-    withGenericReduce(spark)
     docSubset(graft.Tables.documents(spark, dir))
       .select(col("doc_id").cast("string").as("doc"),
         Tokenizer.words(col("text")).as("key"))
       .distinct()
       .groupBy("key")
-      .agg(expr("mr_reduce_indexer(key, doc)").as("entry"))
+      .agg(genericReduce(MapReduce.indexerReduce)(col("key"), col("doc")).as("entry"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,5 +1,10 @@
 package graft.engine
 
+import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +18,11 @@ case class KV(key: String, value: String)
   * re-expressed as one lazy Spark plan:
   *
   *   whole-file scan → flatMap(mapF) → one hash exchange on `key`
-  *   (`nReduce` buckets) → [[GenericReduce]] per key → (key, value) dataset
+  *   (`nReduce` buckets) → sort each bucket on `key` → one walk per
+  *   bucket, `reduceF` once per run of equal keys → (key, value) dataset
+  *
+  * as the reference's reduce worker does (`src/mr/worker.go:124-138`);
+  * the sort spills, so memory is bounded per key, not per bucket.
   *
   * Scheduling concerns the reference hand-rolls (pull-based assignment,
   * the map→reduce phase barrier, 10 s straggler re-execution, at-least-once
@@ -57,9 +66,16 @@ object MapReduce {
     input
       .flatMap(kv => mapF(kv.key, kv.value))
       .repartition(nReduce, col("key"))
-      .groupBy(col("key"))
-      .agg(udaf(new GenericReduce(reduceF)).apply(col("key"), col("value")).as("value"))
-      .as[KV]
+      .sortWithinPartitions("key")
+      .mapPartitions { sorted =>
+        val rows = sorted.buffered
+        Iterator.continually(rows).takeWhile(_.hasNext).map { _ =>
+          val key = rows.head.key
+          val values = List.newBuilder[String]
+          while (rows.hasNext && rows.head.key == key) values += rows.next().value
+          KV(key, reduceF(key, values.result()))
+        }
+      }
   }
 
   /** Run a job over files on disk (the reference's
@@ -68,13 +84,39 @@ object MapReduce {
       reduceF: ReduceF, nReduce: Int = 10): Dataset[KV] =
     runJob(wholeFiles(spark, paths), mapF, reduceF, nReduce)
 
-  /** S5 sorted text sink: `"key value"` lines, key-sorted within each
-    * output partition (`src/mr/worker.go:124-138`). */
-  def sortedTextSink(result: Dataset[KV], outDir: String): Unit =
-    result
-      .sortWithinPartitions("key")
-      .select(concat_ws(" ", col("key"), col("value")))
-      .write.mode("overwrite").text(outDir)
+  /** S5 sorted text sink: `"key value"` lines, key-sorted, in one
+    * `part-NNNNN` per partition, empty ones too, as the reference writes
+    * `mr-out-<r>` for every reduce task (`src/mr/worker.go:124-138`). An
+    * existing `outDir` is replaced; it must be a local or shared-mount path
+    * ([[graft.sources.WholeFileSource.localPath]]). A task renames its
+    * attempt file to `_temporary/part-NNNNN`, so a retry leaves the same
+    * bytes; the driver moves the parts up, deletes `_temporary` (on failure
+    * too) and writes `_SUCCESS`. Tasks carry no Hadoop configuration. */
+  def sortedTextSink(result: Dataset[KV], outDir: String): Unit = {
+    import result.sparkSession.implicits._
+    val out = graft.sources.WholeFileSource.localPath(outDir)
+    if (Files.exists(out)) FileUtils.forceDelete(out.toFile)
+    val tmp = Files.createDirectories(out.resolve("_temporary")).toString
+    try {
+      result.sortWithinPartitions("key")
+        .select(concat_ws(" ", col("key"), col("value"))).as[String]
+        .foreachPartition((lines: Iterator[String]) => writePart(tmp, lines))
+      val parts = new File(tmp).listFiles().filter(_.getName.startsWith("part-"))
+      parts.foreach(p => Files.move(p.toPath, out.resolve(p.getName)))
+      // Spark prunes the plan of an empty input to no partitions.
+      if (parts.isEmpty) Files.createFile(out.resolve("part-00000"))
+    } finally FileUtils.deleteDirectory(new File(tmp))
+    Files.createFile(out.resolve("_SUCCESS"))
+  }
+
+  private def writePart(tmp: String, lines: Iterator[String]): Unit = {
+    val tc = TaskContext.get()
+    val attempt = Paths.get(tmp, s"${tc.partitionId()}-${tc.taskAttemptId()}")
+    val w = Files.newBufferedWriter(attempt) // UTF-8
+    try lines.foreach { l => w.write(l); w.write('\n') } finally w.close()
+    Files.move(attempt, attempt.resolveSibling(f"part-${tc.partitionId()}%05d"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
 
   /** S4-shaped JSON-lines KV sink: `nReduce` hash partitions of
     * `{"Key":…,"Value":…}` rows — the reference's intermediate format

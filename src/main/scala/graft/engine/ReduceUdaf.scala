@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions.udaf
 
 /** The reference's whole application aggregate API —
   * `Reduce(key string, values []string) string`
-  * (`/root/reference/src/main/mrworker.go:32-49`) — as a first-class
-  * Spark `Aggregator`: the one reduce of [[MapReduce.runJob]], and of
-  * SQL (`SELECT key, mr_reduce_*(key, value) … GROUP BY key`).
+  * (`/root/reference/src/main/mrworker.go:32-49`) — as a Spark
+  * `Aggregator` for SQL only (`udaf(new GenericReduce(f))`, or
+  * `mr_reduce_*(key, value) … GROUP BY key`); [[MapReduce.runJob]] sorts
+  * and walks its buckets instead.
   *
   * Collect-then-finish by design: reference reduces are NOT required to
   * be commutative monoids (indexer/crash sort inside the group,
@@ -34,7 +35,8 @@ class GenericReduce(f: MapReduce.ReduceF)
 object GenericReduce {
   case class Buf(key: String, values: List[String])
 
-  /** Register the reference's reduce functions as SQL aggregates. */
+  /** Register the reference's reduce functions as SQL aggregates: an
+    * explicit session-setup call for SQL users; no library path makes it. */
   def register(spark: SparkSession): Unit = {
     spark.udf.register("mr_reduce_count",
       udaf(new GenericReduce(MapReduce.wcReduce)))

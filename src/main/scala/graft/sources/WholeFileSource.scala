@@ -51,20 +51,12 @@ object WholeFileSource {
     StructField("content", StringType, nullable = false),
     StructField("length", LongType, nullable = false)))
 
-  /** Expand the load path (file, dir or glob-in-filename) to concrete
-    * files, sorted for deterministic partition order. Like the built-in
-    * sources, a nonexistent path or a zero-match glob FAILS instead of
-    * reading as an empty corpus (an existing empty directory is the one
-    * legitimately-empty case). */
-  def listFiles(path: String): Seq[String] = {
-    // Local-filesystem contract, enforced: listing happens on the
-    // driver and reading on executors through java.nio, so a remote
-    // scheme (hdfs://, s3a://, ...) would either fail confusingly or
-    // list driver-local files the executors can't read. Reject it with
-    // the contract spelled out rather than limping. "scheme:/..." and
-    // "scheme://..." both count (Hadoop accepts the single-slash form);
-    // a bare colon in a filename ("cache:v2" — colon not followed by a
-    // slash) is a legal local path and stays accepted.
+  /** The path contract of this source and of [[graft.engine.MapReduce.sortedTextSink]]:
+    * local or shared-mount, plain or `file:`, as executors use java.nio.
+    * A remote scheme (hdfs://, s3a://; "scheme:/" counts, as in Hadoop)
+    * would fail confusingly or use driver-local files, so it is rejected
+    * with the contract spelled out; "cache:v2" is a legal local name. */
+  def localPath(path: String): java.nio.file.Path = {
     val scheme = "^([a-zA-Z][a-zA-Z0-9+.-]*):/".r.findFirstMatchIn(path)
       .map(_.group(1)).orNull
     if (scheme != null && scheme != "file")
@@ -72,7 +64,16 @@ object WholeFileSource {
         s"wholefile is a local-filesystem (shared-mount) source; got scheme " +
           s"'$scheme:' in $path. Stage remote data locally or use a " +
           "splittable format + built-in source for distributed storage.")
-    val p = java.nio.file.Paths.get(path.stripPrefix("file:"))
+    java.nio.file.Paths.get(path.stripPrefix("file:"))
+  }
+
+  /** Expand the load path (file, dir or glob-in-filename) to concrete
+    * files, sorted for deterministic partition order. Like the built-in
+    * sources, a nonexistent path or a zero-match glob FAILS instead of
+    * reading as an empty corpus (an existing empty directory is the one
+    * legitimately-empty case). */
+  def listFiles(path: String): Seq[String] = {
+    val p = localPath(path)
     // An existing file is read as named, even when its name holds glob
     // characters (`a[1].txt`) or starts with `.` or `_`.
     if (java.nio.file.Files.isRegularFile(p)) return Seq(p.toString)

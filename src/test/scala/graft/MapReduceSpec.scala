@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalacheck.Gen
 
 import graft.engine.{KV, MapReduce}
@@ -143,13 +148,99 @@ class MapReduceSpec extends SparkSpec {
   }
 
   test("sorted text sink writes 'key value' lines, key-sorted per partition") {
-    val dir = java.nio.file.Files.createTempDirectory("mr-sink").toString
+    val dir = tempDir("mr-sink").toString
     val result = MapReduce.runJob(corpus.toDS(), MapReduce.wcMap, MapReduce.wcReduce)
     MapReduce.sortedTextSink(result, dir)
     val lines = spark.read.textFile(dir).collect()
     val want = sequential(corpus, MapReduce.wcMap, MapReduce.wcReduce)
     assert(lines.length == want.size)
     assert(lines.map(_.split(" ", 2)).forall { case Array(k, v) => want(k) == v })
+  }
+
+  /** Every name in `dir`, sorted. */
+  private def names(dir: java.nio.file.Path): Seq[String] = {
+    val s = java.nio.file.Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally s.close()
+  }
+
+  private def parts(n: Int): Seq[String] = (0 until n).map(i => f"part-$i%05d")
+
+  private def bytesOf(dir: java.nio.file.Path): Map[String, Seq[Byte]] =
+    names(dir).map(n => n -> java.nio.file.Files.readAllBytes(dir.resolve(n)).toSeq).toMap
+
+  test("sorted text sink: a key-sorted part file per bucket, empty ones too, and _SUCCESS") {
+    val dir = tempDir("mr-sink-parts")
+    // Three keys into ten buckets: most buckets are empty.
+    val input = Seq(KV("f1", "the quick fox the"), KV("f2", "fox")).toDS()
+    MapReduce.sortedTextSink(
+      MapReduce.runJob(input, MapReduce.wcMap, MapReduce.wcReduce, nReduce = 10),
+      dir.toString)
+    // No _temporary and no hidden (.crc) files are left behind.
+    assert(names(dir) == "_SUCCESS" +: parts(10))
+    val lines = parts(10).map(p => java.nio.file.Files.readAllLines(dir.resolve(p)).asScala.toSeq)
+    lines.foreach(ls => assert(ls == ls.sorted))
+    assert(lines.count(_.isEmpty) >= 7)
+    assert(lines.flatten.sorted == Seq("fox 2", "quick 1", "the 2"))
+
+    // A second run into the same directory replaces it.
+    MapReduce.sortedTextSink(
+      MapReduce.runJob(input, MapReduce.wcMap, MapReduce.wcReduce, nReduce = 3),
+      "file:" + dir)
+    assert(names(dir) == "_SUCCESS" +: parts(3))
+
+    // Empty input still writes part files (Spark prunes the plan of an
+    // empty local input to no partitions; the sink then writes one).
+    MapReduce.sortedTextSink(MapReduce.runJob(Seq.empty[KV].toDS(),
+      MapReduce.wcMap, MapReduce.wcReduce, nReduce = 4), dir.toString)
+    val emptyParts = names(dir).tail
+    assert(names(dir).head == "_SUCCESS" && emptyParts.nonEmpty &&
+      emptyParts == parts(emptyParts.size), names(dir))
+    emptyParts.foreach(p => assert(java.nio.file.Files.size(dir.resolve(p)) == 0))
+  }
+
+  test("sorted text sink: a write attempt that dies mid-file leaves the clean output") {
+    val result = MapReduce.runJob(corpus.toDS(), MapReduce.wcMap, MapReduce.wcReduce, nReduce = 4)
+      .sortWithinPartitions("key")
+    val clean = tempDir("mr-sink-clean")
+    MapReduce.sortedTextSink(result, clean.toString)
+    // The sink's own sort is redundant over a sorted result, so the
+    // failing projection runs while the write task streams its lines.
+    def failing(dir: java.nio.file.Path, always: Boolean) = {
+      val tmp = dir.resolve("_temporary").toString
+      val dies = udf { (v: String) =>
+        val tc = TaskContext.get()
+        if (tc.partitionId() == 1 && (always || tc.attemptNumber() == 0) &&
+            SinkChaos.rows.incrementAndGet() == 5) {
+          SinkChaos.midFile.set(java.nio.file.Files.exists(
+            java.nio.file.Paths.get(tmp, s"1-${tc.taskAttemptId()}")))
+          SinkChaos.rows.set(0)
+          throw new RuntimeException("injected chaos: write attempt dies")
+        }
+        v
+      }.asNondeterministic()
+      result.select(col("key"), dies(col("value")).as("value")).as[KV]
+    }
+    val chaotic = tempDir("mr-sink-chaos")
+    SinkChaos.rows.set(0); SinkChaos.midFile.set(false)
+    MapReduce.sortedTextSink(failing(chaotic, always = false), chaotic.toString)
+    assert(SinkChaos.midFile.get, "the first attempt died while writing its file")
+    assert(bytesOf(chaotic) == bytesOf(clean))
+
+    // A job whose task dies on every attempt fails, and leaves neither
+    // _temporary nor _SUCCESS.
+    val failed = tempDir("mr-sink-failed")
+    SinkChaos.rows.set(0)
+    intercept[org.apache.spark.SparkException](
+      MapReduce.sortedTextSink(failing(failed, always = true), failed.toString))
+    assert(!names(failed).exists(n => n == "_temporary" || n == "_SUCCESS"))
+  }
+
+  test("sorted text sink: remote schemes are rejected") {
+    val result = MapReduce.runJob(corpus.toDS(), MapReduce.wcMap, MapReduce.wcReduce)
+    val e = intercept[IllegalArgumentException](
+      MapReduce.sortedTextSink(result, "hdfs://nn:8020/out"))
+    assert(e.getMessage.contains("local-filesystem"), e.getMessage)
   }
 
   test("MrRun app registry matches the reference's plugin apps") {
@@ -164,7 +255,7 @@ class MapReduceSpec extends SparkSpec {
   }
 
   test("wholeFiles reads (filename, contents) one row per file") {
-    val dir = java.nio.file.Files.createTempDirectory("mr-files")
+    val dir = tempDir("mr-files")
     val f1 = dir.resolve("a.txt"); val f2 = dir.resolve("b.txt")
     val f3 = dir.resolve("empty.txt")
     java.nio.file.Files.writeString(f1, "hello world\nhello")
@@ -176,4 +267,10 @@ class MapReduceSpec extends SparkSpec {
     assert(rows == Map(f1.toString -> "hello world\nhello",
       f2.toString -> "spark", f3.toString -> ""))
   }
+}
+
+/** Shared with the sink chaos test's tasks (local mode: one JVM). */
+object SinkChaos {
+  val rows = new AtomicInteger(0)
+  val midFile = new AtomicBoolean(false)
 }

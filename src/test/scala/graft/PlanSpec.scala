@@ -161,6 +161,7 @@ class PlanSpec extends SparkSpec {
   test("MapReduce façade: one hash exchange on key into nReduce buckets") {
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.exchange.Exchange
     import spark.implicits._
     object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -177,8 +178,15 @@ class PlanSpec extends SparkSpec {
       case HashPartitioning(Seq(k: Attribute), 10) => k.name == "key"
       case _ => false
     }, "expected hashpartitioning(key, 10):\n" + p)
+    // The reduce sorts each bucket on key and walks it once: no aggregate.
+    val sorts = H.collect(exec) { case s: SortExec => s }
+    assert(sorts.exists(s => s.sortOrder.map(_.child).collect {
+      case k: Attribute => k.name } == Seq("key") &&
+      H.collect(s) { case e: Exchange => e }.nonEmpty),
+      "expected a Sort on key above the exchange:\n" + p)
+    for (op <- Seq("ObjectHashAggregate", "HashAggregate", "MapGroups"))
+      assert(!p.contains(op), s"$op in the reduce stage:\n" + p)
     assert(ds.rdd.getNumPartitions == 10)
-    assert(!p.contains("MapGroups"), "typed group path is back:\n" + p)
   }
 
   /** Column sets actually read by the plan's scans. When another suite

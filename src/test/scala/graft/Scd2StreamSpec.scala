@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -29,7 +27,7 @@ class Scd2StreamSpec extends SparkSpec {
       .zipWithIndex
       .map { case ((u, t, m), i) => (i.toLong, u, t, mts(m)) }
     val ev = rows.toDF("event_id", "user_id", "event_type", "ts")
-    val src = Files.createTempDirectory("graft-scd2-stream-").toString
+    val src = tempDir("graft-scd2-stream-").toString
     ev.filter(col("ts") <= mts(60)).coalesce(1).write.parquet(s"$src/part=0")
     ev.filter(col("ts") > mts(60)).coalesce(1).write.parquet(s"$src/part=1")
     val all = spark.read.parquet(s"$src/part=*").drop("part")
@@ -41,7 +39,7 @@ class Scd2StreamSpec extends SparkSpec {
       .writeStream.format("memory").queryName("scd2_spec_updates")
       .outputMode(OutputMode.Update())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

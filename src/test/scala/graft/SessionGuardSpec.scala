@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the `graft_*` functions are installed only by `GraftExtensions`, no
   * query path writes a session setting outside the two documented
   * windows (Bpe's codegen-off merge rounds and Streaming's
-  * state-partition count around `start()`), and no code sweeps the
-  * session's persisted state. No SparkSession needed. */
+  * state-partition count around `start()`), no query path registers a
+  * function, and no code sweeps the session's persisted state. No
+  * SparkSession needed. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO_DIR",
@@ -47,6 +48,14 @@ class SessionGuardSpec extends AnyFunSuite {
     val windows = Map("graft/ext/Bpe.scala" -> 2,
       "graft/streaming/Streaming.scala" -> 2)
     assert(occurrences("conf.set(") == windows)
+  }
+
+  test("udf.register( appears only in GenericReduce's explicit SQL setup") {
+    // Query paths apply their aggregates as Columns; registering a
+    // function writes the session's function registry.
+    assert(occurrences("udf.register(").keySet == Set("graft/engine/ReduceUdaf.scala"))
+    assert(occurrences("GenericReduce.register(").isEmpty,
+      s"GenericReduce.register( in ${occurrences("GenericReduce.register(")}")
   }
 
   test("no session-wide checkpoint sweep") {

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -9,6 +12,19 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  private var tempRoot: Path = _
+
+  /** A fresh directory under this suite's one temp directory, which is
+    * deleted after the suite (stream checkpoints, inputs, sink output). */
+  def tempDir(prefix: String): Path = synchronized {
+    if (tempRoot == null) tempRoot = Files.createTempDirectory("graft-spec-")
+    Files.createTempDirectory(tempRoot, prefix)
+  }
+
+  override def afterAll(): Unit =
+    try if (tempRoot != null) FileUtils.deleteDirectory(tempRoot.toFile)
+    finally super.afterAll()
 }
 
 object SparkSpec {

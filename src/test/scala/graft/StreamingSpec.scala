@@ -33,7 +33,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("kv mapGroupsWithState across micro-batches == batch replay") {
-    val src = Files.createTempDirectory("graft-kv-stream-").toString
+    val src = tempDir("graft-kv-stream-").toString
     writeOpFiles(src)
     val all = spark.read.parquet(s"$src/part=*").as[KvOp]
 
@@ -44,7 +44,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName("kv_spec_updates")
       .outputMode(OutputMode.Update())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -75,9 +75,9 @@ class StreamingSpec extends SparkSpec {
     //    accumulated in phase A;
     //  the final read-back must equal an UNINTERRUPTED run over all 6
     //    files and the batch ground truth.
-    val src = Files.createTempDirectory("graft-rec-src-").toString
-    val ckpt = Files.createTempDirectory("graft-rec-ckpt-").toString
-    val sink = Files.createTempDirectory("graft-rec-sink-").toString
+    val src = tempDir("graft-rec-src-").toString
+    val ckpt = tempDir("graft-rec-ckpt-").toString
+    val sink = tempDir("graft-rec-sink-").toString
     def writeFile(part: Int): Unit =
       (0 until 50).map(i => (s"u${(part * 50 + i) % 7}", part * 50L + i))
         .toDF("key", "x").coalesce(1).write.parquet(s"$src/part=$part")
@@ -133,8 +133,8 @@ class StreamingSpec extends SparkSpec {
       "state must carry across the crash (counts span both phases)")
 
     // Uninterrupted twin over the same 6 files ⇒ identical final result.
-    val ckpt2 = Files.createTempDirectory("graft-rec-ckpt2-").toString
-    val sink2 = Files.createTempDirectory("graft-rec-sink2-").toString
+    val ckpt2 = tempDir("graft-rec-ckpt2-").toString
+    val sink2 = tempDir("graft-rec-sink2-").toString
     val clean = runOnce(ckpt2, sink2)
     assert(clean.map(_._1) == Seq(0L, 1L, 2L, 3L, 4L, 5L))
     assert(finalCounts(sink2) == finalCounts(sink))
@@ -149,7 +149,7 @@ class StreamingSpec extends SparkSpec {
     // Empty documents/events tables: the parquet-sink read-back must
     // return an empty frame with the right schema, not NPE or fail
     // schema inference (complete mode writes its schema even for 0 rows).
-    val dir = Files.createTempDirectory("graft-empty-sf-").toString
+    val dir = tempDir("graft-empty-sf-").toString
     spark.read.parquet(s"$sf/documents.parquet")
       .limit(0).coalesce(1).write.parquet(s"$dir/documents.parquet")
     spark.read.parquet(s"$sf/events.parquet")
@@ -166,7 +166,7 @@ class StreamingSpec extends SparkSpec {
   test("in-order contract violation raises instead of folding wrong") {
     // f=1's op has a LOWER seq than f=0's already-applied one: the
     // §7.7.5 in-order tripwire must fail the query, not corrupt state.
-    val src = Files.createTempDirectory("graft-kv-ooo-").toString
+    val src = tempDir("graft-kv-ooo-").toString
     Seq(KvOp(5L, "k", "put", "a")).toDS().coalesce(1).write.parquet(s"$src/f=0")
     Seq(KvOp(3L, "k", "append", "b")).toDS().coalesce(1).write.parquet(s"$src/f=1")
     val schema = spark.read.parquet(s"$src/f=*").schema
@@ -176,7 +176,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName("kv_spec_ooo")
       .outputMode(OutputMode.Update())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -188,7 +188,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("windowed agg with watermark emits closed windows in append mode") {
-    val src = Files.createTempDirectory("graft-ev-stream-").toString
+    val src = tempDir("graft-ev-stream-").toString
     // Two files: hours 0-1 first, then hour 3 — watermark (1h) closes the
     // earlier windows once the second file advances event time.
     Seq((0, 10.0), (1, 20.0))
@@ -207,7 +207,7 @@ class StreamingSpec extends SparkSpec {
     val q = agg.writeStream.format("memory").queryName("ev_spec_append")
       .outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -227,7 +227,7 @@ class StreamingSpec extends SparkSpec {
   private def etFixture(): String = {
     import Streaming.TimedOp
     def ts(m: String) = java.sql.Timestamp.valueOf(s"2026-01-01 $m:00")
-    val src = Files.createTempDirectory("graft-kv-et-").toString
+    val src = tempDir("graft-kv-et-").toString
     Seq(TimedOp(ts("10:00"), 1, "k", "put", "a"),
         TimedOp(ts("10:10"), 3, "k", "append", "b"))
       .toDS().coalesce(1).write.parquet(s"$src/f=0")
@@ -254,7 +254,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Update())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -301,8 +301,8 @@ class StreamingSpec extends SparkSpec {
     // recovered from the checkpoint.
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(provKey)
-    val src = Files.createTempDirectory("graft-kv-ckpt-src-").toString
-    val ckpt = Files.createTempDirectory("graft-kv-ckpt-").toString
+    val src = tempDir("graft-kv-ckpt-src-").toString
+    val ckpt = tempDir("graft-kv-ckpt-").toString
     try {
       spark.conf.set(provKey,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -340,7 +340,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("idempotent parquet sink: batch replay never duplicates output") {
-    val out = Files.createTempDirectory("graft-sink-").toString
+    val out = tempDir("graft-sink-").toString
     val sink = graft.streaming.Sinks.idempotentParquet(out)
     val batch0 = Seq(("k", "v1"), ("k2", "v2")).toDF("key", "value")
     sink(batch0, 0L)
@@ -354,10 +354,10 @@ class StreamingSpec extends SparkSpec {
 
     // End-to-end: the kv stream through the sink produces each update
     // exactly once across micro-batches.
-    val src = Files.createTempDirectory("graft-sink-src-").toString
+    val src = tempDir("graft-sink-src-").toString
     Seq(KvOp(1, "a", "put", "x"), KvOp(2, "a", "append", "y"))
       .toDS().coalesce(1).write.parquet(s"$src/f=0")
-    val out2 = Files.createTempDirectory("graft-sink2-").toString
+    val out2 = tempDir("graft-sink2-").toString
     val stream = spark.readStream
       .schema(spark.read.parquet(s"$src/f=*").schema)
       .parquet(s"$src/f=*").as[KvOp]
@@ -368,7 +368,7 @@ class StreamingSpec extends SparkSpec {
       }
       .outputMode(OutputMode.Update())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -393,7 +393,7 @@ class StreamingSpec extends SparkSpec {
       .zipWithIndex
       .map { case ((u, t, m), i) => (i.toLong, u, t, mts(m)) }
     val ev = rows.toDF("event_id", "user_id", "event_type", "ts")
-    val src = Files.createTempDirectory("graft-funnel-stream-").toString
+    val src = tempDir("graft-funnel-stream-").toString
     ev.filter(col("ts") <= mts(60)).coalesce(1).write.parquet(s"$src/part=0")
     ev.filter(col("ts") > mts(60)).coalesce(1).write.parquet(s"$src/part=1")
     val all = spark.read.parquet(s"$src/part=*").drop("part")
@@ -404,7 +404,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName("funnel_spec_updates")
       .outputMode(OutputMode.Update())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -448,7 +448,7 @@ class StreamingSpec extends SparkSpec {
       (2L, 30L, "click", mts(50)), (3L, 30L, "purchase", mts(50)),
       (12L, 31L, "click", mts(100)), (13L, 31L, "purchase", mts(100)),
       (21L, 32L, "click", mts(50)))
-    val src = Files.createTempDirectory("graft-funnel-ties-").toString
+    val src = tempDir("graft-funnel-ties-").toString
     batch1.toDF("event_id", "user_id", "event_type", "ts")
       .coalesce(1).write.parquet(s"$src/part=0")
     batch2.toDF("event_id", "user_id", "event_type", "ts")
@@ -461,7 +461,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName("funnel_ties_updates")
       .outputMode(OutputMode.Update())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -524,12 +524,12 @@ class StreamingSpec extends SparkSpec {
     // Multi-batch: two part files, one per trigger — the static side
     // is re-planned per micro-batch and the appended union must still
     // equal the batch join.
-    val src = Files.createTempDirectory("graft-enrich-mb-").toString
+    val src = tempDir("graft-enrich-mb-").toString
     val ev = Tables.events(spark, sf)
     ev.filter(col("event_id") % 2 === 0).coalesce(1).write.parquet(s"$src/f=0")
     ev.filter(col("event_id") % 2 === 1).coalesce(1).write.parquet(s"$src/f=1")
     val schema = spark.read.parquet(s"$src/f=*").schema
-    val out = Files.createTempDirectory("graft-enrich-out-").toString
+    val out = tempDir("graft-enrich-out-").toString
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$src/f=*")
       .join(firstSeen, Seq("user_id"))
@@ -543,7 +543,7 @@ class StreamingSpec extends SparkSpec {
       }
       .outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -569,7 +569,7 @@ class StreamingSpec extends SparkSpec {
     // across the batch boundary — the property the gate's single-batch
     // run never exercises.
     def ts(m: String) = java.sql.Timestamp.valueOf(s"2026-01-01 $m:00")
-    val src = Files.createTempDirectory("graft-ssj-mb-").toString
+    val src = tempDir("graft-ssj-mb-").toString
     Seq((1L, ts("10:00"), 7L, "click", 0.0, "{}"),
         (2L, ts("10:05"), 8L, "click", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -582,7 +582,7 @@ class StreamingSpec extends SparkSpec {
     val schema = spark.read.parquet(s"$src/f=*").schema
     def side() = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$src/f=*")
-    val out = Files.createTempDirectory("graft-ssj-out-").toString
+    val out = tempDir("graft-ssj-out-").toString
     // Drives the PRODUCTION join (watermarks, interval, condition) —
     // not a local replica that could drift from the shipped code.
     val q = Streaming.clickAttributionJoin(side(), side())
@@ -592,7 +592,7 @@ class StreamingSpec extends SparkSpec {
       }
       .outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-").toString)
+        tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
