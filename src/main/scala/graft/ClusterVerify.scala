@@ -44,7 +44,8 @@ object ClusterVerify {
 
   /** One key per executor-sensitive mechanism (see scaladoc). */
   private val subset = Seq(
-    // engine façade + generic-reduce UDAF + plugin-adjacent paths
+    // engine façade; the mr_reduce_* keys run its reduce walk closure
+    // in executor JVMs
     "mr_wordcount", "mr_golden_lines", "mr_reduce_count",
     "mr_reduce_indexer",
     // KV replay (typed Datasets, flatMapGroups) + sharding

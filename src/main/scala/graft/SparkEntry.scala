@@ -17,92 +17,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     apps.MrApps.wordCount(Tables.documents(spark, "/root/testdata/sf0.001"))
 
-  /** Keys defined directly here rather than in a module object: the
-    * KV-replay family and the classic relational/events names that
-    * predate the per-module `queries` convention. */
-  private def inlineQueries: Q = Map(
-    "kv_replay" -> ((s, dir) => kv.KvReplay.fromEvents(s, dir)),
-    "kv_replay_resharded" -> (kv.KvReplay.replayResharded _),
-    "kv_replay_snapshot" -> (kv.KvReplay.replaySnapshotted _),
-    "kv_replay_ttl" -> (kv.KvReplay.replayTtl _),
-    "kv_replay_asof" -> (kv.KvReplay.replayAsOf _),
-    "kv_replay_idempotent" -> (kv.KvReplay.replayIdempotent _),
-    "q1_pricing_summary" -> (ext.Relational.q1PricingSummary _),
-    "q3_top_orders" -> (ext.Relational.q3TopOrders _),
-    "q5_region_volume" -> (ext.Relational.q5RegionVolume _),
-    "top_orders_per_customer" -> (ext.Relational.topOrdersPerCustomer _),
-    "orders_rollup" -> (ext.Relational.ordersRollup _),
-    "customers_without_orders" -> (ext.Relational.customersWithoutOrders _),
-    "nations_with_customers" -> (ext.Relational.nationsWithCustomers _),
-    "events_windowed_agg" -> (ext.Events.windowedAgg _),
-    "events_sliding_agg" -> (ext.Events.slidingAgg _),
-    "events_json_stats" -> (ext.Events.jsonStats _),
-    "events_gapfill_hourly" -> (ext.Events.gapfillHourly _),
-    "events_hourly_anomaly" -> (ext.Events.hourlyAnomaly _),
-    "events_mad_hourly" -> (ext.Events.madHourly _),
-    "events_throttle_hourly" -> (ext.Events.throttleHourly _),
-    "events_ewma_hourly" -> (ext.Events.ewmaHourly _),
-    "events_cusum_hourly" -> (ext.Events.cusumHourly _),
-    "events_cusum_changepoints" -> (ext.Events.cusumChangepoints _),
-    "events_dow_hour_heatmap" -> (ext.Events.dowHourHeatmap _),
-    "events_trend_ols" -> (ext.Events.trendOls _),
-    "events_scd2_user_type" -> (ext.Events.scd2UserType _),
-    "events_autocorr_hourly" -> (ext.Events.autocorrHourly _),
-    "events_click_attribution" -> (ext.Events.clickAttribution _),
-    "events_minute_full_outer" -> (ext.Events.minuteFullOuter _),
-    "events_out_of_order" -> (ext.Events.outOfOrder _),
-    "lineitem_price_quantiles" -> (ext.Events.priceQuantiles _),
-    "events_sessionize" -> (ext.Events.sessionize _),
-    "events_session_durations" -> (ext.Events.sessionDurations _),
-    "events_markov_transitions" -> (ext.Events.markovTransitions _),
-    "events_markov_stationary" -> (ext.Events.markovStationary _))
-
-  private def inlineOracles: Map[String, String] = Map(
-    "kv_replay" -> kv.KvReplay.oracleSql,
-    "kv_replay_resharded" -> kv.KvReplay.reshardedOracleSql,
-    "kv_replay_snapshot" -> kv.KvReplay.oracleSql,
-    "kv_replay_ttl" -> kv.KvReplay.ttlOracleSql,
-    "kv_replay_asof" -> kv.KvReplay.asOfOracleSql,
-    "kv_replay_idempotent" -> kv.KvReplay.idempotentOracleSql,
-    "q1_pricing_summary" -> ext.Relational.q1Sql,
-    "q3_top_orders" -> ext.Relational.q3Sql,
-    "q5_region_volume" -> ext.Relational.q5Sql,
-    "top_orders_per_customer" -> ext.Relational.topOrdersSql,
-    "orders_rollup" -> ext.Relational.ordersRollupSql,
-    "customers_without_orders" -> ext.Relational.customersWithoutOrdersSql,
-    "nations_with_customers" -> ext.Relational.nationsWithCustomersSql,
-    "events_windowed_agg" -> ext.Events.windowedAggSql,
-    "events_sliding_agg" -> ext.Events.slidingAggSql,
-    "events_json_stats" -> ext.Events.jsonStatsSql,
-    "events_gapfill_hourly" -> ext.Events.gapfillHourlySql,
-    "events_hourly_anomaly" -> ext.Events.hourlyAnomalySql,
-    "events_mad_hourly" -> ext.Events.madHourlySql,
-    "events_throttle_hourly" -> ext.Events.throttleHourlySql,
-    "events_ewma_hourly" -> ext.Events.ewmaHourlySql,
-    "events_cusum_hourly" -> ext.Events.cusumHourlySql,
-    "events_cusum_changepoints" -> ext.Events.cusumChangepointsSql,
-    "events_dow_hour_heatmap" -> ext.Events.dowHourHeatmapSql,
-    "events_trend_ols" -> ext.Events.trendOlsSql,
-    "events_scd2_user_type" -> ext.Events.scd2UserTypeSql,
-    "events_autocorr_hourly" -> ext.Events.autocorrHourlySql,
-    "events_click_attribution" -> ext.Events.clickAttributionSql,
-    "events_minute_full_outer" -> ext.Events.minuteFullOuterSql,
-    "events_out_of_order" -> ext.Events.outOfOrderSql,
-    "lineitem_price_quantiles" -> ext.Events.priceQuantilesSql,
-    "events_sessionize" -> ext.Events.sessionizeSql,
-    "events_session_durations" -> ext.Events.sessionDurationsSql,
-    "events_markov_transitions" -> ext.Events.markovTransitionsSql,
-    // Unrolled power-iteration chain (see Pca's top-component oracle):
-    // materialized so each rk/pk step computes once in the oracle engine.
-    "events_markov_stationary" ->
-      ext.Hashing.materializeCtes(ext.Events.markovStationarySql))
-
   /** Named module registry: (module name, queries, oracles). The
     * generated ledger (`graft.tools.Ledger` → LEDGER.md, SURVEY §8)
     * walks this so the key inventory can never drift from the code;
     * [[queries]]/[[oracleSql]] are folds over it. Module name `a.B`
-    * maps to `src/main/scala/graft/a/B.scala` (Ledger checks the file
-    * exists). Inline legacy keys live under their defining module. */
+    * maps to `src/main/scala/graft/a/B.scala`, the file of object
+    * `graft.a.B` (Ledger checks both, and that each name appears once). */
   def modules: Seq[(String, Q, Map[String, String])] = Seq(
     ("apps.MrApps", apps.MrApps.queries, apps.MrApps.oracles),
     ("ext.TextAnalysis", ext.TextAnalysis.queries, ext.TextAnalysis.oracles),
@@ -171,18 +91,8 @@ object SparkEntry {
     ("ext.Paths", ext.Paths.queries, ext.Paths.oracles),
     ("ext.Spell", ext.Spell.queries, ext.Spell.oracles),
     ("ext.Rake", ext.Rake.queries, ext.Rake.oracles),
-    ("kv.KvReplay", inlineQueries.view.filterKeys(_.startsWith("kv_replay")).toMap,
-      inlineOracles.view.filterKeys(_.startsWith("kv_replay")).toMap),
-    ("ext.Relational (classic)", inlineQueries.view.filterKeys(k =>
-      !k.startsWith("kv_replay") && !k.startsWith("events_") &&
-        k != "lineitem_price_quantiles").toMap,
-      inlineOracles.view.filterKeys(k =>
-        !k.startsWith("kv_replay") && !k.startsWith("events_") &&
-          k != "lineitem_price_quantiles").toMap),
-    ("ext.Events", inlineQueries.view.filterKeys(k =>
-      k.startsWith("events_") || k == "lineitem_price_quantiles").toMap,
-      inlineOracles.view.filterKeys(k =>
-        k.startsWith("events_") || k == "lineitem_price_quantiles").toMap))
+    ("kv.KvReplay", kv.KvReplay.queries, kv.KvReplay.oracles),
+    ("ext.Events", ext.Events.queries, ext.Events.oracles))
 
   /** One entry per implemented operator from SURVEY.md §2 (+ §7.5 ext). */
   def queries: Q = modules.iterator.map(_._2).reduce(_ ++ _)

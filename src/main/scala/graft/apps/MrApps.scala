@@ -3,14 +3,14 @@ package graft.apps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.{GenericReduce, MapReduce, Tokenizer}
+import graft.engine.{KV, MapReduce, Tokenizer}
 
 /** The reference's eight MapReduce applications re-expressed as declarative
   * DataFrame pipelines (SURVEY.md §2.2/§2.4). Input stand-in corpus is the
   * driver's `documents` table (doc_id, text, lang, source, n_chars) —
   * FIXTURES.md §2.
   *
-  * Every pipeline is pure Catalyst built-ins: the shuffle is a hash
+  * Every declarative pipeline is pure Catalyst built-ins: the shuffle is a hash
   * aggregation with map-side partial agg (a strict upgrade over the
   * reference, which ships raw map output — `src/mr/worker.go:176-190`), and
   * `collect_list` aggregates use `ObjectHashAggregate` with spill, fixing
@@ -90,7 +90,8 @@ object MrApps {
     * `"<key> <value>"` text lines from the word count. The driver compare
     * is order-normalized (as is the reference's own test,
     * `src/main/test-mr.sh:103`), so no global sort is forced here; the
-    * text sink path does `orderBy` at write time (see GoldenSink). */
+    * text sink ([[graft.engine.MapReduce.sortedTextSink]]) sorts each
+    * bucket on key at write time. */
   def goldenLines(docs: DataFrame): DataFrame =
     wordCount(docs).select(concat_ws(" ", col("word"), col("cnt")).as("line"))
 
@@ -98,51 +99,47 @@ object MrApps {
   private def onDocs(f: DataFrame => DataFrame): (SparkSession, String) => DataFrame =
     (s, dir) => f(graft.Tables.documents(s, dir))
 
-  /** The GENERIC-reduce twins (round 15): the same three reference
-    * reduces through the [[graft.engine.GenericReduce]] Aggregator — the
+  /** The generic-reduce twins: the same three reference reduces through
+    * the façade's reduce stage, [[graft.engine.MapReduce.reduce]] — the
     * reference's `Reduce(key, values) string` API
-    * (`src/main/mrworker.go:32-49`) — applied as a `Column` (no session
-    * registration), so the DuckDB gate pins the collect-then-finish
-    * aggregate itself. Group buffers materialize the group's values BY
-    * CONTRACT (non-monoid reduces; SURVEY §2.9): per-group memory is the
-    * key's value multiplicity, so the token-fan-out twins run on a
-    * deterministic 1-in-20 doc subset (`doc_id % 20`, the knn keys'
-    * workload-predicate idiom) to bound the hottest word's buffer at any
-    * SF; the declarative twins above are the unbounded-scale path. */
-  private def genericReduce(f: MapReduce.ReduceF) = udaf(new GenericReduce(f))
-
+    * (`src/main/mrworker.go:32-49`) run as its reduce worker runs it, one
+    * sort and one walk per bucket — so the DuckDB gate pins the code
+    * `runJob` runs. The walk hands `reduceF` all of a key's values BY
+    * CONTRACT (non-monoid reduces; SURVEY §2.9): per-key memory is the
+    * key's value multiplicity, so the twins run on a deterministic
+    * 1-in-20 doc subset (`doc_id % 20`, the knn keys' workload-predicate
+    * idiom) to bound the hottest key's list at any SF; the declarative
+    * twins above are the unbounded-scale path. */
   private def docSubset(docs: DataFrame): DataFrame =
     docs.filter(col("doc_id") % 20 === 0)
 
-  def reduceWordCount(spark: SparkSession, dir: String): DataFrame = {
-    docSubset(graft.Tables.documents(spark, dir))
-      .select(Tokenizer.words(col("text")).as("key"))
-      .groupBy("key")
-      .agg(genericReduce(MapReduce.wcReduce)(col("key"), lit("1")).as("cnt"))
+  /** Reduce `(key, value)` pairs with `f` and name the output column. */
+  private def reduced(pairs: DataFrame, f: MapReduce.ReduceF,
+      out: String): DataFrame = {
+    import pairs.sparkSession.implicits._
+    MapReduce.reduce(pairs.as[KV], f).withColumnRenamed("value", out)
   }
 
-  def reduceSortedConcat(spark: SparkSession, dir: String): DataFrame = {
-    // Same 1-in-20 subset bound as the other generic-reduce twins
-    // (round-15 advisory): grouping by lang over the FULL corpus would
-    // buffer every doc_id of a language in one in-memory List — the
-    // per-group multiplicity is corpus-linear, exactly the unbounded
-    // state the collect-then-finish contract must be capped under. The
-    // declarative mr_sorted_concat above stays full-corpus (sort_array
-    // over a columnar agg buffer — spillable, no object List).
-    docSubset(graft.Tables.documents(spark, dir))
-      .select(col("lang").as("key"), col("doc_id").cast("string").as("v"))
-      .groupBy("key")
-      .agg(genericReduce(MapReduce.sortedJoinReduce)(col("key"), col("v")).as("vals"))
-  }
+  def reduceWordCount(spark: SparkSession, dir: String): DataFrame =
+    reduced(docSubset(graft.Tables.documents(spark, dir))
+      .select(Tokenizer.words(col("text")).as("key"), lit("1").as("value")),
+      MapReduce.wcReduce, "cnt")
 
-  def reduceIndexer(spark: SparkSession, dir: String): DataFrame = {
-    docSubset(graft.Tables.documents(spark, dir))
-      .select(col("doc_id").cast("string").as("doc"),
-        Tokenizer.words(col("text")).as("key"))
-      .distinct()
-      .groupBy("key")
-      .agg(genericReduce(MapReduce.indexerReduce)(col("key"), col("doc")).as("entry"))
-  }
+  def reduceSortedConcat(spark: SparkSession, dir: String): DataFrame =
+    // Same 1-in-20 subset bound as the other twins: keyed by lang over
+    // the FULL corpus, one key's list would hold every doc_id of a
+    // language, corpus-linear. The declarative mr_sorted_concat above
+    // stays full-corpus (sort_array over a columnar agg buffer).
+    reduced(docSubset(graft.Tables.documents(spark, dir))
+      .select(col("lang").as("key"), col("doc_id").cast("string").as("value")),
+      MapReduce.sortedJoinReduce, "vals")
+
+  def reduceIndexer(spark: SparkSession, dir: String): DataFrame =
+    reduced(docSubset(graft.Tables.documents(spark, dir))
+      .select(Tokenizer.words(col("text")).as("key"),
+        col("doc_id").cast("string").as("value"))
+      .distinct(),
+      MapReduce.indexerReduce, "entry")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mr_wordcount" -> onDocs(wordCount),

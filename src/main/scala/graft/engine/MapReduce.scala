@@ -63,8 +63,18 @@ object MapReduce {
   def runJob(input: Dataset[KV], mapF: MapF, reduceF: ReduceF,
       nReduce: Int = 10): Dataset[KV] = {
     import input.sparkSession.implicits._
-    input
-      .flatMap(kv => mapF(kv.key, kv.value))
+    reduce(input.flatMap(kv => mapF(kv.key, kv.value)), reduceF, nReduce)
+  }
+
+  /** The reduce stage alone, over already-built `(key, value)` pairs: one
+    * hash exchange on `key` into `nReduce` buckets, a sort of each bucket
+    * on `key`, and one walk per bucket that calls `reduceF` once per run
+    * of equal keys. [[runJob]] and the gated `mr_reduce_*` twins
+    * ([[graft.apps.MrApps]]) both reduce through it. */
+  def reduce(pairs: Dataset[KV], reduceF: ReduceF,
+      nReduce: Int = 10): Dataset[KV] = {
+    import pairs.sparkSession.implicits._
+    pairs
       .repartition(nReduce, col("key"))
       .sortWithinPartitions("key")
       .mapPartitions { sorted =>
@@ -136,12 +146,13 @@ object MapReduce {
       .select(col("Key").as("key"), col("Value").as("value")).as[KV]
   }
 
-  // ---- The reference's 8 mrapps expressed through the generic façade ----
-  // (used by specs to prove the UDF surface; the production pipelines in
-  // graft.apps.MrApps express the same semantics declaratively.)
+  // ---- The reference's mrapps map/reduce closures for the façade ----
+  // (graft.apps.MrRun, the specs and perfbench run them through `runJob`;
+  // the reduces also back the gated `mr_reduce_*` twins in
+  // graft.apps.MrApps, through `reduce`.)
 
   private def tokenize(s: String): Seq[String] =
-    s.split("[^\\p{L}]+").filter(_.nonEmpty).toSeq
+    s.split(Tokenizer.UnicodePattern).filter(_.nonEmpty).toSeq
 
   /** wc.go map/reduce. */
   val wcMap: MapF = (_, contents) => tokenize(contents).map(KV(_, "1"))

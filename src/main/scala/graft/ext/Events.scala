@@ -1099,4 +1099,54 @@ object Events {
        |           * CAST(n_pairs * syy - sy * sy AS DOUBLE)) END AS r
        |FROM m""".stripMargin
   }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "events_windowed_agg" -> (windowedAgg _),
+    "events_sliding_agg" -> (slidingAgg _),
+    "events_json_stats" -> (jsonStats _),
+    "events_gapfill_hourly" -> (gapfillHourly _),
+    "events_hourly_anomaly" -> (hourlyAnomaly _),
+    "events_mad_hourly" -> (madHourly _),
+    "events_throttle_hourly" -> (throttleHourly _),
+    "events_ewma_hourly" -> (ewmaHourly _),
+    "events_cusum_hourly" -> (cusumHourly _),
+    "events_cusum_changepoints" -> (cusumChangepoints _),
+    "events_dow_hour_heatmap" -> (dowHourHeatmap _),
+    "events_trend_ols" -> (trendOls _),
+    "events_scd2_user_type" -> (scd2UserType _),
+    "events_autocorr_hourly" -> (autocorrHourly _),
+    "events_click_attribution" -> (clickAttribution _),
+    "events_minute_full_outer" -> (minuteFullOuter _),
+    "events_out_of_order" -> (outOfOrder _),
+    "lineitem_price_quantiles" -> (priceQuantiles _),
+    "events_sessionize" -> (sessionize _),
+    "events_session_durations" -> (sessionDurations _),
+    "events_markov_transitions" -> (markovTransitions _),
+    "events_markov_stationary" -> (markovStationary _))
+
+  val oracles: Map[String, String] = Map(
+    "events_windowed_agg" -> windowedAggSql,
+    "events_sliding_agg" -> slidingAggSql,
+    "events_json_stats" -> jsonStatsSql,
+    "events_gapfill_hourly" -> gapfillHourlySql,
+    "events_hourly_anomaly" -> hourlyAnomalySql,
+    "events_mad_hourly" -> madHourlySql,
+    "events_throttle_hourly" -> throttleHourlySql,
+    "events_ewma_hourly" -> ewmaHourlySql,
+    "events_cusum_hourly" -> cusumHourlySql,
+    "events_cusum_changepoints" -> cusumChangepointsSql,
+    "events_dow_hour_heatmap" -> dowHourHeatmapSql,
+    "events_trend_ols" -> trendOlsSql,
+    "events_scd2_user_type" -> scd2UserTypeSql,
+    "events_autocorr_hourly" -> autocorrHourlySql,
+    "events_click_attribution" -> clickAttributionSql,
+    "events_minute_full_outer" -> minuteFullOuterSql,
+    "events_out_of_order" -> outOfOrderSql,
+    "lineitem_price_quantiles" -> priceQuantilesSql,
+    "events_sessionize" -> sessionizeSql,
+    "events_session_durations" -> sessionDurationsSql,
+    "events_markov_transitions" -> markovTransitionsSql,
+    // Unrolled power-iteration chain (see Pca's top-component oracle):
+    // materialized so each rk/pk step computes once in the oracle engine.
+    "events_markov_stationary" -> Hashing.materializeCtes(markovStationarySql))
 }

@@ -1080,6 +1080,13 @@ object Relational {
       |FROM d2""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "q1_pricing_summary" -> (q1PricingSummary _),
+    "q3_top_orders" -> (q3TopOrders _),
+    "q5_region_volume" -> (q5RegionVolume _),
+    "top_orders_per_customer" -> (topOrdersPerCustomer _),
+    "orders_rollup" -> (ordersRollup _),
+    "customers_without_orders" -> (customersWithoutOrders _),
+    "nations_with_customers" -> (nationsWithCustomers _),
     "orders_revenue_7d" -> (ordersRevenue7d _),
     "q4_priority_count" -> (q4PriorityCount _),
     "q8_market_share" -> (q8MarketShare _),
@@ -1106,6 +1113,13 @@ object Relational {
     "q19_disjunctive" -> (q19Disjunctive _))
 
   val oracles: Map[String, String] = Map(
+    "q1_pricing_summary" -> q1Sql,
+    "q3_top_orders" -> q3Sql,
+    "q5_region_volume" -> q5Sql,
+    "top_orders_per_customer" -> topOrdersSql,
+    "orders_rollup" -> ordersRollupSql,
+    "customers_without_orders" -> customersWithoutOrdersSql,
+    "nations_with_customers" -> nationsWithCustomersSql,
     "orders_revenue_7d" -> ordersRevenue7dSql,
     "q4_priority_count" -> q4Sql,
     "q8_market_share" -> q8Sql,

@@ -69,39 +69,6 @@ object KvReplay {
 
   // ------------------- replay across a shard reconfiguration (C6+A8) ---
 
-  /** [[replay]] with an explicit routing column: ops are partitioned by
-    * (owning replica group, key) — the data-plane rendering of "each
-    * group serves its shards" — and folded per key run. Key runs stay
-    * contiguous under the (gid, key, seq) sort because a key lives in
-    * exactly one shard, hence one group, per configuration. */
-  private def replayRouted(ops: DataFrame, gid: org.apache.spark.sql.Column)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val mutating = ops.filter(col("op") =!= "get")
-      .withColumn("gid", gid)
-      .repartition(col("gid"), col("key"))
-      .sortWithinPartitions(col("gid"), col("key"), col("seq"))
-      .select(col("gid"), col("key"), col("op"), col("value"))
-      .as[(Long, String, String, String)]
-    mutating.mapPartitions { it =>
-      new Iterator[(Long, String, String)] {
-        private var cur: Option[(Long, String, String, String)] =
-          if (it.hasNext) Some(it.next()) else None
-        def hasNext: Boolean = cur.isDefined
-        def next(): (Long, String, String) = {
-          val (gid, key) = (cur.get._1, cur.get._2)
-          val sb = new StringBuilder
-          while (cur.isDefined && cur.get._1 == gid && cur.get._2 == key) {
-            val (_, _, op, v) = cur.get
-            if (op == "put") { sb.clear(); sb.append(v) } else sb.append(v)
-            cur = if (it.hasNext) Some(it.next()) else None
-          }
-          (gid, key, sb.toString)
-        }
-      }
-    }.toDF("gid", "key", "value")
-  }
-
   /** The two-config history the resharded gate replays across: three
     * groups join, then group 101 leaves — both transitions exercise the
     * controller's minimal-movement rebalance, and the leave forces real
@@ -119,41 +86,24 @@ object KvReplay {
       (Sharding.key2shard(key) + 1).cast("int"))
 
   /** The last un-executable [SPEC] behavior rendered as a gated query:
-    * replay the op log ACROSS a shard-config change. The log splits at
-    * its seq midpoint (derived from the data, so both engines split
-    * identically at any SF); epoch-1 ops are routed and folded under
-    * [[cfgBefore]]'s shard→group map, the resulting per-key state is
-    * HANDED OFF to each key's NEW owner under [[cfgAfter]] (a synthetic
-    * `put` at the boundary seq — exactly the state-transfer a shardkv
-    * migration ships, `/root/reference/src/shardkv/client.go:62-122`
-    * routes per-config while state stays key-local), and epoch-2 ops
-    * fold on top under the new routing. Because state is key-local, the
-    * per-key result must be IDENTICAL to the config-free replay — which
-    * is precisely what the DuckDB oracle computes, so the hash gate
-    * proves reconfiguration-transparency rather than assuming it.
-    *
-    * Scale shape: two routed folds (one shuffle each, same secondary-
-    * sort pattern as [[replay]]) plus one broadcast scalar for the
-    * boundary; the handoff frame is |keys|, not |ops|. */
+    * replay the op log ACROSS a shard-config change. Epoch-1 ops (up to
+    * the seq midpoint) fold under [[cfgBefore]]'s owners, each key's state
+    * is HANDED OFF to its owner under [[cfgAfter]] as a `put` at the
+    * boundary seq (the state-transfer a shardkv migration ships,
+    * the reference's `src/shardkv/client.go:62-122`), and epoch-2 ops fold
+    * on top. That is exactly [[snapshotThenReplay]]: under one config a
+    * key's group is a function of the key, so folding per (group, key)
+    * is folding per key, and the hand-off `put` is the snapshot `put`.
+    * State is key-local, so the values must equal the config-free replay
+    * — what the DuckDB oracle computes — and the hash gate proves
+    * reconfiguration-transparency rather than assuming it. */
   def replayResharded(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s: SparkSession = spark
-    val ops = opsFromEvents(graft.Tables.events(spark, sfDir))
-    val mid = ops.agg(expr("(min(seq) + max(seq)) div 2").as("mid"))
-    val withMid = ops.crossJoin(broadcast(mid))
-    val e1 = withMid.filter(col("seq") <= col("mid"))
-      .select("seq", "key", "op", "value")
-    val state1 = replayRouted(e1, gidOf(cfgBefore, col("key")))
-    val handoff = state1.crossJoin(broadcast(mid))
-      .select(col("mid").as("seq"), col("key"), lit("put").as("op"),
-        col("value"))
-    val e2 = withMid.filter(col("seq") > col("mid"))
-      .select("seq", "key", "op", "value")
-    val fin = replayRouted(handoff.unionByName(e2),
-      gidOf(cfgAfter, col("key")))
-    fin.select(col("key"), col("value"),
-      Sharding.key2shard(col("key")).as("shard"),
-      gidOf(cfgBefore, col("key")).as("gid_before"),
-      col("gid").as("gid_after"))
+    snapshotThenReplay(opsFromEvents(graft.Tables.events(spark, sfDir)))
+      .select(col("key"), col("value"),
+        Sharding.key2shard(col("key")).as("shard"),
+        gidOf(cfgBefore, col("key")).as("gid_before"),
+        gidOf(cfgAfter, col("key")).as("gid_after"))
       .withColumn("migrated", col("gid_before") =!= col("gid_after"))
   }
 
@@ -211,9 +161,6 @@ object KvReplay {
        |FROM sh""".stripMargin
   }
 
-  /** DuckDB oracle: last put per key, then appends after it, in seq order.
-    * Aggregates skip NULLs, so the CASE projections align exactly with the
-    * fold above. */
   // ---------------------------------------- point-in-time (MVCC) read ---
 
   /** Time-travel replay — "what did this key hold at time T": the
@@ -380,6 +327,9 @@ object KvReplay {
        |  CAST(COALESCE(d.n_dups_dropped, 0) AS BIGINT) AS n_dups_dropped
        |FROM plain p LEFT JOIN d ON p.key = d.key""".stripMargin
 
+  /** DuckDB oracle: last put per key, then appends after it, in seq order.
+    * Aggregates skip NULLs, so the CASE projections align exactly with the
+    * fold of [[replay]]. */
   val oracleSql: String =
     """WITH ops AS (
       |  SELECT event_id AS seq, CAST(user_id AS VARCHAR) AS key,
@@ -397,4 +347,20 @@ object KvReplay {
       |  coalesce(string_agg(CASE WHEN op = 'append' AND (last_put IS NULL OR seq > last_put) THEN val END, '' ORDER BY seq), '')
       |    AS value
       |FROM w GROUP BY key""".stripMargin
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "kv_replay" -> (fromEvents _),
+    "kv_replay_resharded" -> (replayResharded _),
+    "kv_replay_snapshot" -> (replaySnapshotted _),
+    "kv_replay_ttl" -> (replayTtl _),
+    "kv_replay_asof" -> (replayAsOf _),
+    "kv_replay_idempotent" -> (replayIdempotent _))
+
+  val oracles: Map[String, String] = Map(
+    "kv_replay" -> oracleSql,
+    "kv_replay_resharded" -> reshardedOracleSql,
+    "kv_replay_snapshot" -> oracleSql,
+    "kv_replay_ttl" -> ttlOracleSql,
+    "kv_replay_asof" -> asOfOracleSql,
+    "kv_replay_idempotent" -> idempotentOracleSql)
 }

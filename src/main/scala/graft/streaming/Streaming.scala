@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
@@ -32,9 +33,6 @@ import graft.kv.KvOp
   * outgrows executor heaps long before it outgrows local disk.
   */
 object Streaming {
-
-  private def checkpoint(): String =
-    Files.createTempDirectory("graft-ckpt-").toString
 
   /** Streaming state-partition count (see the conf comment in
     * [[runToParquet]]); a dial, raised with state volume in production. */
@@ -103,18 +101,25 @@ object Streaming {
     // its constructor, so the running query keeps `stateParts` while
     // the session setting is restored before the batches run. Two
     // interleaved windows would restore each other's `stateParts`.
-    val q = startWindow.synchronized {
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", stateParts)
-      try updates.writeStream
-        .foreachBatch(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }
-    q.awaitTermination()
+    //
+    // The checkpoint lives as long as the run: a terminated AvailableNow
+    // query never reads it again, so it is deleted on success and on
+    // failure alike.
+    val ckpt = Files.createTempDirectory("graft-ckpt-")
+    try {
+      val q = startWindow.synchronized {
+        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", stateParts)
+        try updates.writeStream
+          .foreachBatch(sink)
+          .outputMode(mode)
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
+      q.awaitTermination()
+    } finally FileUtils.deleteQuietly(ckpt.toFile)
     // A source with zero rows can legitimately produce zero batches —
     // the sink dir is then empty and read.parquet cannot infer a
     // schema. "No data yet" is an empty result, not an error.

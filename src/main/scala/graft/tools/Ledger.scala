@@ -2,6 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.Try
+
 import graft.SparkEntry
 
 /** Generates LEDGER.md — the key → (module, file, oracle-kind) table
@@ -20,14 +22,22 @@ object Ledger {
     * (r10 advisory: `queries = modules.map(_._2).reduce(_ ++ _)`
     * silently last-wins on duplicate keys, and these checks only ran
     * when someone manually regenerated LEDGER.md). Throws on any
-    * drift: duplicate key across modules, module file missing, oracle
-    * without a query, or registry != SparkEntry.queries. */
-  def checkedRows(repo: String): Seq[(String, String, String)] = {
+    * drift: a module name listed twice or not naming its object
+    * `graft.<name>`, duplicate key across modules, module file missing,
+    * oracle without a query, or registry != SparkEntry.queries. */
+  def checkedRows(repo: String, modules: Seq[(String, SparkEntry.Q,
+      Map[String, String])] = SparkEntry.modules): Seq[(String, String, String)] = {
+    val names = modules.map(_._1)
+    require(names.distinct == names, "ledger drift: module listed twice: " +
+      names.diff(names.distinct).distinct.mkString(", "))
+    for (module <- names)
+      require(module.matches("[a-z]+\\.[A-Z][A-Za-z0-9]*") &&
+        Try(Class.forName(s"graft.$module$$")).isSuccess,
+        s"ledger drift: module name $module is not a graft.<pkg>.<Object>")
     val rows = collection.mutable.ArrayBuffer[(String, String, String)]()
     val seen = collection.mutable.Map[String, String]()
-    for ((module, qs, os) <- SparkEntry.modules) {
-      val file = "src/main/scala/graft/" +
-        module.replace(" (classic)", "").replace('.', '/') + ".scala"
+    for ((module, qs, os) <- modules) {
+      val file = "src/main/scala/graft/" + module.replace('.', '/') + ".scala"
       require(Files.exists(Paths.get(repo, file)),
         s"ledger drift: module $module maps to missing file $file")
       for (k <- qs.keys) {

@@ -8,13 +8,28 @@ import org.scalatest.funsuite.AnyFunSuite
   * live in the manually-run Ledger main. No SparkSession needed. */
 class LedgerGuardSpec extends AnyFunSuite {
 
+  private val repo = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir"))
+
   test("module key sets are pairwise disjoint and oracles have queries") {
     // checkedRows throws on: duplicate key across modules, module file
     // missing, oracle-without-query orphan, registry != queries fold.
-    val rows = tools.Ledger.checkedRows(
-      sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", sys.props("user.dir")))
+    val rows = tools.Ledger.checkedRows(repo)
     assert(rows.nonEmpty)
     assert(rows.map(_._1).distinct.size == rows.size)
+  }
+
+  test("each module name appears once and is its object's name") {
+    // A label is the object `graft.<pkg>.<Object>` and maps to its file
+    // with no rewriting, so a "(classic)"-style split of one module's
+    // keys under a second label cannot come back.
+    val mods = SparkEntry.modules
+    val names = mods.map(_._1)
+    assert(names.distinct == names)
+    def plus(name: String) =
+      mods :+ ((name, Map.empty: SparkEntry.Q, Map.empty[String, String]))
+    for (bad <- Seq(plus("ext.Relational (classic)"), plus(names.head)))
+      assert(intercept[IllegalArgumentException](
+        tools.Ledger.checkedRows(repo, bad)).getMessage.contains("ledger drift: module"))
   }
 
   test("every query key has an oracle (no silent rows-only downgrades)") {

@@ -49,13 +49,7 @@ class ObjectAggSweepSpec extends SparkSpec {
     val contract = Seq("mr_inverted_index", "mr_sorted_concat",
       "mr_constant_tuples")
       .map(_ -> "reference A1/A3/A4: the output IS the per-key value list")
-    // GenericReduce UDAF: materializes group values BY CONTRACT
-    // (non-monoid reduce façade); per-group multiplicity bounded by the
-    // 1-in-20 doc subset all three twins now run on.
-    val generic = Seq("mr_reduce_count", "mr_reduce_indexer",
-      "mr_reduce_sorted_concat")
-      .map(_ -> "GenericReduce contract; 1-in-20 doc subset bounds groups")
-    (vocabRow ++ centroid ++ heap ++ contract ++ generic).toMap
+    (vocabRow ++ centroid ++ heap ++ contract).toMap
   }
 
   test("no ObjectHashAggregate on an SF-growing input anywhere in the surface") {

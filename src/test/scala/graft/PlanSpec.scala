@@ -189,6 +189,36 @@ class PlanSpec extends SparkSpec {
     assert(ds.rdd.getNumPartitions == 10)
   }
 
+  test("generic-reduce twins: the façade's reduce — key exchange, key sort, no aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    object H extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // The indexer's per-document distinct brings its own exchange below.
+    val twins = Map("mr_reduce_count" -> 1, "mr_reduce_sorted_concat" -> 1,
+      "mr_reduce_indexer" -> 2)
+    for ((name, nExchanges) <- twins) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect() // finalize the adaptive plan
+      val exec = df.queryExecution.executedPlan
+      val p = exec.toString
+      val exchanges = H.collect(exec) { case e: Exchange => e }
+      assert(exchanges.size == nExchanges, s"$name exchanges:\n$p")
+      val keyed = exchanges.filter(_.outputPartitioning match {
+        case HashPartitioning(Seq(k: Attribute), 10) => k.name == "key"
+        case _ => false
+      })
+      assert(keyed.size == 1, s"$name: expected hashpartitioning(key, 10):\n$p")
+      val sorts = H.collect(exec) { case s: SortExec => s }
+      assert(sorts.exists(s => s.sortOrder.map(_.child).collect {
+        case k: Attribute => k.name } == Seq("key") &&
+        H.collect(s) { case e: Exchange => e }.contains(keyed.head)),
+        s"$name: expected a Sort on key above the key exchange:\n$p")
+      assert(!p.contains("ObjectHashAggregate"), s"$name:\n$p")
+    }
+  }
+
   /** Column sets actually read by the plan's scans. When another suite
     * cached the table, the InMemoryTableScan line is the authoritative
     * pruned read (the FileScan inside the cached relation keeps all

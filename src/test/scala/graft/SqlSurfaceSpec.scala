@@ -2,18 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.GenericReduce
-
-/** The engine's SQL surface: the graft_* native expressions and the
-  * generic-reduce UDAFs are registered in the session function registry,
-  * so everything is drivable from `spark.sql` strings, not just the
-  * DataFrame API. */
+/** The engine's SQL surface: the graft_* native expressions are installed
+  * in the session function registry by `GraftExtensions`, so they are
+  * drivable from `spark.sql` strings, not just the DataFrame API; plus
+  * window-frame semantics checked through the relational queries. */
 class SqlSurfaceSpec extends SparkSpec {
 
-  private lazy val ready: Unit = {
+  private lazy val ready: Unit =
     Tables.documents(spark, sf).createOrReplaceTempView("documents_v")
-    GenericReduce.register(spark)
-  }
 
   test("native expressions are callable from SQL") {
     ready
@@ -36,32 +32,6 @@ class SqlSurfaceSpec extends SparkSpec {
         |FROM documents_v""".stripMargin)
       .filter(col("self_inter") =!= col("n_sh")).count()
     assert(n == 0) // |A ∩ A| == |A|
-  }
-
-  test("generic Reduce UDAF from SQL == mrapps pipelines") {
-    ready
-    // wordcount through the SQL aggregate...
-    val viaUdaf = spark.sql(
-      """SELECT word AS key, mr_reduce_count(word, '1') AS cnt FROM (
-        |  SELECT explode(filter(split(text, '[^a-zA-Z]+'), t -> length(t) > 0)) AS word
-        |  FROM documents_v)
-        |GROUP BY word""".stripMargin)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    // ...equals the declarative pipeline (count rendered as string,
-    // matching the reference's all-string dataflow).
-    val viaApp = apps.MrApps.wordCount(Tables.documents(spark, sf))
-      .collect().map(r => r.getString(0) -> r.getLong(1).toString).toMap
-    assert(viaUdaf == viaApp)
-
-    // Non-monoid sorted-concat through SQL equals the declarative app.
-    val concatSql = spark.sql(
-      """SELECT lang AS key,
-        |  mr_reduce_sorted_concat(lang, CAST(doc_id AS STRING)) AS vals
-        |FROM documents_v GROUP BY lang""".stripMargin)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val concatApp = apps.MrApps.sortedConcat(Tables.documents(spark, sf))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(concatSql == concatApp)
   }
 
   test("distribution windows: exact rational ranks under the total order") {

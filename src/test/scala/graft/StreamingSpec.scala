@@ -32,6 +32,20 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a gated streaming query leaves no checkpoint directory behind") {
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def ckpts(): Set[String] = {
+      val l = Files.list(tmp)
+      try l.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft-ckpt-")).toSet
+      finally l.close()
+    }
+    val before = ckpts()
+    assert(Streaming.queries("kv_replay_stream")(spark, sf).count() > 0)
+    assert(ckpts() == before)
+  }
+
   test("kv mapGroupsWithState across micro-batches == batch replay") {
     val src = tempDir("graft-kv-stream-").toString
     writeOpFiles(src)
