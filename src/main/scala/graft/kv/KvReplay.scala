@@ -11,6 +11,23 @@ import org.apache.spark.sql.functions._
   */
 case class KvOp(seq: Long, key: String, op: String, value: String)
 
+object KvOp {
+
+  /** The store's one state transition, applied to `(op, value)` pairs
+    * in seq order: `put` replaces the state, `append` concatenates,
+    * `get` leaves it unchanged. Every replay — the batch walk, the
+    * in-order stream fold and the event-time stream replay — folds
+    * through here. */
+  def fold(state: String, ops: IterableOnce[(String, String)]): String = {
+    val sb = new StringBuilder(state)
+    ops.iterator.foreach { case (op, v) =>
+      if (op == "put") { sb.clear(); sb.append(v) }
+      else if (op == "append") sb.append(v)
+    }
+    sb.toString
+  }
+}
+
 object KvReplay {
 
   /** Derive a deterministic op log from the driver's `events` table
@@ -44,19 +61,16 @@ object KvReplay {
       .sortWithinPartitions(col("key"), col("seq"))
       .select(col("key"), col("op"), col("value")).as[(String, String, String)]
     mutating.mapPartitions { it =>
+      val rows = it.buffered
       new Iterator[(String, String)] {
-        private var cur: Option[(String, String, String)] =
-          if (it.hasNext) Some(it.next()) else None
-        def hasNext: Boolean = cur.isDefined
+        def hasNext: Boolean = rows.hasNext
         def next(): (String, String) = {
-          val key = cur.get._1
-          val sb = new StringBuilder
-          while (cur.isDefined && cur.get._1 == key) {
-            val (_, op, v) = cur.get
-            if (op == "put") { sb.clear(); sb.append(v) } else sb.append(v)
-            cur = if (it.hasNext) Some(it.next()) else None
+          val key = rows.head._1
+          val run = new Iterator[(String, String)] {
+            def hasNext: Boolean = rows.hasNext && rows.head._1 == key
+            def next(): (String, String) = { val r = rows.next(); (r._2, r._3) }
           }
-          (key, sb.toString)
+          (key, KvOp.fold("", run))
         }
       }
     }.toDF("key", "value")

@@ -1,9 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
@@ -123,24 +126,23 @@ object Streaming {
     // A source with zero rows can legitimately produce zero batches —
     // the sink dir is then empty and read.parquet cannot infer a
     // schema. "No data yet" is an empty result, not an error.
-    val target = java.nio.file.Paths.get(
-      if (complete) s"$outDir/latest" else outDir)
-    val hasOutput = Files.exists(target) && {
-      val listing = Files.list(target)
-      try listing.findFirst().isPresent finally listing.close()
-    }
-    if (!hasOutput)
+    val target = Paths.get(if (complete) s"$outDir/latest" else outDir)
+    if (!Files.exists(target) || entries(target).isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], updates.schema)
     else if (complete) spark.read.parquet(s"$outDir/latest")
     else spark.read.parquet(outDir).drop("batch")
   }
 
-  /** Stream the events parquet as micro-batches, normalizing `ts` the same
-    * way Tables.events does (to timestamp_ntz micros).
-    * The file source requires a directory, so the (read-only) single-file
-    * table is staged into a temp dir first — in production the ingest
-    * path IS a directory that files land in. */
+  /** A directory's entries, sorted by name: `Files.list` order is
+    * filesystem-dependent, and part-file NAME order is the order the
+    * in-order streaming contract (§7.7.5) rides on. */
+  private def entries(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+    finally listing.close()
+  }
+
   private val stagedSrc =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -151,20 +153,11 @@ object Streaming {
     * `df.write.parquet` produces). Cached per (sfDir, table). */
   private def staged(sfDir: String, table: String): String =
     stagedSrc.computeIfAbsent(s"$sfDir/$table", { _ =>
-      import scala.jdk.CollectionConverters._
       val d = Files.createTempDirectory("graft-stream-src-")
-      val src = java.nio.file.Paths.get(s"$sfDir/$table.parquet")
+      val src = Paths.get(s"$sfDir/$table.parquet")
       if (Files.isDirectory(src)) {
-        // Sort by filename: Files.list order is filesystem-dependent,
-        // and part-file NAME order is the seq order the in-order
-        // streaming contract (§7.7.5) rides on — an arbitrary listing
-        // could stage later parts as earlier files.
-        val listing = Files.list(src)
         val parts =
-          try listing.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .toSeq.sortBy(_.getFileName.toString)
-          finally listing.close()
+          entries(src).filter(_.getFileName.toString.endsWith(".parquet"))
         parts.zipWithIndex.foreach { case (p, i) =>
           // Explicit ascending mtimes: the source sorts by mtime (see
           // [[stamp]]); two sub-millisecond copies could otherwise tie
@@ -175,13 +168,28 @@ object Streaming {
       d.toString
     })
 
-  def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = staged(sfDir, "events")
-    // Schema from the staged file itself, read the way the batch table
-    // is, so normalizeEventTs sees the same `ts` type on both paths.
-    val stagedSchema = spark.read.parquet(dir).schema
-    Tables.normalizeEventTs(spark.readStream.schema(stagedSchema).parquet(dir))
-  }
+  /** A file-source stream over a staged directory. The schema comes from
+    * the staged files themselves, read the way the batch table is, never
+    * from the raw source file: the daily staging rewrites `ts` through
+    * Tables.events (always timestamp_ntz micros), so a raw
+    * TIMESTAMP(NANOS) file read under nanosAsLong would hand readStream a
+    * LongType spec for micros data and normalizeEventTs would divide by
+    * 1000 AGAIN. Deriving the spec from the staged files makes the two
+    * sides definitionally agree. */
+  private def stagedStream(spark: SparkSession, dir: String,
+      options: Map[String, String] = Map.empty): DataFrame =
+    spark.readStream.schema(spark.read.parquet(dir).schema)
+      .options(options).parquet(dir)
+
+  /** Stream the events table as micro-batches of its staged copy,
+    * normalizing `ts` the way Tables.events does (to timestamp_ntz
+    * micros). */
+  def eventStream(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.normalizeEventTs(stagedStream(spark, staged(sfDir, "events")))
+
+  /** The documents table as a stream, one micro-batch of its staged copy. */
+  private def documentStream(spark: SparkSession, sfDir: String): DataFrame =
+    stagedStream(spark, staged(sfDir, "documents"))
 
   private val chunkStagedSrc =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -202,35 +210,30 @@ object Streaming {
     * event-time order. */
   private def stagedDaily(spark: SparkSession, sfDir: String): String =
     chunkStagedSrc.computeIfAbsent(s"$sfDir/events", { _ =>
-      import scala.jdk.CollectionConverters._
       val d = Files.createTempDirectory("graft-stream-days-")
+      // The write's scratch directory: once the days have moved out it
+      // holds only markers, checksums and empty `chunk=` directories.
       val tmp = Files.createTempDirectory("graft-stream-days-tmp-")
-      Tables.events(spark, sfDir)
-        .withColumn("chunk", date_format(col("ts"), "yyyyMMdd"))
-        .repartition(col("chunk"))
-        .sortWithinPartitions(col("ts"), col("event_id"))
-        .write.partitionBy("chunk").mode("overwrite").parquet(tmp.toString)
-      val dayDirs = {
-        val listing = Files.list(tmp)
-        try listing.iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith("chunk="))
-          .toSeq.sortBy(_.getFileName.toString)
-        finally listing.close()
-      }
-      dayDirs.zipWithIndex.foreach { case (dayDir, i) =>
-        val listing = Files.list(dayDir)
-        val parts =
-          try listing.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          finally listing.close()
-        // One partition holds a whole day (repartition by chunk), so a
-        // day dir has exactly one ts-sorted file; >1 would mean two
-        // files of the SAME day whose cross-file order is undefined —
-        // fail loudly rather than stage a disordered stream.
-        require(parts.size == 1,
-          s"day ${dayDir.getFileName} staged as ${parts.size} files")
-        stamp(Files.move(parts.head, d.resolve(f"part-$i%05d.parquet")), i)
-      }
+      try {
+        Tables.events(spark, sfDir)
+          .withColumn("chunk", date_format(col("ts"), "yyyyMMdd"))
+          .repartition(col("chunk"))
+          .sortWithinPartitions(col("ts"), col("event_id"))
+          .write.partitionBy("chunk").mode("overwrite").parquet(tmp.toString)
+        val dayDirs =
+          entries(tmp).filter(_.getFileName.toString.startsWith("chunk="))
+        dayDirs.zipWithIndex.foreach { case (dayDir, i) =>
+          val parts =
+            entries(dayDir).filter(_.getFileName.toString.endsWith(".parquet"))
+          // One partition holds a whole day (repartition by chunk), so a
+          // day dir has exactly one ts-sorted file; >1 would mean two
+          // files of the SAME day whose cross-file order is undefined —
+          // fail loudly rather than stage a disordered stream.
+          require(parts.size == 1,
+            s"day ${dayDir.getFileName} staged as ${parts.size} files")
+          stamp(Files.move(parts.head, d.resolve(f"part-$i%05d.parquet")), i)
+        }
+      } finally FileUtils.deleteQuietly(tmp.toFile)
       d.toString
     })
 
@@ -243,7 +246,7 @@ object Streaming {
     * Deterministic minute-spaced stamps make mtime order = name order =
     * event-time order — the in-order contract (§7.7.5) enforced on the
     * axis the source actually sorts by. */
-  private[graft] def stamp(p: java.nio.file.Path, i: Int): Unit =
+  private[graft] def stamp(p: Path, i: Int): Unit =
     Files.setLastModifiedTime(p,
       java.nio.file.attribute.FileTime.fromMillis(1600000000000L + i * 60000L))
 
@@ -259,34 +262,22 @@ object Streaming {
     * join). Values are batching-invariant: the sources are time-ordered
     * so no row is ever late to its own batch's watermark, and both join
     * sides read the same files per trigger. */
-  def eventStreamDaily(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = stagedDaily(spark, sfDir)
-    // Schema from the STAGED files themselves, never the raw source
-    // file: staging rewrites ts through Tables.events (always
-    // timestamp_ntz micros), so a raw TIMESTAMP(NANOS) file read under
-    // nanosAsLong would hand readStream a LongType spec for micros data
-    // and normalizeEventTs would divide by 1000 AGAIN — silent
-    // timestamp corruption in this tier only.
-    // Deriving the spec from the staged write makes the two sides
-    // definitionally agree.
-    val stagedSchema = spark.read.parquet(dir).schema
-    Tables.normalizeEventTs(
-      spark.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", DailyFilesPerTrigger)
-        .parquet(dir))
-  }
+  def eventStreamDaily(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.normalizeEventTs(stagedStream(spark, stagedDaily(spark, sfDir),
+      Map("maxFilesPerTrigger" -> DailyFilesPerTrigger)))
 
   /** Streaming twin of Events.windowedAgg: tumbling-hour counts + exact
     * integer-cent sums per event type, complete mode through the parquet
     * sink. Same oracle as the batch query. */
-  def windowedAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = eventStream(spark, sfDir)
-      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        graft.ext.Events.centsSum(col("value")).as("sum_value"))
-    runToParquet(agg, OutputMode.Complete(), "windowed-agg")
-  }
+  def windowedAgg(spark: SparkSession, sfDir: String): DataFrame =
+    runToParquet(hourTotals(eventStream(spark, sfDir)
+      .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))),
+      OutputMode.Complete(), "windowed-agg")
+
+  /** Each group's event count and exact integer-cent value sum. */
+  private def hourTotals(groups: RelationalGroupedDataset): DataFrame =
+    groups.agg(count(lit(1)).as("cnt"),
+      graft.ext.Events.centsSum(col("value")).as("sum_value"))
 
   /** Watermarked tumbling windows in APPEND mode — the
     * closed-windows-only emission discipline (each window written
@@ -298,13 +289,10 @@ object Streaming {
     * comparison never sits on the boundary. Complete-mode twin:
     * [[windowedAgg]]. */
   def windowedAppendStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val agg = eventStream(spark, sfDir)
+    val agg = hourTotals(eventStream(spark, sfDir)
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        graft.ext.Events.centsSum(col("value")).as("sum_value"))
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type")))
       .select(col("w.start").cast("timestamp_ntz").as("hour"),
         col("event_type"), col("cnt"), col("sum_value"))
     runToParquet(agg, OutputMode.Append(), "windowed-append")
@@ -319,11 +307,31 @@ object Streaming {
        |  <= (SELECT max_ts FROM m) - INTERVAL 30 MINUTE
        |GROUP BY 1, 2""".stripMargin
 
+  /** The in-order contract (SURVEY.md §7.7.5), checked once for every
+    * in-order fold: sort one batch of `key`'s rows into the fold's
+    * `order` and fail when the first is behind the state's cursor —
+    * `behind(incoming, last)` is the fold's own rule. A batch that
+    * arrives out of order would otherwise be folded wrong in silence. */
+  private[streaming] def inOrder[R: ClassTag, O: Ordering, C](fold: String,
+      key: Any, rows: Iterator[R])(order: R => O, cursor: R => C, last: C)(
+      behind: (C, C) => Boolean): Array[R] = {
+    val sorted = rows.toArray.sortBy(order)
+    if (sorted.nonEmpty && behind(cursor(sorted.head), last))
+      throw new IllegalStateException(
+        s"out-of-order input to $fold for key $key: incoming " +
+          s"${cursor(sorted.head)} is behind last applied $last; deliver " +
+          "this source in order, or replay it by event time under a " +
+          "watermark (Streaming.kvReplayEventTime)")
+    sorted
+  }
+
   /** Streaming twin of KvReplay.replay: per-key fold over the op stream
     * with `mapGroupsWithState`. Within a micro-batch ops are sorted by
     * `seq`; across batches the file source delivers in file order (the
     * op log is seq-ordered — SURVEY.md §7.7.5 requires a monotonic seq
-    * per key, which event_id provides). Each update emits the running
+    * per key, which event_id provides), and an op at or below the last
+    * applied seq fails the query ([[inOrder]]). A `get` leaves the value
+    * as it is but still advances the seq. Each update emits the running
     * state stamped with the last applied seq, so the final state per key
     * is the max_by(last_seq) row — deterministic under ANY batching. */
   def kvReplayUpdates(ops: Dataset[KvOp]): DataFrame = {
@@ -332,25 +340,13 @@ object Streaming {
       .mapGroupsWithState[(String, Long), (String, String, Long)](
         GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[KvOp], state: GroupState[(String, Long)]) =>
-          val sorted = it.toArray.sortBy(_.seq)
-          var (cur, lastSeq) = state.getOption.getOrElse(("", -1L))
-          // In-order contract (§7.7.5) enforced at runtime: an op at or
-          // below the last applied seq means a batch arrived out of
-          // order — fail loudly instead of silently folding wrong.
-          // Out-of-order sources belong on kvReplayEventTimeUpdates.
-          if (sorted.nonEmpty && sorted.head.seq <= lastSeq)
-            throw new IllegalStateException(
-              s"kvReplayUpdates: out-of-order op for key '$key': incoming " +
-                s"seq ${sorted.head.seq} <= last applied $lastSeq; this " +
-                "source violates the in-order contract — use " +
-                "kvReplayEventTimeUpdates (watermarked) instead")
-          sorted.foreach { o =>
-            if (o.op == "put") cur = o.value
-            else if (o.op == "append") cur += o.value
-            lastSeq = o.seq
-          }
-          state.update((cur, lastSeq))
-          (key, cur, lastSeq)
+          val (cur, lastSeq) = state.getOption.getOrElse(("", -1L))
+          val sorted = inOrder("kvReplayUpdates", key, it)(
+            _.seq, _.seq, lastSeq)(_ <= _)
+          val next = (KvOp.fold(cur, sorted.iterator.map(o => (o.op, o.value))),
+            sorted.lastOption.fold(lastSeq)(_.seq))
+          state.update(next)
+          (key, next._1, next._2)
       }
       .toDF("key", "value", "last_seq")
   }
@@ -370,119 +366,115 @@ object Streaming {
       .agg(max_by(col("value"), col("last_seq")).as("value"))
   }
 
-  /** Streaming sessionization: per-user ">30 min gap starts a session"
-    * counting with `mapGroupsWithState`. State = (last event-time micros,
-    * n_sessions, n_events); each update is stamped with n_events (strictly
-    * increasing per user), so the final row per user is the max_by —
-    * deterministic under any batching, PROVIDED batches arrive in
-    * event-time order per user (§7.7.5 contract; holds for the seq-ordered
-    * source files here). */
-  def sessionizeUpdates(events: DataFrame): DataFrame = {
+  /** The (user_id, tsu, event_id) rows the per-user folds read, event
+    * time as epoch micros. */
+  private def userEvents(events: DataFrame): Dataset[(Long, Long, Long)] = {
     import events.sparkSession.implicits._
-    val typed = events.select(
+    events.select(
       col("user_id").cast("long"),
       unix_micros(col("ts").cast("timestamp")).as("tsu"),
       col("event_id").cast("long")).as[(Long, Long, Long)]
-    typed.groupByKey(_._1)
-      .mapGroupsWithState[(Long, Long, Long), (Long, Long, Long)](
+  }
+
+  /** Per-user session state: last applied event time (micros), sessions
+    * and events so far; `SessState()` is a user not seen yet. */
+  case class SessState(lastTs: Long = Long.MinValue, nSessions: Long = 0L,
+      nEvents: Long = 0L)
+
+  /** The sessionizer's one step, shared by both state APIs: fold one
+    * batch of a user's [[userEvents]] rows in (ts, event_id) order; a gap
+    * over 30 min starts a session. Gap counting needs event-time order
+    * per user (§7.7.5), so an event older than the last applied one
+    * fails the query. */
+  private[streaming] def sessionStep(uid: Long, state: SessState,
+      rows: Iterator[(Long, Long, Long)]): SessState = {
+    val sorted = inOrder("sessionize", uid, rows)(
+      e => (e._2, e._3), _._2, state.lastTs)(_ < _)
+    sorted.foldLeft(state) { case (s, (_, tsu, _)) =>
+      val gap = s.lastTs == Long.MinValue || tsu - s.lastTs > 1800000000L
+      SessState(tsu, s.nSessions + (if (gap) 1 else 0), s.nEvents + 1)
+    }
+  }
+
+  /** Streaming sessionization with `mapGroupsWithState`: each update is
+    * stamped with n_events (strictly increasing per user), so the final
+    * row per user is the max_by — deterministic under any batching,
+    * provided batches arrive in event-time order per user (holds for the
+    * seq-ordered source files here). */
+  def sessionizeUpdates(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    userEvents(events).groupByKey(_._1)
+      .mapGroupsWithState[SessState, (Long, Long, Long)](
         GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[(Long, Long, Long)],
-            state: GroupState[(Long, Long, Long)]) =>
-          val sorted = it.toArray.sortBy(e => (e._2, e._3))
-          var (lastTs, nSessions, nEvents) =
-            state.getOption.getOrElse((Long.MinValue, 0L, 0L))
-          // Same §7.7.5 runtime tripwire as kvReplayUpdates: an event
-          // older than the last applied event time means out-of-order
-          // batches — gap counting would silently miscount sessions.
-          if (sorted.nonEmpty && sorted.head._2 < lastTs)
-            throw new IllegalStateException(
-              s"sessionizeUpdates: out-of-order event for user $uid: " +
-                s"incoming ts ${sorted.head._2} < last applied $lastTs; " +
-                "use an event-time/watermarked variant for this source")
-          sorted.foreach { case (_, tsu, _) =>
-            if (lastTs == Long.MinValue || tsu - lastTs > 1800000000L)
-              nSessions += 1
-            lastTs = tsu
-            nEvents += 1
-          }
-          state.update((lastTs, nSessions, nEvents))
-          (uid, nSessions, nEvents)
+        (uid: Long, rows: Iterator[(Long, Long, Long)],
+            state: GroupState[SessState]) =>
+          val s = sessionStep(uid, state.getOption.getOrElse(SessState()), rows)
+          state.update(s)
+          (uid, s.nSessions, s.nEvents)
       }
       .toDF("user_id", "n_sessions", "n_events")
   }
 
-  /** Driver-gated entry; oracle = the batch sessionize oracle. */
-  def sessionizeStream(spark: SparkSession, sfDir: String): DataFrame =
-    runToParquet(sessionizeUpdates(eventStream(spark, sfDir)),
-      OutputMode.Update(), "sessionize")
+  /** Drain a sessionizer's updates and keep each user's latest counts. */
+  private def finalSessions(updates: DataFrame, name: String): DataFrame =
+    runToParquet(updates, OutputMode.Update(), name)
       .groupBy("user_id")
       .agg(max_by(col("n_sessions"), col("n_events")).as("n_sessions"),
         max(col("n_events")).as("n_events"))
+
+  /** Driver-gated entry; oracle = the batch sessionize oracle. */
+  def sessionizeStream(spark: SparkSession, sfDir: String): DataFrame =
+    finalSessions(sessionizeUpdates(eventStream(spark, sfDir)), "sessionize")
+
+  /** [[sessionizeUpdates]] on the transformWithState API (Spark 4's
+    * arbitrary-state surface): explicit named ValueState, the state
+    * schema evolvable and inspectable by the state reader. Same
+    * [[sessionStep]], same oracle. */
+  private class SessionizeProcessor
+      extends StatefulProcessor[Long, (Long, Long, Long), (Long, Long, Long)] {
+    @transient private var st: ValueState[SessState] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[SessState]("sess",
+        Encoders.product[SessState], TTLConfig.NONE)
+    override def handleInputRows(uid: Long, rows: Iterator[(Long, Long, Long)],
+        timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
+      val s = sessionStep(uid, if (st.exists()) st.get() else SessState(), rows)
+      st.update(s)
+      Iterator((uid, s.nSessions, s.nEvents))
+    }
+  }
+
+  private[graft] def sessionizeTwsUpdates(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    userEvents(events).groupByKey(_._1)
+      .transformWithState(new SessionizeProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "n_sessions", "n_events")
+  }
+
+  /** Driver-gated entry; oracle = the batch sessionize oracle. */
+  def sessionizeTwsStream(spark: SparkSession, sfDir: String): DataFrame =
+    finalSessions(sessionizeTwsUpdates(eventStream(spark, sfDir)),
+      "sessionize-tws")
 
   /** One timestamped KV op for the event-time replay path. */
   case class TimedOp(ts: java.sql.Timestamp, seq: Long, key: String,
       op: String, value: String)
 
-  /** Per-key replay state: applied value + the out-of-order buffer. */
-  case class KvEtState(value: String, applied: Long,
-      pending: List[(Long, Long, String, String)])
-
-  /** Event-time KV replay for OUT-OF-ORDER delivery — the production
-    * pattern when the in-order contract of [[kvReplayUpdates]] cannot be
-    * guaranteed: ops buffer in state until the event-time watermark
-    * passes them, then apply in (ts, seq) order. Late data inside the
-    * watermark delay is reordered correctly; data later than the delay
-    * is dropped by the watermark (the standard trade). Event-time
-    * timeouts flush keys that receive no further input, so the buffer
-    * drains without new per-key data.
-    *
-    * Emits (key, value, applied-count) updates; applied is strictly
-    * increasing per key, so max_by(applied) is the latest state. */
-  def kvReplayEventTimeUpdates(ops: Dataset[TimedOp],
-      delay: String): Dataset[(String, String, Long)] = {
-    import ops.sparkSession.implicits._
-    ops.withWatermark("ts", delay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[KvEtState, (String, String, Long)](
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: String, it: Iterator[TimedOp], state: GroupState[KvEtState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val st = state.getOption.getOrElse(KvEtState("", 0L, Nil))
-          val incoming = it.map(o => (o.ts.getTime, o.seq, o.op, o.value)).toList
-          val (ready, rest) = (st.pending ++ incoming).partition(_._1 <= wm)
-          var value = st.value
-          ready.sortBy(p => (p._1, p._2)).foreach { case (_, _, op, v) =>
-            if (op == "put") value = v else if (op == "append") value += v
-          }
-          state.update(KvEtState(value, st.applied + ready.size, rest))
-          if (rest.nonEmpty)
-            state.setTimeoutTimestamp(rest.map(_._1).min)
-          if (ready.nonEmpty) Iterator((key, value, st.applied + ready.size))
-          else Iterator.empty
-      }
-  }
-
-  /** One buffered out-of-order op in [[KvEventTimeProcessor]] state. */
-  case class PendingOp(tsMs: Long, seq: Long, op: String, value: String)
-
-  /** [[kvReplayEventTimeUpdates]] re-expressed on transformWithState
-    * with EVENT-TIME TIMERS — the modern form of the same pattern:
-    * ops buffer in explicit ListState until the watermark passes them;
-    * a registered event-time timer fires [[handleExpiredTimer]] when
-    * the watermark advances past the earliest buffered op even if the
-    * key receives no further input, so the buffer drains without new
-    * per-key data (the TWS twin of EventTimeTimeout). Spec-pinned
-    * equal to the flatMapGroupsWithState path on an out-of-order
-    * source. */
+  /** The state machine behind [[kvReplayEventTime]]: ops buffer in
+    * explicit ListState until the watermark passes them; a registered
+    * event-time timer fires [[handleExpiredTimer]] when the watermark
+    * advances past the earliest buffered op even if the key receives no
+    * further input, so the buffer drains without new per-key data. */
   private class KvEventTimeProcessor
       extends StatefulProcessor[String, TimedOp, (String, String, Long)] {
     @transient private var applied: ValueState[(String, Long)] = _
-    @transient private var pending: ListState[PendingOp] = _
+    @transient private var pending: ListState[TimedOp] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       applied = getHandle.getValueState[(String, Long)]("applied",
         Encoders.product[(String, Long)], TTLConfig.NONE)
-      pending = getHandle.getListState[PendingOp]("pending",
-        Encoders.product[PendingOp], TTLConfig.NONE)
+      pending = getHandle.getListState[TimedOp]("pending",
+        Encoders.product[TimedOp], TTLConfig.NONE)
     }
 
     /** Apply every op at-or-before the watermark in (ts, seq) order,
@@ -491,48 +483,52 @@ object Streaming {
       * full-list rewrite per batch — ListState.put is O(buffer) state
       * writes); a stale timer with nothing ready touches no state and
       * registers nothing. */
-    private def drain(key: String, incoming: List[PendingOp],
+    private def drain(key: String, incoming: List[TimedOp],
         wm: Long): Iterator[(String, String, Long)] = {
       val (ready, rest) =
-        (pending.get().toList ++ incoming).partition(_.tsMs <= wm)
+        (pending.get().toList ++ incoming).partition(_.ts.getTime <= wm)
       if (ready.isEmpty) {
         if (incoming.nonEmpty) {
           pending.appendList(incoming.toArray)
-          getHandle.registerTimer(rest.map(_.tsMs).min)
+          getHandle.registerTimer(rest.map(_.ts.getTime).min)
         }
         Iterator.empty
       } else {
         pending.clear()
         if (rest.nonEmpty) {
           pending.put(rest.toArray)
-          getHandle.registerTimer(rest.map(_.tsMs).min)
+          getHandle.registerTimer(rest.map(_.ts.getTime).min)
         }
-        var (value, n) = if (applied.exists()) applied.get() else ("", 0L)
-        ready.sortBy(p => (p.tsMs, p.seq)).foreach { p =>
-          if (p.op == "put") value = p.value
-          else if (p.op == "append") value += p.value
-        }
-        n += ready.size
-        applied.update((value, n))
-        Iterator((key, value, n))
+        val (value, n) = if (applied.exists()) applied.get() else ("", 0L)
+        val next = (KvOp.fold(value, ready.sortBy(p => (p.ts.getTime, p.seq))
+          .iterator.map(p => (p.op, p.value))), n + ready.size)
+        applied.update(next)
+        Iterator((key, next._1, next._2))
       }
     }
 
     override def handleInputRows(key: String, rows: Iterator[TimedOp],
         timerValues: TimerValues): Iterator[(String, String, Long)] =
-      drain(key,
-        rows.map(o => PendingOp(o.ts.getTime, o.seq, o.op, o.value)).toList,
-        timerValues.getCurrentWatermarkInMs())
+      drain(key, rows.toList, timerValues.getCurrentWatermarkInMs())
 
     override def handleExpiredTimer(key: String, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[(String, String, Long)] =
       drain(key, Nil, timerValues.getCurrentWatermarkInMs())
   }
 
-  /** Entry point for the TWS event-time replay (see
-    * [[KvEventTimeProcessor]]); emits (key, value, applied-count)
-    * updates, applied strictly increasing per key. */
-  def kvReplayEventTimeTws(ops: Dataset[TimedOp],
+  /** Event-time KV replay for OUT-OF-ORDER delivery — the production
+    * pattern when the in-order contract of [[kvReplayUpdates]] cannot be
+    * guaranteed: ops buffer in state until the event-time watermark
+    * passes them, then apply in (ts, seq) order ([[KvEventTimeProcessor]]).
+    * Late data inside the watermark delay is reordered correctly; data
+    * later than the delay is dropped by the watermark (the standard
+    * trade). Needs the RocksDB state store provider (the documented
+    * session setup).
+    *
+    * Emits (key, value, applied-count) updates; applied counts every
+    * ready op and is strictly increasing per key, so max_by(applied) is
+    * the latest state. */
+  def kvReplayEventTime(ops: Dataset[TimedOp],
       delay: String): Dataset[(String, String, Long)] = {
     import ops.sparkSession.implicits._
     ops.withWatermark("ts", delay)
@@ -551,11 +547,10 @@ object Streaming {
     * (append mode), so the drained stream equals the batch join —
     * gated against the batch clickAttribution oracle. The 3 h delay
     * covers the 2 h join reach-back plus reordering slack; the source
-    * files are event-time-ordered (§7.7.5). */
-  /** The attribution join itself, over two event-shaped streaming
-    * frames — separated from the gated entry so specs can drive the
-    * PRODUCTION join (watermarks, interval, condition) over their own
-    * multi-batch sources instead of a hand-copied replica. */
+    * files are event-time-ordered (§7.7.5). The join takes two
+    * event-shaped streaming frames, apart from the gated entry, so specs
+    * drive the PRODUCTION join (watermarks, interval, condition) over
+    * their own multi-batch sources instead of a hand-copied replica. */
   def clickAttributionJoin(purchaseEvents: DataFrame,
       clickEvents: DataFrame): DataFrame = {
     val p = purchaseEvents
@@ -611,14 +606,19 @@ object Streaming {
   def clickAttributionStream(spark: SparkSession, sfDir: String): DataFrame =
     clickAttributionStreamTiered(spark, sfDir, autoChunked(spark, sfDir))
 
+  /** One tier's event source (a fresh stream per call, one per join or
+    * union side) and its state-partition count. */
+  private def tier(spark: SparkSession, sfDir: String,
+      chunked: Boolean): (() => DataFrame, String) =
+    if (chunked) (() => eventStreamDaily(spark, sfDir),
+      chunkedStateParts(spark, sfDir))
+    else (() => eventStream(spark, sfDir), StatePartitions)
+
   private[graft] def clickAttributionStreamTiered(spark: SparkSession,
       sfDir: String, chunked: Boolean): DataFrame = {
-    def side() =
-      if (chunked) eventStreamDaily(spark, sfDir)
-      else eventStream(spark, sfDir)
+    val (side, stateParts) = tier(spark, sfDir, chunked)
     runToParquet(clickAttributionJoin(side(), side()),
-      OutputMode.Append(), "click-attrib",
-      if (chunked) chunkedStateParts(spark, sfDir) else StatePartitions)
+      OutputMode.Append(), "click-attrib", stateParts)
   }
 
   /** Stream-STATIC join: the live event stream enriched against a
@@ -675,75 +675,22 @@ object Streaming {
     * spec). */
   private[graft] def dedupIdsStreamTiered(spark: SparkSession,
       sfDir: String, chunked: Boolean): DataFrame = {
-    def side() =
-      (if (chunked) eventStreamDaily(spark, sfDir)
-       else eventStream(spark, sfDir))
+    val (events, stateParts) = tier(spark, sfDir, chunked)
+    def side() = events()
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts").cast("timestamp").as("ts"))
     val deduped = side().unionAll(side())
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("user_id"), col("event_type"))
-    runToParquet(deduped, OutputMode.Append(), "dedup-ids",
-      if (chunked) chunkedStateParts(spark, sfDir) else StatePartitions)
+    runToParquet(deduped, OutputMode.Append(), "dedup-ids", stateParts)
   }
 
   val dedupIdsSql: String =
     "SELECT DISTINCT event_id, user_id, event_type FROM events"
 
-  /** Per-user session state for [[SessionizeProcessor]]. */
-  case class SessState(lastTs: Long, nSessions: Long, nEvents: Long)
-
-  /** [[sessionizeUpdates]] re-expressed on the transformWithState API
-    * (Spark 4's arbitrary-state surface): explicit named ValueState,
-    * the state schema evolvable and inspectable by the state reader —
-    * the forward-looking twin of the mapGroupsWithState path. Same
-    * fold, same §7.7.5 in-order tripwire, same oracle. */
-  private class SessionizeProcessor
-      extends StatefulProcessor[Long, (Long, Long, Long), (Long, Long, Long)] {
-    @transient private var st: ValueState[SessState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[SessState]("sess",
-        Encoders.product[SessState], TTLConfig.NONE)
-    override def handleInputRows(uid: Long, rows: Iterator[(Long, Long, Long)],
-        timerValues: TimerValues): Iterator[(Long, Long, Long)] = {
-      val sorted = rows.toArray.sortBy(e => (e._2, e._3))
-      var SessState(lastTs, nSessions, nEvents) =
-        if (st.exists()) st.get() else SessState(Long.MinValue, 0L, 0L)
-      if (sorted.nonEmpty && sorted.head._2 < lastTs)
-        throw new IllegalStateException(
-          s"SessionizeProcessor: out-of-order event for user $uid: " +
-            s"incoming ts ${sorted.head._2} < last applied $lastTs")
-      sorted.foreach { case (_, tsu, _) =>
-        if (lastTs == Long.MinValue || tsu - lastTs > 1800000000L)
-          nSessions += 1
-        lastTs = tsu
-        nEvents += 1
-      }
-      st.update(SessState(lastTs, nSessions, nEvents))
-      Iterator((uid, nSessions, nEvents))
-    }
-  }
-
-  /** Driver-gated entry; oracle = the batch sessionize oracle. */
-  def sessionizeTwsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val typed = eventStream(spark, sfDir).select(
-      col("user_id").cast("long"),
-      unix_micros(col("ts").cast("timestamp")).as("tsu"),
-      col("event_id").cast("long")).as[(Long, Long, Long)]
-    val updates = typed.groupByKey(_._1)
-      .transformWithState(new SessionizeProcessor,
-        TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "n_sessions", "n_events")
-    runToParquet(updates, OutputMode.Update(), "sessionize-tws")
-      .groupBy("user_id")
-      .agg(max_by(col("n_sessions"), col("n_events")).as("n_sessions"),
-        max(col("n_events")).as("n_events"))
-  }
-
   /** Per-user quota state for [[ThrottleProcessor]]: the CURRENT hour's
-    * admission counters plus the in-order tripwire cursor. */
+    * admission counters plus the in-order cursor. */
   case class ThrottleState(hourStart: Long, nAdm: Long, nDrop: Long,
       lastTs: Long)
 
@@ -764,13 +711,10 @@ object Streaming {
         Encoders.product[ThrottleState], TTLConfig.NONE)
     override def handleInputRows(uid: Long, rows: Iterator[(Long, Long, Long)],
         timerValues: TimerValues): Iterator[(Long, Long, Long, Long)] = {
-      val sorted = rows.toArray.sortBy(e => (e._2, e._3))
       var s = if (st.exists()) st.get()
         else ThrottleState(Long.MinValue, 0L, 0L, Long.MinValue)
-      if (sorted.nonEmpty && sorted.head._2 < s.lastTs)
-        throw new IllegalStateException(
-          s"ThrottleProcessor: out-of-order event for user $uid: " +
-            s"incoming ts ${sorted.head._2} < last applied ${s.lastTs}")
+      val sorted = inOrder("throttle", uid, rows)(
+        e => (e._2, e._3), _._2, s.lastTs)(_ < _)
       val out = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Long, Long)]
       sorted.foreach { case (_, tsu, _) =>
@@ -794,19 +738,10 @@ object Streaming {
     * `events_throttle_hourly`: per-event first-N-per-hour admission
     * through O(1) keyed quota state; the drained counters must equal
     * the batch count arithmetic — the oracle is the batch SQL. */
-  def throttleStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val typed = graft.ext.Events.eventsWithBursts(eventStream(spark, sfDir))
-      .select(
-        col("user_id").cast("long"),
-        unix_micros(col("ts").cast("timestamp")).as("tsu"),
-        col("event_id").cast("long")).as[(Long, Long, Long)]
-    val updates = typed.groupByKey(_._1)
-      .transformWithState(
-        new ThrottleProcessor(graft.ext.Events.ThrottleMax),
-        TimeMode.None(), OutputMode.Update())
-      .toDF("user_id", "hour_us", "n_admitted", "n_dropped")
-    runToParquet(updates, OutputMode.Update(), "throttle")
+  def throttleStream(spark: SparkSession, sfDir: String): DataFrame =
+    runToParquet(throttleUpdates(
+      graft.ext.Events.eventsWithBursts(eventStream(spark, sfDir))),
+      OutputMode.Update(), "throttle")
       .groupBy(col("user_id"), col("hour_us"))
       .agg(max_by(struct(col("n_admitted"), col("n_dropped")),
         col("n_admitted") + col("n_dropped")).as("s"))
@@ -814,6 +749,15 @@ object Streaming {
         expr("cast(timestamp_micros(hour_us) as timestamp_ntz)").as("hour"),
         col("s.n_admitted").as("n_admitted"),
         col("s.n_dropped").as("n_dropped"))
+
+  /** The quota counters [[ThrottleProcessor]] emits per (user, hour). */
+  private[graft] def throttleUpdates(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    userEvents(events).groupByKey(_._1)
+      .transformWithState(
+        new ThrottleProcessor(graft.ext.Events.ThrottleMax),
+        TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "hour_us", "n_admitted", "n_dropped")
   }
 
   /** Streaming exact dedup — first-seen-wins per content hash with
@@ -823,10 +767,7 @@ object Streaming {
     * state. Oracle = the batch dedup_exact oracle. */
   def dedupExactStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, sfDir) // registers graft functions
-    val raw = spark.read.parquet(s"$sfDir/documents.parquet")
-    val docs = spark.readStream.schema(raw.schema)
-      .parquet(staged(sfDir, "documents"))
+    val docs = documentStream(spark, sfDir)
       .select(md5(col("text")).as("h"), col("doc_id")).as[(String, Long)]
     val updates = docs.groupByKey(_._1)
       .mapGroupsWithState[(Long, Long), (String, Long, Long, Long)](
@@ -860,11 +801,8 @@ object Streaming {
     * corpus spine, mirroring the batch query's LEFT-join discipline.
     * Oracle = the batch corpus_tokenize oracle. */
   def tokenizeStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/documents.parquet")
     val pieces = graft.ext.Tokenize.pieceFrame(spark, sfDir)
-    val docs = spark.readStream.schema(raw.schema)
-      .parquet(staged(sfDir, "documents"))
-    val words = graft.ext.Tokenize.wordsOf(docs)
+    val words = graft.ext.Tokenize.wordsOf(documentStream(spark, sfDir))
     val perDoc = words.join(pieces, Seq("word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
@@ -887,9 +825,9 @@ object Streaming {
     * per-user SEQUENTIAL STATE MACHINE — the shape funnels actually
     * take in production streams, where events arrive over days and the
     * batch query's whole-partition window frames don't exist. State per
-    * user is four longs: last applied ts (the §7.7.5 in-order
-    * tripwire), newest view ts, newest QUALIFIED click ts, and the
-    * stage reached. The batch query's running maxima over
+    * user is six longs: last applied ts (the §7.7.5 in-order cursor),
+    * the two newest view ts, the two newest QUALIFIED click ts (see
+    * tied timestamps below), and the stage reached. The batch query's running maxima over
     * strict-predecessor frames collapse to exactly these scalars when
     * events are folded in (ts, event_id) order: a click qualifies iff
     * the NEWEST strictly-earlier view is within the window (the newest
@@ -921,15 +859,11 @@ object Streaming {
         GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[(Long, String, Long, Long)],
             state: GroupState[(Long, Long, Long, Long, Long, Long)]) =>
-          val sorted = it.toArray.sortBy(e => (e._3, e._4))
           var (lastApplied, lastView, prevView, lastQC, prevQC, stage) =
             state.getOption.getOrElse((Long.MinValue, Long.MinValue,
               Long.MinValue, Long.MinValue, Long.MinValue, 0L))
-          if (sorted.nonEmpty && sorted.head._3 < lastApplied)
-            throw new IllegalStateException(
-              s"funnelUpdates: out-of-order event for user $uid: " +
-                s"incoming ts ${sorted.head._3} < last applied $lastApplied; " +
-                "use an event-time/watermarked variant for this source")
+          val sorted = inOrder("funnelUpdates", uid, it)(
+            e => (e._3, e._4), _._3, lastApplied)(_ < _)
           // Newest tracked ts strictly before t (MinValue = none).
           def strictlyBefore(t: Long, last: Long, prev: Long): Long =
             if (last < t) last else prev
@@ -1006,15 +940,11 @@ object Streaming {
         OutputMode.Update(), GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[(Long, Long, Long, String)],
             state: GroupState[Scd2St]) =>
-          val sorted = it.toArray.sortBy(e => (e._2, e._3))
           var st = state.getOption.getOrElse(
             Scd2St(Long.MinValue, Long.MinValue, null, 0L, 0L, 0L))
-          if (sorted.nonEmpty && (sorted.head._2 < st.lastTs ||
-              (sorted.head._2 == st.lastTs && sorted.head._3 < st.lastEid)))
-            throw new IllegalStateException(
-              s"scd2Updates: out-of-order event for user $uid: incoming " +
-                s"(${sorted.head._2}, ${sorted.head._3}) < last applied " +
-                s"(${st.lastTs}, ${st.lastEid}); use an event-time variant")
+          val sorted = inOrder("scd2Updates", uid, it)(
+            e => (e._2, e._3), e => (e._2, e._3), (st.lastTs, st.lastEid))(
+            Ordering[(Long, Long)].lt)
           val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Out]
           sorted.foreach { case (_, tsu, eid, typ) =>
             if (st.openType == null)
@@ -1061,13 +991,9 @@ object Streaming {
     * no state store; every admitted doc is emitted exactly once.
     * Oracle = the batch corpus_curate oracle. */
   def curateStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/documents.parquet")
-    Tables.documents(spark, sfDir) // registers graft kernels
     val keepers = graft.ext.Dedup.fingerprintDedup(spark, sfDir)
       .select(col("keeper").as("doc_id"))
-    val docs = spark.readStream.schema(raw.schema)
-      .parquet(staged(sfDir, "documents"))
-    val admitted = docs
+    val admitted = documentStream(spark, sfDir)
       .select(col("doc_id"),
         graft.ext.TextAnalysis.qualityScoreCol.as("quality_score"))
       .filter(col("quality_score") >= 0.5)

@@ -32,7 +32,7 @@ class AggStateSpec extends SparkSpec {
   }
 
   test("persist → reload → merge survives the parquet round trip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-aggstate").toString
+    val dir = tempDir("graft-aggstate").toString
     AggState.stateOf(docs.filter(
       graft.ext.Hashing.idHash(col("doc_id")) % 4 =!= 0L))
       .write.mode("overwrite").parquet(dir)

@@ -19,7 +19,7 @@ class FormatsSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   private def roundTrip(fmt: String, multiLine: Boolean = false) = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-rt-$fmt").toString
+    val dir = tempDir(s"graft-rt-$fmt").toString
     val w = nasty.write.mode("overwrite").option("header", "true")
       .option("ignoreLeadingWhiteSpace", "false")  // writer defaults trim —
       .option("ignoreTrailingWhiteSpace", "false") // same fix as the gate
@@ -41,7 +41,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("ORC round trip preserves ALL adversarial content") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rt-orc").toString
+    val dir = tempDir("graft-rt-orc").toString
     nasty.write.mode("overwrite").orc(dir)
     val back = spark.read.schema(nasty.schema).orc(dir)
       .as[(Long, String)].collect().toMap

@@ -43,8 +43,7 @@ class IncrementalAnnSpec extends SparkSpec {
   test("persist → reload state probes identically to in-flight state") {
     val (prior, batch) = split
     val st = IncrementalAnn.ingest(IncrementalAnn.priorState(prior), batch)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ivf-state-").toString
+    val dir = tempDir("graft-ivf-state-").toString
     st.codebook.write.mode("overwrite").parquet(s"$dir/codebook")
     st.postings.write.mode("overwrite").parquet(s"$dir/postings")
     val reloaded = IncrementalAnn.IvfState(

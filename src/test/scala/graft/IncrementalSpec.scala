@@ -43,7 +43,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("persist -> read-back -> dedup cycle equals the direct dataflow") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-snapshot").toString
+    val dir = tempDir("graft-snapshot").toString
     val snap = Incremental.snapshot(spark, sf)
     snap.buckets.write.mode("overwrite").parquet(s"$dir/buckets")
     snap.shingles.write.mode("overwrite").parquet(s"$dir/shingles")

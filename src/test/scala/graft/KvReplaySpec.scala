@@ -27,6 +27,14 @@ class KvReplaySpec extends SparkSpec {
   private def run(ops: Seq[KvOp]): Map[String, String] =
     KvReplay.replay(ops.toDF()).as[(String, String)].collect().toMap
 
+  test("KvOp.fold: put replaces, append concatenates, get leaves the state") {
+    assert(KvOp.fold("s", Seq("append" -> "a", "get" -> "", "append" -> "b"))
+      == "sab")
+    assert(KvOp.fold("s", Seq("append" -> "a", "put" -> "P", "get" -> "x",
+      "append" -> "c")) == "Pc")
+    assert(KvOp.fold("s", Nil) == "s")
+  }
+
   test("put overwrites, append concatenates, get ignored") {
     val ops = Seq(
       KvOp(1, "k", "append", "a"), KvOp(2, "k", "put", "X"),

@@ -30,7 +30,7 @@ class MrPluginSpec extends SparkSpec {
 
   private def buildPluginJar(source: String = pluginSource,
       className: String = "WcPlugin", at: String = null): String = {
-    val dir = Files.createTempDirectory("graft-plugin-")
+    val dir = tempDir("graft-plugin-")
     val src = dir.resolve(s"$className.java")
     Files.writeString(src, source)
     val javac = javax.tools.ToolProvider.getSystemJavaCompiler

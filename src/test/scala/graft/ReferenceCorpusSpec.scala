@@ -24,7 +24,7 @@ class ReferenceCorpusSpec extends SparkSpec {
   private lazy val files: Seq[String] =
     if (gutenberg.nonEmpty) gutenberg
     else {
-      val dir = java.nio.file.Files.createTempDirectory("ref-corpus")
+      val dir = tempDir("ref-corpus")
       Tables.documents(spark, sf).select($"source", $"text")
         .as[(String, String)].collect().toSeq.groupBy(_._1).toSeq
         .map { case (source, docs) =>

@@ -68,7 +68,7 @@ class ScaleToolsSpec extends SparkSpec {
   }
 
   test("partitionBy layout: day filters prune partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lake-").toString
+    val dir = tempDir("graft-lake-").toString
     Tables.events(spark, sf)
       .withColumn("day", to_date(col("ts")))
       .write.partitionBy("day").mode("overwrite").parquet(dir)
@@ -86,7 +86,7 @@ class ScaleToolsSpec extends SparkSpec {
   }
 
   test("JSON KV sink/source round-trips the reference intermediate format") {
-    val dir = java.nio.file.Files.createTempDirectory("mr-json-kv").toString
+    val dir = tempDir("mr-json-kv").toString
     val data = Seq(
       engine.KV("w1", "1"), engine.KV("w2", "2"), engine.KV("w1", "3"))
     MapReduce.jsonKvSink(data.toDS(), dir, nReduce = 3)

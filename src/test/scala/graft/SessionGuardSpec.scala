@@ -11,8 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * query path writes a session setting outside the two documented
   * windows (Bpe's codegen-off merge rounds and Streaming's
   * state-partition count around `start()`), no query path registers a
-  * function, and no code sweeps the session's persisted state. No
-  * SparkSession needed. */
+  * function, and no code sweeps the session's persisted state. It also
+  * keeps each written-once rule written once: the KV Put/Append
+  * transition (`KvOp.fold`) and the streaming in-order check
+  * (`Streaming.inOrder`). No SparkSession needed. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO_DIR",
@@ -55,6 +57,22 @@ class SessionGuardSpec extends AnyFunSuite {
     // writes the session's function registry.
     assert(occurrences("udf.register(").isEmpty,
       s"udf.register( in ${occurrences("udf.register(")}")
+  }
+
+  test("the KV Put/Append rule is written once, in KvOp.fold") {
+    // kv.Linearizability's model matches its own op kinds, not strings:
+    // it is the independent model the specs check histories against.
+    for (pattern <- Seq("== \"put\"", "== \"append\""))
+      assert(occurrences(pattern) == Map("graft/kv/KvReplay.scala" -> 1),
+        s"$pattern in ${occurrences(pattern)}")
+  }
+
+  test("the out-of-order failure is raised only by Streaming.inOrder") {
+    val streaming = "graft/streaming/Streaming.scala"
+    assert(occurrences("\"out-of-order") == Map(streaming -> 1),
+      s"\"out-of-order in ${occurrences("\"out-of-order")}")
+    // and nothing else in the streaming module throws the same failure
+    assert(occurrences("IllegalStateException(").get(streaming).contains(1))
   }
 
   test("no session-wide checkpoint sweep") {

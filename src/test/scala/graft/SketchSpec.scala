@@ -107,7 +107,7 @@ class SketchSpec extends SparkSpec {
   test("HLL on a tiny stream: duplicates don't move the registers") {
     // Same universe fed twice = same registers = same estimate; proven
     // via the production path by writing a doubled corpus to parquet.
-    val dir = java.nio.file.Files.createTempDirectory("hlldup").toString
+    val dir = tempDir("hlldup").toString
     val docs = Tables.documents(spark, sf)
     docs.union(docs).write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")

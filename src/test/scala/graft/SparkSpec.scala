@@ -29,6 +29,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
+    val warehouse = Files.createTempDirectory("graft-warehouse")
+    sys.addShutdownHook(FileUtils.deleteQuietly(warehouse.toFile))
     val s = SparkSession.builder()
       .withExtensions(graft.plans.GraftExtensions.apply)
       .master("local[4,2]") // maxFailures=2: lets chaos specs inject task failures
@@ -38,8 +40,7 @@ object SparkSpec {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

@@ -28,10 +28,10 @@ class StagedOrderSpec extends SparkSpec {
     * four hourly rows. Returns the staged dir. */
   private def stageDays(mtimes: Seq[Int] => Seq[Int]): Path = {
     import spark.implicits._
-    val staged = Files.createTempDirectory("graft-staged-order-")
+    val staged = tempDir("graft-staged-order-")
     val writeOrder = Seq(2, 0, 1) // physical write order: day2, day0, day1
     writeOrder.foreach { day =>
-      val tmp = Files.createTempDirectory(s"graft-staged-order-day$day-")
+      val tmp = tempDir(s"graft-staged-order-day$day-")
       (0 until 4).flatMap(h => (0 until 3).map(r => (day, h, r)))
         .toDF("day", "hour", "r")
         .select(to_timestamp(
@@ -56,7 +56,7 @@ class StagedOrderSpec extends SparkSpec {
     * one file per micro-batch; returns the number of emitted windows. */
   private def drainWindows(dir: Path): Long = {
     val sch = spark.read.parquet(dir.toString).schema
-    val ckpt = Files.createTempDirectory("graft-staged-order-ckpt-")
+    val ckpt = tempDir("graft-staged-order-ckpt-")
     val sinkName = s"staged_order_${System.nanoTime()}"
     val q = spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", "1").parquet(dir.toString)

@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -32,18 +33,29 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("a gated streaming query leaves no checkpoint directory behind") {
+  /** Names in java.io.tmpdir that start with `prefix`. */
+  private def tmpEntries(prefix: String): Set[String] = {
     import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    def ckpts(): Set[String] = {
-      val l = Files.list(tmp)
-      try l.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("graft-ckpt-")).toSet
-      finally l.close()
-    }
-    val before = ckpts()
+    val l = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    try l.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(prefix)).toSet
+    finally l.close()
+  }
+
+  test("a gated streaming query leaves no checkpoint directory behind") {
+    val before = tmpEntries("graft-ckpt-")
     assert(Streaming.queries("kv_replay_stream")(spark, sf).count() > 0)
-    assert(ckpts() == before)
+    assert(tmpEntries("graft-ckpt-") == before)
+  }
+
+  test("the daily staging leaves no scratch directory behind") {
+    // A fresh table directory: the staging is cached per directory.
+    val dir = tempDir("graft-days-sf-").toString
+    spark.read.parquet(s"$sf/events.parquet")
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    val before = tmpEntries("graft-stream-days-tmp-")
+    assert(Streaming.eventStreamDaily(spark, dir).isStreaming)
+    assert(tmpEntries("graft-stream-days-tmp-") == before)
   }
 
   test("kv mapGroupsWithState across micro-batches == batch replay") {
@@ -177,17 +189,12 @@ class StreamingSpec extends SparkSpec {
     assert(Streaming.windowedAppendStream(spark, dir).count() == 0)
   }
 
-  test("in-order contract violation raises instead of folding wrong") {
-    // f=1's op has a LOWER seq than f=0's already-applied one: the
-    // §7.7.5 in-order tripwire must fail the query, not corrupt state.
-    val src = tempDir("graft-kv-ooo-").toString
-    Seq(KvOp(5L, "k", "put", "a")).toDS().coalesce(1).write.parquet(s"$src/f=0")
-    Seq(KvOp(3L, "k", "append", "b")).toDS().coalesce(1).write.parquet(s"$src/f=1")
-    val schema = spark.read.parquet(s"$src/f=*").schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$src/f=*").as[KvOp]
-    val q = Streaming.kvReplayUpdates(stream)
-      .writeStream.format("memory").queryName("kv_spec_ooo")
+  /** Drain `updates` one source file per batch: the in-order check
+    * must fail the query, with "out-of-order" in the cause chain, instead
+    * of folding the late batch wrong. */
+  private def assertOutOfOrderRaises(updates: DataFrame, name: String): Unit = {
+    val q = updates
+      .writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Update())
       .option("checkpointLocation",
         tempDir("graft-ckpt-").toString)
@@ -200,6 +207,40 @@ class StreamingSpec extends SparkSpec {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(_.contains("out-of-order")), msgs(e).mkString(" | "))
   }
+
+  test("in-order contract violation raises instead of folding wrong") {
+    // f=1's op has a LOWER seq than f=0's already-applied one: the
+    // §7.7.5 in-order tripwire must fail the query, not corrupt state.
+    val src = tempDir("graft-kv-ooo-").toString
+    Seq(KvOp(5L, "k", "put", "a")).toDS().coalesce(1).write.parquet(s"$src/f=0")
+    Seq(KvOp(3L, "k", "append", "b")).toDS().coalesce(1).write.parquet(s"$src/f=1")
+    val schema = spark.read.parquet(s"$src/f=*").schema
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$src/f=*").as[KvOp]
+    assertOutOfOrderRaises(Streaming.kvReplayUpdates(stream), "kv_spec_ooo")
+  }
+
+  // The same two-file case for every per-user in-order fold: user 1's
+  // second file holds an event older than the first file's.
+  for ((fold, updates) <- Seq[(String, DataFrame => DataFrame)](
+      "sessionizeUpdates" -> Streaming.sessionizeUpdates,
+      "the transformWithState sessionizer" -> Streaming.sessionizeTwsUpdates,
+      "the throttle processor" -> Streaming.throttleUpdates,
+      "funnelUpdates" -> Streaming.funnelUpdates,
+      "scd2Updates" -> (ev => Streaming.scd2Updates(ev).toDF())))
+    test(s"in-order contract violation raises in $fold") {
+      def ts(m: String) = java.sql.Timestamp.valueOf(s"2026-01-01 $m:00")
+      val src = tempDir("graft-user-ooo-").toString
+      Seq((2L, 1L, "view", ts("10:30"))).toDF("event_id", "user_id",
+        "event_type", "ts").coalesce(1).write.parquet(s"$src/f=0")
+      Seq((1L, 1L, "click", ts("10:00"))).toDF("event_id", "user_id",
+        "event_type", "ts").coalesce(1).write.parquet(s"$src/f=1")
+      val schema = spark.read.parquet(s"$src/f=*").schema
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(s"$src/f=*")
+      assertOutOfOrderRaises(updates(stream),
+        s"user_ooo_${fold.filter(_.isLetter)}")
+    }
 
   test("windowed agg with watermark emits closed windows in append mode") {
     val src = tempDir("graft-ev-stream-").toString
@@ -233,9 +274,9 @@ class StreamingSpec extends SparkSpec {
       "2026-01-01 00:00:00" -> 10.0, "2026-01-01 01:00:00" -> 20.0))
   }
 
-  /** Shared out-of-order fixture: f0 has ops at 10:00/10:10, f1
-    * delivers a LATE op (10:05) plus 11:00, f2 is a sentinel advancing
-    * the watermark past everything. Correct event-time fold for key k:
+  /** Out-of-order fixture: f0 has ops at 10:00/10:10, f1 delivers a
+    * LATE op (10:05) plus 11:00, f2 is a sentinel advancing the
+    * watermark past every op of key k. Correct event-time fold for key k:
     * put(a);append(L);append(b);append(c) = "aLbc" (arrival order
     * would give "abLc"). */
   private def etFixture(): String = {
@@ -253,59 +294,31 @@ class StreamingSpec extends SparkSpec {
     src
   }
 
-  /** Run one of the event-time replay variants over [[etFixture]] and
-    * return every (key, value, applied) update it emitted. */
-  private def runEtReplay(name: String,
-      replay: org.apache.spark.sql.Dataset[Streaming.TimedOp] =>
-        org.apache.spark.sql.Dataset[(String, String, Long)]): Set[(String, String, Long)] = {
+  test("event-time replay reorders late ops the in-order path cannot") {
     val src = etFixture()
     val schema = spark.read.parquet(s"$src/f=*").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$src/f=*")
       .as[Streaming.TimedOp]
-    val q = replay(stream)
+    val q = Streaming.kvReplayEventTime(stream, "30 minutes")
       .toDF("key", "value", "applied")
-      .writeStream.format("memory").queryName(name)
+      .writeStream.format("memory").queryName("kv_et_updates")
       .outputMode(OutputMode.Update())
       .option("checkpointLocation",
         tempDir("graft-ckpt-").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.table(name).as[(String, String, Long)].collect().toSet
-  }
-
-  test("event-time replay reorders late ops the in-order path cannot") {
-    val updates = runEtReplay("kv_et_updates",
-      Streaming.kvReplayEventTimeUpdates(_, "30 minutes"))
+    val updates = spark.table("kv_et_updates")
+      .as[(String, String, Long)].collect().toSet
     val finalK = updates.filter(_._1 == "k").maxBy(_._3)
     assert(finalK._2 == "aLbc", s"got $updates")
-  }
-
-  test("transformWithState timers replay late ops like the timeout path") {
-    // Not just the final value: EVERY (key, value, applied) update the
-    // TWS-with-timers variant emits must equal the
-    // flatMapGroupsWithState timeout path's output on the same
-    // out-of-order fixture — including the sentinel flush key and the
-    // applied counts of intermediate emissions.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val tws = runEtReplay("kv_et_tws_updates",
-        Streaming.kvReplayEventTimeTws(_, "30 minutes"))
-      val fmgws = runEtReplay("kv_et_fmgws_updates",
-        Streaming.kvReplayEventTimeUpdates(_, "30 minutes"))
-      assert(tws == fmgws, s"tws=$tws fmgws=$fmgws")
-      val finalK = tws.filter(_._1 == "k").maxBy(_._3)
-      assert(finalK._2 == "aLbc", s"got $tws")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+    // Every update, not only the last: the 10:30 watermark applies
+    // put(a), the late append(L) and append(b) in event-time order; the
+    // 22:30 one applies append(c). No watermark passes the sentinel's
+    // 23:00 op, so the flush key never emits.
+    assert(updates == Set(("k", "aLb", 3L), ("k", "aLbc", 4L)),
+      s"got $updates")
   }
 
   test("checkpoint recovery: keyed state survives a restart, on RocksDB") {

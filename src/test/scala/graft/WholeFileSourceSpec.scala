@@ -11,7 +11,7 @@ class WholeFileSourceSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("wholefile-src")
+    val d = tempDir("wholefile-src")
     java.nio.file.Files.writeString(d.resolve("a.txt"), "hello world\nhello")
     java.nio.file.Files.writeString(d.resolve("b.txt"), "spark engine")
     java.nio.file.Files.writeString(d.resolve("c.txt"), "")
@@ -76,7 +76,7 @@ class WholeFileSourceSpec extends SparkSpec {
   }
 
   test("several load paths: a file plus a glob, each listed and checked") {
-    val other = java.nio.file.Files.createTempDirectory("wholefile-src2")
+    val other = tempDir("wholefile-src2")
     java.nio.file.Files.writeString(other.resolve("x.md"), "x")
     java.nio.file.Files.writeString(other.resolve("y.md"), "yy")
     java.nio.file.Files.writeString(other.resolve("z.txt"), "not matched")
@@ -100,7 +100,7 @@ class WholeFileSourceSpec extends SparkSpec {
   }
 
   test("an exact file path is read as named, glob characters included") {
-    val d = java.nio.file.Files.createTempDirectory("wholefile-exact")
+    val d = tempDir("wholefile-exact")
     java.nio.file.Files.writeString(d.resolve("a[1].txt"), "bracketed")
     java.nio.file.Files.writeString(d.resolve("a1.txt"), "glob match")
     val rows = spark.read.format("wholefile").load(s"$d/a[1].txt")
@@ -112,7 +112,7 @@ class WholeFileSourceSpec extends SparkSpec {
   }
 
   test("directory loads skip hidden and underscore files; exact paths keep them") {
-    val d = java.nio.file.Files.createTempDirectory("wholefile-hidden")
+    val d = tempDir("wholefile-hidden")
     java.nio.file.Files.writeString(d.resolve("part-0.txt"), "kept")
     java.nio.file.Files.writeString(d.resolve("_SUCCESS"), "")
     java.nio.file.Files.writeString(d.resolve(".part-0.txt.crc"), "crc")
