@@ -139,7 +139,7 @@ object Audio {
     * stats from the decoded sample array), while the oracle recomputes
     * them from the text directly — a header-offset, interleave, sign, or
     * padding bug hash-mismatches immediately. ASCII-corpus assumption as
-    * in [[Multimodal.decodePpmSql]] (byte i == char i+1). */
+    * in [[Multimodal.roundTrip]] (byte i == char i+1). */
   def decodeWav(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     decodedClips(spark, sfDir).map { case (id, wav) =>

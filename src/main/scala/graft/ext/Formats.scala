@@ -26,9 +26,9 @@ object Formats {
   // sessions (Verify + a benchmark run, parallel CI) overwrite each
   // other's export mid-read and fail the gate on phantom corruption.
   // Within one JVM reruns reuse the dir; mode("overwrite") keeps them
-  // clean.
+  // clean. It lives under the JVM's scratch root, deleted at exit.
   private lazy val scratchRoot: String =
-    java.nio.file.Files.createTempDirectory("graft-roundtrip-").toString
+    graft.Scratch.dir("graft-roundtrip-").toString
 
   private def scratch(sfDir: String, kind: String): String = {
     val sfName = new java.io.File(sfDir).getName

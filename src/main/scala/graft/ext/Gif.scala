@@ -1,9 +1,8 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.Tables
+import Multimodal.{Dims, ImageSql}
 
 /** GIF87a codec — the fifth REAL public-format codec beside
   * [[Multimodal]]'s PPM/BMP/PNG and [[Audio]]'s WAV, and the one that
@@ -205,7 +204,7 @@ object Gif {
   }
 
   private[graft] case class GifImage(width: Int, height: Int,
-      pixels: Array[Byte])
+      pixels: Array[Byte]) extends Multimodal.Raster
 
   /** Strict GIF87a decode of the subset this codec writes (one image,
     * GCT, no interlace); extensions (0x21) are length-skipped like any
@@ -255,59 +254,27 @@ object Gif {
     lzwDecode(data.toByteArray, w * h).map(GifImage(w, h, _))
   }
 
-  /** Decoded-GIF stats row — the [[Multimodal.decodePng]] contract:
-    * wsum catches positional corruption that plain sums miss. */
-  case class GifDecoded(doc_id: Long, width: Long, height: Long,
-      sum_idx: Long, wsum: Long)
+  /** GIF's dims rule: 16..31 × 12..19 gives a few hundred pixels per
+    * image, enough to push the LZW dictionary past 511 entries on
+    * low-entropy text (10-bit codes) at every SF; GifSpec covers the
+    * 4096-entry clear-code reset with synthetic streams. */
+  private val GifDims = Dims(16, 16, 12, 8)
 
-  /** Encode→decode round trip with the real GIF codec. Dims 16..31 ×
-    * 12..19 give a few hundred pixels per image, enough to push the
-    * LZW dictionary past 511 entries on low-entropy text (10-bit
-    * codes) at every SF; GifSpec covers the 4096-entry clear-code
-    * reset with synthetic streams. */
+  /** Encode→decode round trip with the real GIF codec, one palette
+    * index per pixel; `wsum` catches positional corruption that the
+    * plain sum misses. */
   def decodeGif(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) > 0)
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val tb = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val w = 16 + (id % 16).toInt
-          val h = 12 + (id % 8).toInt
-          val idx = Array.tabulate(w * h)(i => tb(i % tb.length))
-          val img = decode(encode(w, h, idx))
-            .getOrElse(sys.error(s"round-trip decode failed for doc $id"))
-          var s = 0L; var ws = 0L
-          var j = 0
-          while (j < img.pixels.length) {
-            val v = img.pixels(j) & 0xffL
-            s += v
-            ws += j * v
-            j += 1
-          }
-          GifDecoded(id, img.width.toLong, img.height.toLong, s, ws)
-        }
-      }
-      .toDF()
+    Multimodal.roundTrip(Multimodal.mediaTable(spark, sfDir),
+        GifDims, 1, (_, w, h, idx) => decode(encode(w, h, idx))) { (id, img) =>
+      val (s, ws) = Multimodal.planeStats(img.pixels, 1)
+      (id, img.width.toLong, img.height.toLong, s(0), ws)
+    }.toDF("doc_id", "width", "height", "sum_idx", "wsum")
   }
 
-  /** Same ASCII byte==char assumption as [[Multimodal.decodeBmpSql]]. */
-  val decodeGifSql: String = {
-    def pix(idx: String): String =
-      s"CAST(ascii(substr(text, CAST(($idx) % len AS INTEGER) + 1, 1)) AS BIGINT)"
-    s"""WITH d AS (
-       |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len,
-       |    16 + doc_id % 16 AS w, 12 + doc_id % 8 AS h
-       |  FROM documents WHERE length(text) > 0)
-       |SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-       |  CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, w*h),
-       |    j -> ${pix("j")}))) AS BIGINT) AS sum_idx,
-       |  CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, w*h),
-       |    j -> j * ${pix("j")}))) AS BIGINT) AS wsum
-       |FROM d""".stripMargin
-  }
+  val decodeGifSql: String = ImageSql.over(GifDims,
+    (ImageSql.WidthHeight +: ImageSql.chanSums(Seq("sum_idx"))) :+
+      ImageSql.wsum("w*h"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "multimodal_decode_gif" -> (decodeGif _))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -207,6 +207,130 @@ object Multimodal {
        |  FROM m)""".stripMargin
   }
 
+  // ------------------------------------------------- image round trip
+
+  /** A decoded raster as its codec parsed it: row-major, top-down,
+    * channel-interleaved `pixels`. */
+  trait Raster {
+    def width: Int
+    def height: Int
+    def pixels: Array[Byte]
+  }
+
+  /** A dims rule: doc `id` becomes a (w0 + id mod wm) × (h0 + id mod hm)
+    * image. One rule feeds both the Spark side and the oracle's `d` CTE. */
+  final case class Dims(w0: Int, wm: Int, h0: Int, hm: Int) {
+    def apply(id: Long): (Int, Int) =
+      (w0 + (id % wm).toInt, h0 + (id % hm).toInt)
+    def sql: String = s"$w0 + doc_id % $wm AS w, $h0 + doc_id % $hm AS h"
+  }
+
+  /** The one codec round trip behind every image gate key. Each media
+    * row's non-empty payload is cycled into a `channels`·w·h plane,
+    * with w×h = `dims(doc_id)`, and run through `codec` (encode, then
+    * decode). `out` sees the DECODED image, so width, height and any
+    * header field come from the parse, never from `dims`: a header-parse
+    * or row-order bug shows in the output. A decode that returns None
+    * fails the query, naming the doc. Decode is partition-local map
+    * work, the batch shape a JNI codec would run in.
+    *
+    * The oracles ([[ImageSql]]) rebuild the same plane from the
+    * documents' text, reading character i+1 for byte i. That holds only
+    * because the corpus is ASCII (byte == char); a non-ASCII corpus
+    * would need both sides rebuilt over an encoded blob. */
+  private[graft] def roundTrip[I <: Raster, T: Encoder](
+      media: Dataset[MediaRow], dims: Dims, channels: Int,
+      codec: (Long, Int, Int, Array[Byte]) => Option[I])(
+      out: (Long, I) => T): Dataset[T] = {
+    import media.sparkSession.implicits._
+    media.filter(length(col("payload")) > 0)
+      .select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
+      .mapPartitions(_.map { case (id, bytes) =>
+        val (w, h) = dims(id)
+        val plane = Array.tabulate(channels * w * h)(i => bytes(i % bytes.length))
+        out(id, codec(id, w, h, plane)
+          .getOrElse(sys.error(s"round-trip decode failed for doc $id")))
+      })
+  }
+
+  /** Per-channel sums and Σ j·plane[j] in one walk over the whole plane.
+    * Channel sums are row-order-invariant; `wsum` is what catches a row
+    * flip, a filter misalignment or a channel swap. */
+  private[graft] def planeStats(plane: Array[Byte],
+      channels: Int): (Array[Long], Long) = {
+    val sums = new Array[Long](channels)
+    var wsum = 0L
+    var j = 0
+    while (j < plane.length) {
+      val v = plane(j) & 0xffL
+      sums(j % channels) += v
+      wsum += j * v
+      j += 1
+    }
+    (sums, wsum)
+  }
+
+  /** An RGB image's round-trip stats: dims as decoded, exact channel
+    * sums and `wsum` ([[planeStats]]). */
+  case class RgbStats(doc_id: Long, width: Long, height: Long,
+      sum_r: Long, sum_g: Long, sum_b: Long, wsum: Long)
+
+  /** [[roundTrip]] reporting [[RgbStats]]. */
+  private[graft] def rgbStats[I <: Raster](media: Dataset[MediaRow],
+      dims: Dims,
+      codec: (Long, Int, Int, Array[Byte]) => Option[I]): Dataset[RgbStats] = {
+    import media.sparkSession.implicits._
+    roundTrip(media, dims, 3, codec) { (id, img) =>
+      val (s, ws) = planeStats(img.pixels, 3)
+      RgbStats(id, img.width, img.height, s(0), s(1), s(2), ws)
+    }
+  }
+
+  /** The oracle side of [[roundTrip]]: DuckDB builders over a `d` CTE
+    * holding each non-empty doc's `text`, `len`, `w` and `h`, blind to
+    * the codec in between. */
+  private[ext] object ImageSql {
+    val Rgb: Seq[String] = Seq("sum_r", "sum_g", "sum_b")
+    val WidthHeight = "CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height"
+
+    def dimsCte(dims: Dims, src: String = "documents"): String =
+      s"""d AS (
+         |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len,
+         |    ${dims.sql}
+         |  FROM $src WHERE length(text) > 0)""".stripMargin
+
+    /** Byte `idx` of the cycled plane. */
+    def pix(idx: String): String =
+      s"CAST(ascii(substr(text, CAST(($idx) % len AS INTEGER) + 1, 1)) AS BIGINT)"
+
+    /** Σ `term` for `v` over [0, n), as a BIGINT. */
+    def sumOver(n: String, v: String, term: String): String =
+      s"CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, $n), " +
+        s"$v -> $term))) AS BIGINT)"
+
+    /** One sum column per channel name, over a plane of `n` pixels whose
+      * byte j is `at(j)`. */
+    def chanSums(names: Seq[String], n: String = "w*h",
+        at: String => String = pix): Seq[String] =
+      names.zipWithIndex.map { case (name, off) =>
+        s"${sumOver(n, "p", at(s"${names.size}*p + $off"))} AS $name"
+      }
+
+    /** Σ j·plane[j] over a plane of `n` bytes whose byte j is `at(j)`. */
+    def wsum(n: String = "3*w*h", at: String => String = pix): String =
+      s"${sumOver(n, "j", s"j * ${at("j")}")} AS wsum"
+
+    /** `cols` per doc over the `d` CTE of `dims`. */
+    def over(dims: Dims, cols: Seq[String]): String =
+      s"""WITH ${dimsCte(dims)}
+         |SELECT doc_id, ${cols.mkString(",\n  ")}
+         |FROM d""".stripMargin
+
+    /** The [[RgbStats]] oracle. */
+    def rgbStats(dims: Dims): String =
+      over(dims, (WidthHeight +: chanSums(Rgb)) :+ wsum())
+  }
+
   // ------------------------------------------------------ real PPM codec
 
   /** A REAL decoder for a public, dependency-free byte layout: binary
@@ -218,7 +342,7 @@ object Multimodal {
     * the stub boundary now covers only those. */
   object PpmCodec {
     case class PpmImage(width: Int, height: Int, maxval: Int,
-        pixels: Array[Byte])
+        pixels: Array[Byte]) extends Raster
 
     /** Standard P6 writer: `P6\n<w> <h>\n<maxval>\n<raw RGB>`. */
     def encode(width: Int, height: Int, maxval: Int,
@@ -270,71 +394,27 @@ object Multimodal {
     }
   }
 
-  /** Decoded PPM stats: header fields AS PARSED plus exact integer
-    * channel sums from the pixel plane. */
-  case class PpmDecoded(doc_id: Long, width: Long, height: Long,
-      maxval: Long, sum_r: Long, sum_g: Long, sum_b: Long)
+  /** Encode→decode round trip over the corpus with the REAL codec: the
+    * output is computed from the PARSED image — width/height/maxval
+    * from the header parse, channel sums from the decoded plane — so a
+    * parser bug (off-by-one header skip, wrong plane offset, channel
+    * interleave) hash-mismatches immediately. */
+  private val PpmDims = Dims(2, 4, 2, 3)
 
-  /** Encode→decode round trip over the corpus with the REAL codec:
-    * each doc becomes a small P6 image (dimensions a deterministic
-    * function of doc_id, pixels cycled from the text bytes), the codec
-    * parses it back, and the output is computed from the PARSED image —
-    * width/height/maxval from the header parse, channel sums from the
-    * decoded plane. The DuckDB oracle recomputes the same stats from
-    * the text directly, so a parser bug (off-by-one header skip, wrong
-    * plane offset, channel interleave) hash-mismatches immediately.
-    * Decode is partition-local map work, the same batch shape a JNI
-    * codec would run in. */
   def decodePpm(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) > 0)
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val tb = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val w = 2 + (id % 4).toInt
-          val h = 2 + (id % 3).toInt
-          val pix = Array.tabulate(3 * w * h)(i => tb(i % tb.length))
-          val img = PpmCodec.decode(PpmCodec.encode(w, h, 255, pix))
-            .getOrElse(sys.error(s"round-trip decode failed for doc $id"))
-          var r = 0L; var g = 0L; var b = 0L
-          var p = 0
-          while (p < img.width * img.height) {
-            r += img.pixels(3 * p) & 0xffL
-            g += img.pixels(3 * p + 1) & 0xffL
-            b += img.pixels(3 * p + 2) & 0xffL
-            p += 1
-          }
-          PpmDecoded(id, img.width.toLong, img.height.toLong,
-            img.maxval.toLong, r, g, b)
-        }
-      }
-      .toDF()
+    roundTrip(mediaTable(spark, sfDir), PpmDims, 3,
+        (_, w, h, rgb) => PpmCodec.decode(PpmCodec.encode(w, h, 255, rgb))) {
+      (id, img) =>
+        val (s, _) = planeStats(img.pixels, 3)
+        (id, img.width.toLong, img.height.toLong, img.maxval.toLong,
+          s(0), s(1), s(2))
+    }.toDF("doc_id", "width", "height", "maxval", "sum_r", "sum_g", "sum_b")
   }
 
-  /** NOTE: the Spark side cycles UTF-8 *bytes* of the text while this
-    * oracle indexes *characters* (`ascii(substr(...))` with len = char
-    * length) — identical only on an ASCII corpus (byte i == code point
-    * of char i+1), the same corpus assumption every media-payload oracle
-    * here leans on (see [[mediaTable]]). A non-ASCII corpus would need
-    * both sides rebuilt over an encoded blob. */
-  val decodePpmSql: String = {
-    def chanSum(off: Int): String =
-      s"CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, w*h), " +
-        s"p -> CAST(ascii(substr(text, CAST((3*p + $off) % len AS INTEGER) + 1, 1)) AS BIGINT)))) AS BIGINT)"
-    s"""WITH d AS (
-       |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len,
-       |    2 + doc_id % 4 AS w, 2 + doc_id % 3 AS h
-       |  FROM documents WHERE length(text) > 0)
-       |SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-       |  CAST(255 AS BIGINT) AS maxval,
-       |  ${chanSum(0)} AS sum_r,
-       |  ${chanSum(1)} AS sum_g,
-       |  ${chanSum(2)} AS sum_b
-       |FROM d""".stripMargin
-  }
+  val decodePpmSql: String = ImageSql.over(PpmDims,
+    Seq(ImageSql.WidthHeight, "CAST(255 AS BIGINT) AS maxval") ++
+      ImageSql.chanSums(ImageSql.Rgb))
 
   // ------------------------------------------------------ real BMP codec
 
@@ -349,7 +429,7 @@ object Multimodal {
   object BmpCodec {
     /** Decoded image: RGB, row-major, top-down (the natural order —
       * file-layout quirks are the codec's job to hide). */
-    case class BmpImage(width: Int, height: Int, pixels: Array[Byte])
+    case class BmpImage(width: Int, height: Int, pixels: Array[Byte]) extends Raster
 
     private val HeaderSize = 54 // 14 file header + 40 info header
 
@@ -444,7 +524,7 @@ object Multimodal {
     * non-8-bit/non-truecolor/interlaced IHDR, inflate errors, or a
     * pixel plane of the wrong size. */
   object PngCodec {
-    case class PngImage(width: Int, height: Int, pixels: Array[Byte])
+    case class PngImage(width: Int, height: Int, pixels: Array[Byte]) extends Raster
 
     private val Signature =
       Array(137, 80, 78, 71, 13, 10, 26, 10).map(_.toByte)
@@ -614,66 +694,20 @@ object Multimodal {
     }
   }
 
-  /** Decoded PNG stats — same contract as [[BmpDecoded]]: the wsum
-    * member catches any row/filter misalignment channel sums miss. */
-  case class PngDecoded(doc_id: Long, width: Long, height: Long,
-      sum_r: Long, sum_g: Long, sum_b: Long, wsum: Long)
+  /** PNG's dims rule: heights run 3..7 so taller images exercise ALL
+    * five scanline filters (the encoder cycles them per row). */
+  private val PngDims = Dims(2, 6, 3, 5)
 
-  /** Encode→decode round trip with the REAL PNG codec. Heights run
-    * 3..7 so taller images exercise ALL five scanline filters (the
-    * encoder cycles them per row); the oracle recomputes the stats from
-    * the raw text, blind to the compression in between. */
-  def decodePng(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) > 0)
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val tb = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val w = 2 + (id % 6).toInt
-          val h = 3 + (id % 5).toInt
-          val rgb = Array.tabulate(3 * w * h)(i => tb(i % tb.length))
-          val img = PngCodec.decode(PngCodec.encode(w, h, rgb))
-            .getOrElse(sys.error(s"round-trip decode failed for doc $id"))
-          var r = 0L; var g = 0L; var b = 0L; var ws = 0L
-          var j = 0
-          while (j < img.pixels.length) {
-            val v = img.pixels(j) & 0xffL
-            (j % 3: @unchecked) match {
-              case 0 => r += v
-              case 1 => g += v
-              case 2 => b += v
-            }
-            ws += j * v
-            j += 1
-          }
-          PngDecoded(id, img.width.toLong, img.height.toLong, r, g, b, ws)
-        }
-      }
-      .toDF()
-  }
+  private val pngRoundTrip: (Long, Int, Int, Array[Byte]) => Option[PngCodec.PngImage] =
+    (_, w, h, rgb) => PngCodec.decode(PngCodec.encode(w, h, rgb))
 
-  /** Same ASCII-corpus byte==char assumption as [[decodeBmpSql]]. */
-  val decodePngSql: String = {
-    def pix(idx: String): String =
-      s"CAST(ascii(substr(text, CAST(($idx) % len AS INTEGER) + 1, 1)) AS BIGINT)"
-    def chanSum(off: Int): String =
-      s"CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, w*h), " +
-        s"p -> ${pix(s"3*p + $off")}))) AS BIGINT)"
-    s"""WITH d AS (
-       |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len,
-       |    2 + doc_id % 6 AS w, 3 + doc_id % 5 AS h
-       |  FROM documents WHERE length(text) > 0)
-       |SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-       |  ${chanSum(0)} AS sum_r,
-       |  ${chanSum(1)} AS sum_g,
-       |  ${chanSum(2)} AS sum_b,
-       |  CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, 3*w*h),
-       |    j -> j * ${pix("j")}))) AS BIGINT) AS wsum
-       |FROM d""".stripMargin
-  }
+  /** Encode→decode round trip with the REAL PNG codec; the oracle
+    * recomputes the stats from the raw text, blind to the compression
+    * in between. */
+  def decodePng(spark: SparkSession, sfDir: String): DataFrame =
+    rgbStats(mediaTable(spark, sfDir), PngDims, pngRoundTrip).toDF()
+
+  val decodePngSql: String = ImageSql.rgbStats(PngDims)
 
   /** Real resize on REAL decoded pixels — the feature-extraction step
     * [[resize]] stubs with [[FakeCodec]], run for real: the payload is
@@ -694,136 +728,51 @@ object Multimodal {
 
   def resizePng(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) > 0)
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val tb = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val w = 2 + (id % 6).toInt
-          val h = 3 + (id % 5).toInt
-          val rgb = Array.tabulate(3 * w * h)(i => tb(i % tb.length))
-          val img = PngCodec.decode(PngCodec.encode(w, h, rgb))
-            .getOrElse(sys.error(s"round-trip decode failed for doc $id"))
-          val out = new Array[Byte](3 * RszW * RszH)
-          var y = 0
-          while (y < RszH) {
-            val sy = y * img.height / RszH
-            var x = 0
-            while (x < RszW) {
-              val sx = x * img.width / RszW
-              val src = 3 * (sy * img.width + sx)
-              val dst = 3 * (y * RszW + x)
-              out(dst) = img.pixels(src)
-              out(dst + 1) = img.pixels(src + 1)
-              out(dst + 2) = img.pixels(src + 2)
-              x += 1
-            }
-            y += 1
+    roundTrip(mediaTable(spark, sfDir), PngDims, 3, pngRoundTrip) {
+      (id, img) =>
+        val out = new Array[Byte](3 * RszW * RszH)
+        var y = 0
+        while (y < RszH) {
+          val sy = y * img.height / RszH
+          var x = 0
+          while (x < RszW) {
+            val sx = x * img.width / RszW
+            System.arraycopy(img.pixels, 3 * (sy * img.width + sx),
+              out, 3 * (y * RszW + x), 3)
+            x += 1
           }
-          var r = 0L; var g = 0L; var b = 0L; var ws = 0L
-          var j = 0
-          while (j < out.length) {
-            val v = out(j) & 0xffL
-            (j % 3: @unchecked) match {
-              case 0 => r += v
-              case 1 => g += v
-              case 2 => b += v
-            }
-            ws += j * v
-            j += 1
-          }
-          PngResized(id, img.width.toLong, img.height.toLong, r, g, b, ws)
+          y += 1
         }
-      }
-      .toDF()
+        val (s, ws) = planeStats(out, 3)
+        PngResized(id, img.width, img.height, s(0), s(1), s(2), ws)
+    }.toDF()
   }
 
   val resizePngSql: String = {
-    // Resized pixel p (0..RszW*RszH-1), channel off: source index =
-    // 3*(sy*sw + sx) + off with sx = (p % W)*sw // W, sy = (p // W)*sh // H.
-    def srcIdx(p: String, off: Int): String =
-      s"3*((($p) // $RszW * h // $RszH) * w + (($p) % $RszW * w // $RszW)) + $off"
-    def pix(idx: String): String =
-      s"CAST(ascii(substr(text, CAST(($idx) % len AS INTEGER) + 1, 1)) AS BIGINT)"
-    def chanSum(off: Int): String =
-      s"CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, ${RszW * RszH}), " +
-        s"p -> ${pix(srcIdx("p", off))}))) AS BIGINT)"
-    s"""WITH d AS (
-       |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len,
-       |    2 + doc_id % 6 AS w, 3 + doc_id % 5 AS h
-       |  FROM documents WHERE length(text) > 0)
-       |SELECT doc_id, CAST(w AS BIGINT) AS src_w, CAST(h AS BIGINT) AS src_h,
-       |  ${chanSum(0)} AS sum_r,
-       |  ${chanSum(1)} AS sum_g,
-       |  ${chanSum(2)} AS sum_b,
-       |  CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, ${3 * RszW * RszH}),
-       |    j -> j * ${pix(srcIdx("j // 3", 0) + " + (j % 3)")}))) AS BIGINT) AS wsum
-       |FROM d""".stripMargin
+    // Byte j of the resized plane: pixel p = j // 3, channel j % 3, read
+    // from source index 3*(sy*w + sx) + channel with
+    // sx = (p % W)*w // W, sy = (p // W)*h // H.
+    def at(j: String): String = {
+      val p = s"(($j) // 3)"
+      ImageSql.pix(s"3*(($p // $RszW * h // $RszH) * w + ($p % $RszW * w // $RszW)) + ($j) % 3")
+    }
+    ImageSql.over(PngDims,
+      ("CAST(w AS BIGINT) AS src_w, CAST(h AS BIGINT) AS src_h" +:
+        ImageSql.chanSums(ImageSql.Rgb, s"${RszW * RszH}", at)) :+
+        ImageSql.wsum(s"${3 * RszW * RszH}", at))
   }
 
-  /** Decoded BMP stats: dimensions as parsed, exact channel sums, and a
-    * position-weighted sum (Σ j·plane[j] over the decoded top-down RGB
-    * plane) — channel sums alone are row-order-invariant, so `wsum` is
-    * what catches a bottom-up flip the decoder forgot to undo. */
-  case class BmpDecoded(doc_id: Long, width: Long, height: Long,
-      sum_r: Long, sum_g: Long, sum_b: Long, wsum: Long)
+  private val BmpDims = Dims(2, 5, 2, 4)
 
-  /** Encode→decode round trip with the REAL BMP codec, same contract as
-    * [[decodePpm]]: the oracle recomputes the stats from the raw text,
-    * so any padding/BGR/row-order parse bug hash-mismatches. */
-  def decodeBmp(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) > 0)
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val tb = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val w = 2 + (id % 5).toInt
-          val h = 2 + (id % 4).toInt
-          val rgb = Array.tabulate(3 * w * h)(i => tb(i % tb.length))
-          val img = BmpCodec.decode(BmpCodec.encode(w, h, rgb))
-            .getOrElse(sys.error(s"round-trip decode failed for doc $id"))
-          var r = 0L; var g = 0L; var b = 0L; var ws = 0L
-          var j = 0
-          while (j < img.pixels.length) {
-            val v = img.pixels(j) & 0xffL
-            (j % 3: @unchecked) match {
-              case 0 => r += v
-              case 1 => g += v
-              case 2 => b += v
-            }
-            ws += j * v
-            j += 1
-          }
-          BmpDecoded(id, img.width.toLong, img.height.toLong, r, g, b, ws)
-        }
-      }
-      .toDF()
-  }
+  private val bmpRoundTrip: (Long, Int, Int, Array[Byte]) => Option[BmpCodec.BmpImage] =
+    (_, w, h, rgb) => BmpCodec.decode(BmpCodec.encode(w, h, rgb))
 
-  /** Same ASCII-corpus byte==char assumption as [[decodePpmSql]]. */
-  val decodeBmpSql: String = {
-    def pix(idx: String): String =
-      s"CAST(ascii(substr(text, CAST(($idx) % len AS INTEGER) + 1, 1)) AS BIGINT)"
-    def chanSum(off: Int): String =
-      s"CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, w*h), " +
-        s"p -> ${pix(s"3*p + $off")}))) AS BIGINT)"
-    s"""WITH d AS (
-       |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len,
-       |    2 + doc_id % 5 AS w, 2 + doc_id % 4 AS h
-       |  FROM documents WHERE length(text) > 0)
-       |SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-       |  ${chanSum(0)} AS sum_r,
-       |  ${chanSum(1)} AS sum_g,
-       |  ${chanSum(2)} AS sum_b,
-       |  CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, 3*w*h),
-       |    j -> j * ${pix("j")}))) AS BIGINT) AS wsum
-       |FROM d""".stripMargin
-  }
+  /** Encode→decode round trip with the REAL BMP codec: any padding,
+    * BGR or row-order parse bug hash-mismatches. */
+  def decodeBmp(spark: SparkSession, sfDir: String): DataFrame =
+    rgbStats(mediaTable(spark, sfDir), BmpDims, bmpRoundTrip).toDF()
+
+  val decodeBmpSql: String = ImageSql.rgbStats(BmpDims)
 
   // ------------------------------------------------- perceptual hashing
 
@@ -1099,28 +1048,19 @@ object Multimodal {
     * division), and hashed on THAT — the decoded-luma path an image
     * pipeline would run, not the raw-byte stand-in. Still one
     * partition-local pass per row. */
+  private val LumaDims = Dims(4, 5, 4, 3)
+
   def phashLuma(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    mediaTable(spark, sfDir)
-      .filter(col("media_type") === "image" && length(col("payload")) > 0)
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val tb = r.payload
-          val w = 4 + (r.doc_id % 5).toInt
-          val h = 4 + (r.doc_id % 3).toInt
-          val rgb = Array.tabulate(3 * w * h)(i => tb(i % tb.length))
-          val img = BmpCodec.decode(BmpCodec.encode(w, h, rgb))
-            .getOrElse(sys.error(s"round-trip decode failed for doc ${r.doc_id}"))
-          val luma = Array.tabulate(img.width * img.height) { p =>
-            val red = img.pixels(3 * p) & 0xff
-            val grn = img.pixels(3 * p + 1) & 0xff
-            val blu = img.pixels(3 * p + 2) & 0xff
-            ((299 * red + 587 * grn + 114 * blu) / 1000).toByte
-          }
-          PhashRow(r.doc_id, phashOf(luma))
-        }
+    val images = mediaTable(spark, sfDir).filter(col("media_type") === "image")
+    roundTrip(images, LumaDims, 3, bmpRoundTrip) { (id, img) =>
+      val px = img.pixels
+      val luma = Array.tabulate(px.length / 3) { p =>
+        ((299 * (px(3 * p) & 0xff) + 587 * (px(3 * p + 1) & 0xff) +
+          114 * (px(3 * p + 2) & 0xff)) / 1000).toByte
       }
-      .toDF()
+      PhashRow(id, phashOf(luma))
+    }.toDF()
   }
 
   /** [[phashCtesOver]] generalized to a CTE exposing (doc_id, vals
@@ -1144,19 +1084,15 @@ object Multimodal {
   }
 
   val phashLumaSql: String = {
-    def pix(idx: String): String =
-      s"ascii(substr(payload, CAST(($idx) % len AS INTEGER) + 1, 1))"
+    import ImageSql.pix
     s"""WITH $imgsCtes,
-       |dim AS (
-       |  SELECT doc_id, payload, CAST(length(payload) AS BIGINT) AS len,
-       |    4 + doc_id % 5 AS w, 4 + doc_id % 3 AS h
-       |  FROM imgs WHERE length(payload) > 0),
+       |${ImageSql.dimsCte(LumaDims, "(SELECT doc_id, payload AS text FROM imgs)")},
        |lum AS (
        |  SELECT doc_id,
        |    list_transform(range(0, w*h), p -> CAST(
        |      (299*${pix("3*p")} + 587*${pix("3*p + 1")} + 114*${pix("3*p + 2")}) // 1000
        |      AS BIGINT)) AS vals
-       |  FROM dim),
+       |  FROM d),
        |${phashListCtesOver("lum")}
        |SELECT doc_id, phash FROM ph""".stripMargin
   }
@@ -1184,50 +1120,28 @@ object Multimodal {
     * output is one 11-column row per image, no shuffle at all. */
   def imageHistogram(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) > 0)
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val tb = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val w = 2 + (id % 6).toInt
-          val h = 3 + (id % 5).toInt
-          val rgb = Array.tabulate(3 * w * h)(i => tb(i % tb.length))
-          val img = PngCodec.decode(PngCodec.encode(w, h, rgb))
-            .getOrElse(sys.error(s"round-trip decode failed for doc $id"))
-          val bins = new Array[Long](8)
-          var p = 0
-          while (p < w * h) {
-            val r = img.pixels(3 * p) & 0xff
-            val g = img.pixels(3 * p + 1) & 0xff
-            val b = img.pixels(3 * p + 2) & 0xff
-            val lum = (77 * r + 150 * g + 29 * b) / 256
-            bins(math.min(lum / 16, 7)) += 1L
-            p += 1
-          }
-          PngHist(id, w.toLong, h.toLong, bins(0), bins(1), bins(2),
-            bins(3), bins(4), bins(5), bins(6), bins(7))
+    roundTrip(mediaTable(spark, sfDir), PngDims, 3, pngRoundTrip) {
+      (id, img) =>
+        val px = img.pixels
+        val bins = new Array[Long](8)
+        var p = 0
+        while (3 * p < px.length) {
+          val lum = (77 * (px(3 * p) & 0xff) + 150 * (px(3 * p + 1) & 0xff) +
+            29 * (px(3 * p + 2) & 0xff)) / 256
+          bins(math.min(lum / 16, 7)) += 1L
+          p += 1
         }
-      }
-      .toDF()
+        PngHist(id, img.width, img.height, bins(0), bins(1), bins(2),
+          bins(3), bins(4), bins(5), bins(6), bins(7))
+    }.toDF()
   }
 
-  /** Same ASCII-corpus byte==char assumption as [[decodePngSql]]. */
   val imageHistogramSql: String = {
-    def pix(idx: String): String =
-      s"CAST(ascii(substr(text, CAST(($idx) % len AS INTEGER) + 1, 1)) AS BIGINT)"
+    import ImageSql.pix
     val lum = s"(77*${pix("3*p")} + 150*${pix("3*p + 1")} + 29*${pix("3*p + 2")}) // 256"
-    def bin(b: Int): String =
-      s"CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, w*h), " +
-        s"p -> CASE WHEN least(($lum) // 16, 7) = $b THEN 1::BIGINT ELSE 0::BIGINT END))) AS BIGINT) AS h$b"
-    s"""WITH d AS (
-       |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len,
-       |    2 + doc_id % 6 AS w, 3 + doc_id % 5 AS h
-       |  FROM documents WHERE length(text) > 0)
-       |SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-       |  ${(0 to 7).map(bin).mkString(",\n  ")}
-       |FROM d""".stripMargin
+    def bin(b: Int): String = ImageSql.sumOver("w*h", "p",
+      s"CASE WHEN least(($lum) // 16, 7) = $b THEN 1::BIGINT ELSE 0::BIGINT END") + s" AS h$b"
+    ImageSql.over(PngDims, ImageSql.WidthHeight +: (0 to 7).map(bin))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

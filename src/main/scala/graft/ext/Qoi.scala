@@ -1,9 +1,8 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.Tables
+import Multimodal.{Dims, ImageSql}
 
 /** QOI codec ("Quite OK Image", Szablewski 2022 — public-domain spec,
   * qoiformat.org) — the sixth REAL public-format codec beside
@@ -24,6 +23,9 @@ import graft.Tables
 object Qoi {
 
   case class QoiImage(width: Int, height: Int, rgb: Array[Byte])
+      extends Multimodal.Raster {
+    def pixels: Array[Byte] = rgb
+  }
 
   private val OpIndex = 0x00
   private val OpDiff = 0x40
@@ -165,65 +167,19 @@ object Qoi {
     Some(QoiImage(w, h, out))
   }
 
-  case class QoiDecoded(doc_id: Long, width: Long, height: Long,
-      sum_r: Long, sum_g: Long, sum_b: Long, wsum: Long)
+  /** QOI's dims rule: 5..12 × 4..9 over repeating text bytes exercise
+    * RUN (repeated phrases), INDEX (revisited colors), DIFF/LUMA
+    * (adjacent ASCII codes) and the RGB escape at every SF. */
+  private val QoiDims = Dims(5, 8, 4, 6)
 
-  /** Encode→decode round trip with the real QOI codec; dims 5..12 ×
-    * 4..9 over repeating text bytes exercise RUN (repeated phrases),
-    * INDEX (revisited colors), DIFF/LUMA (adjacent ASCII codes) and
-    * the RGB escape at every SF. Oracle recomputes the channel stats
-    * straight from the payload bytes, blind to the codec. */
-  def decodeQoi(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) > 0)
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val tb = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val w = 5 + (id % 8).toInt
-          val h = 4 + (id % 6).toInt
-          val rgb = Array.tabulate(3 * w * h)(i => tb(i % tb.length))
-          val img = decode(encode(w, h, rgb))
-            .getOrElse(sys.error(s"round-trip decode failed for doc $id"))
-          var r = 0L; var g = 0L; var b = 0L; var ws = 0L
-          var j = 0
-          while (j < img.rgb.length) {
-            val v = img.rgb(j) & 0xffL
-            (j % 3: @unchecked) match {
-              case 0 => r += v
-              case 1 => g += v
-              case 2 => b += v
-            }
-            ws += j * v
-            j += 1
-          }
-          QoiDecoded(id, img.width.toLong, img.height.toLong, r, g, b, ws)
-        }
-      }
-      .toDF()
-  }
+  /** Encode→decode round trip with the real QOI codec; the oracle
+    * recomputes the channel stats straight from the payload bytes,
+    * blind to the codec. */
+  def decodeQoi(spark: SparkSession, sfDir: String): DataFrame =
+    Multimodal.rgbStats(Multimodal.mediaTable(spark, sfDir),
+      QoiDims, (_, w, h, rgb) => decode(encode(w, h, rgb))).toDF()
 
-  /** Same ASCII byte==char assumption as the other codec oracles. */
-  val decodeQoiSql: String = {
-    def pix(idx: String): String =
-      s"CAST(ascii(substr(text, CAST(($idx) % len AS INTEGER) + 1, 1)) AS BIGINT)"
-    def chanSum(off: Int): String =
-      s"CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, w*h), " +
-        s"p -> ${pix(s"3*p + $off")}))) AS BIGINT)"
-    s"""WITH d AS (
-       |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len,
-       |    5 + doc_id % 8 AS w, 4 + doc_id % 6 AS h
-       |  FROM documents WHERE length(text) > 0)
-       |SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-       |  ${chanSum(0)} AS sum_r,
-       |  ${chanSum(1)} AS sum_g,
-       |  ${chanSum(2)} AS sum_b,
-       |  CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, 3*w*h),
-       |    j -> j * ${pix("j")}))) AS BIGINT) AS wsum
-       |FROM d""".stripMargin
-  }
+  val decodeQoiSql: String = ImageSql.rgbStats(QoiDims)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "multimodal_decode_qoi" -> (decodeQoi _))

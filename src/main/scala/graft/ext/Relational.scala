@@ -32,13 +32,14 @@ import graft.Tables
   */
 object Relational {
 
-  /** Exact integer quantization of a k-decimal double column. */
-  private def quant(c: Column, factor: Int): Column =
+  /** Exact integer quantization of a k-decimal double column — the one
+    * money rule every TPC-H-shaped module here calls. */
+  private[ext] def quant(c: Column, factor: Int): Column =
     round(c * factor).cast("long")
 
   /** price*(1-discount) in exact integer micro-units (cents × basis
     * points): l_extendedprice has 2 decimals, l_discount has 2. */
-  private def discPriceE6(price: Column, discount: Column): Column =
+  private[ext] def discPriceE6(price: Column, discount: Column): Column =
     quant(price, 100) * (lit(10000L) - quant(discount, 10000))
 
   private def e6ToDouble(c: Column): Column = (c.cast("double") / 1e6)

@@ -39,8 +39,7 @@ import graft.Tables
   */
 object Rfm {
 
-  private def cents(c: org.apache.spark.sql.Column) =
-    round(c * 100).cast("long")
+  import Relational.{discPriceE6, quant}
 
   /** RFM quartiles per market segment. Scores 1..4, 4 = best (most
     * recent / most orders / most spend); label via the standard cell
@@ -50,7 +49,7 @@ object Rfm {
       .groupBy(col("o_custkey"))
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("n_orders"),
-        sum(cents(col("o_totalprice"))).as("spend_c"))
+        sum(quant(col("o_totalprice"), 100)).as("spend_c"))
     val joined = perCust.join(
       Tables.customer(spark, sfDir)
         .select(col("c_custkey"), col("c_mktsegment")),
@@ -114,8 +113,7 @@ object Rfm {
   def abcPareto(spark: SparkSession, sfDir: String): DataFrame = {
     val rev = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_partkey"))
-      .agg(sum(cents(col("l_extendedprice")) *
-        (lit(10000L) - round(col("l_discount") * 10000).cast("long")))
+      .agg(sum(discPriceE6(col("l_extendedprice"), col("l_discount")))
         .as("rev_e6"))
     val joined = rev.join(
       Tables.part(spark, sfDir).select(col("p_partkey"), col("p_brand")),

@@ -29,8 +29,7 @@ import graft.Tables
   */
 object Skyline {
 
-  private def quant(c: org.apache.spark.sql.Column, f: Int) =
-    round(c * f).cast("long")
+  import Relational.quant
 
   def ordersSkyline(spark: SparkSession, sfDir: String): DataFrame = {
     val seg = Tables.customer(spark, sfDir)

@@ -29,12 +29,7 @@ import graft.Tables
   */
 object SupplyChain {
 
-  private def quant(c: org.apache.spark.sql.Column, factor: Int) =
-    round(c * factor).cast("long")
-
-  private def discPriceE6(price: org.apache.spark.sql.Column,
-                          discount: org.apache.spark.sql.Column) =
-    quant(price, 100) * (lit(10000L) - quant(discount, 10000))
+  import Relational.{discPriceE6, quant}
 
   /** TPC-H Q2-shaped: minimum-cost supplier per part. For size-15 parts,
     * among EUROPE suppliers that shipped the part, keep the supplier(s)

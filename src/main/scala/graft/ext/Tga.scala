@@ -1,9 +1,8 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.Tables
+import Multimodal.{Dims, ImageSql}
 
 /** Real Truevision TGA codec (public spec: Truevision "TGA File Format
   * Specification" v2.0, 1991) — uncompressed true-color (type 2) and
@@ -13,7 +12,7 @@ import graft.Tables
   * the others don't: classic byte-run RLE with mixed run/literal
   * packets (QOI's op stream and GIF's LZW are both dictionary-ish).
   *
-  * Same architecture as every codec here ([[Multimodal.decodeBmp]]):
+  * Same architecture as every codec here ([[Multimodal.roundTrip]]):
   * byte-grammar decode is genuinely per-row imperative work, so it runs
   * as a typed mapPartitions kernel — NOT a UDF in a SQL expression (no
   * codegen benefit for a byte parser) and NOT a driver loop (the codec
@@ -28,6 +27,7 @@ object Tga {
 
   /** Decoded image: top-down RGB plane regardless of file row origin. */
   case class TgaImage(width: Int, height: Int, pixels: Array[Byte])
+      extends Multimodal.Raster
 
   object TgaCodec {
     private val HeaderLen = 18
@@ -170,70 +170,30 @@ object Tga {
     }
   }
 
-  case class TgaDecoded(doc_id: Long, width: Long, height: Long,
-      rle: Boolean, sum_r: Long, sum_g: Long, sum_b: Long, wsum: Long)
+  /** TGA's dims rule. Even doc ids take the uncompressed type-2 path,
+    * odd ids type-10 RLE — both paths exercised at every SF, and the
+    * flag is in the output so the split is auditable. */
+  private val TgaDims = Dims(2, 6, 2, 5)
 
-  /** Gate: encode→decode round trip with the REAL codec; even doc ids
-    * take the uncompressed type-2 path, odd ids type-10 RLE — both
-    * paths exercised at every SF, and the flag is in the output so the
-    * split is auditable. Stats are over the normalized top-down RGB
-    * plane: `wsum` (Σ j·plane[j]) catches origin flips and channel
-    * swaps that the per-channel sums are invariant to. */
+  private def rle(id: Long): Boolean = id % 2 == 1
+
+  /** Gate: encode→decode round trip with the REAL codec. Stats are over
+    * the normalized top-down RGB plane: `wsum` catches origin flips and
+    * channel swaps that the per-channel sums are invariant to. */
   def decodeTga(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) > 0)
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val tb = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val w = 2 + (id % 6).toInt
-          val h = 2 + (id % 5).toInt
-          val rgb = Array.tabulate(3 * w * h)(i => tb(i % tb.length))
-          val rle = id % 2 == 1
-          val img = TgaCodec.decode(TgaCodec.encode(w, h, rgb, rle))
-            .getOrElse(sys.error(s"round-trip decode failed for doc $id"))
-          var r = 0L; var g = 0L; var b = 0L; var ws = 0L
-          var j = 0
-          while (j < img.pixels.length) {
-            val v = img.pixels(j) & 0xffL
-            (j % 3: @unchecked) match {
-              case 0 => r += v
-              case 1 => g += v
-              case 2 => b += v
-            }
-            ws += j * v
-            j += 1
-          }
-          TgaDecoded(id, img.width.toLong, img.height.toLong, rle,
-            r, g, b, ws)
-        }
-      }
-      .toDF()
+    Multimodal.roundTrip(Multimodal.mediaTable(spark, sfDir),
+        TgaDims, 3,
+        (id, w, h, rgb) => TgaCodec.decode(TgaCodec.encode(w, h, rgb, rle(id)))) {
+      (id, img) =>
+        val (s, ws) = Multimodal.planeStats(img.pixels, 3)
+        (id, img.width.toLong, img.height.toLong, rle(id), s(0), s(1), s(2), ws)
+    }.toDF("doc_id", "width", "height", "rle", "sum_r", "sum_g", "sum_b", "wsum")
   }
 
-  /** Oracle recomputes the stats from the raw text (ASCII corpus ⇒
-    * byte i == code point of char i+1), blind to the codec. */
-  val decodeTgaSql: String = {
-    def pix(idx: String): String =
-      s"CAST(ascii(substr(text, CAST(($idx) % len AS INTEGER) + 1, 1)) AS BIGINT)"
-    def chanSum(off: Int): String =
-      s"CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, w*h), " +
-        s"p -> ${pix(s"3*p + $off")}))) AS BIGINT)"
-    s"""WITH d AS (
-       |  SELECT doc_id, text, CAST(length(text) AS BIGINT) AS len,
-       |    2 + doc_id % 6 AS w, 2 + doc_id % 5 AS h
-       |  FROM documents WHERE length(text) > 0)
-       |SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-       |  doc_id % 2 = 1 AS rle,
-       |  ${chanSum(0)} AS sum_r,
-       |  ${chanSum(1)} AS sum_g,
-       |  ${chanSum(2)} AS sum_b,
-       |  CAST(list_sum(list_prepend(0::BIGINT, list_transform(range(0, 3*w*h),
-       |    j -> j * ${pix("j")}))) AS BIGINT) AS wsum
-       |FROM d""".stripMargin
-  }
+  val decodeTgaSql: String = ImageSql.over(TgaDims,
+    (Seq(ImageSql.WidthHeight, "doc_id % 2 = 1 AS rle") ++
+      ImageSql.chanSums(ImageSql.Rgb)) :+ ImageSql.wsum())
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "multimodal_decode_tga" -> (decodeTga _))

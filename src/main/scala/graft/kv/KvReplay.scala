@@ -203,27 +203,16 @@ object KvReplay {
       .select(col("key"), col("value"), col("t_snap").as("snapshot_us"))
   }
 
+  /** [[oracleSql]]'s fold over the events at or before the snapshot
+    * instant: the cut is the only difference. */
   lazy val asOfOracleSql: String =
-    """WITH b AS (SELECT (CAST(MIN(epoch_us(ts)) AS BIGINT)
-      |    + CAST(MAX(epoch_us(ts)) AS BIGINT)) // 2 AS t_snap
-      |  FROM events WHERE event_type IN ('signup', 'click', 'purchase')),
-      |ops AS (
-      |  SELECT event_id AS seq, CAST(user_id AS VARCHAR) AS key,
-      |    CASE WHEN event_type = 'signup' THEN 'put'
-      |         WHEN event_type IN ('click','purchase') THEN 'append'
-      |         ELSE 'get' END AS op,
-      |    CAST(event_id AS VARCHAR) AS val
-      |  FROM events, b WHERE epoch_us(ts) <= b.t_snap),
-      |w AS (
-      |  SELECT key, seq, op, val,
-      |    max(CASE WHEN op = 'put' THEN seq END) OVER (PARTITION BY key) AS last_put
-      |  FROM ops WHERE op <> 'get')
-      |SELECT key,
-      |  coalesce(max(CASE WHEN op = 'put' AND seq = last_put THEN val END), '') ||
-      |  coalesce(string_agg(CASE WHEN op = 'append' AND (last_put IS NULL OR seq > last_put) THEN val END, '' ORDER BY seq), '')
-      |    AS value,
-      |  (SELECT t_snap FROM b) AS snapshot_us
-      |FROM w GROUP BY key""".stripMargin
+    s"""WITH b AS (SELECT (CAST(MIN(epoch_us(ts)) AS BIGINT)
+       |    + CAST(MAX(epoch_us(ts)) AS BIGINT)) // 2 AS t_snap
+       |  FROM events WHERE event_type IN ('signup', 'click', 'purchase')),
+       |cut AS (SELECT events.* FROM events, b WHERE epoch_us(ts) <= b.t_snap),
+       |plain AS (${oracleOver("cut")})
+       |SELECT key, value, (SELECT t_snap FROM b) AS snapshot_us
+       |FROM plain""".stripMargin
 
   // ------------------------------------------ TTL expiry at snapshot ---
 
@@ -344,23 +333,26 @@ object KvReplay {
   /** DuckDB oracle: last put per key, then appends after it, in seq order.
     * Aggregates skip NULLs, so the CASE projections align exactly with the
     * fold of [[replay]]. */
-  val oracleSql: String =
-    """WITH ops AS (
-      |  SELECT event_id AS seq, CAST(user_id AS VARCHAR) AS key,
-      |    CASE WHEN event_type = 'signup' THEN 'put'
-      |         WHEN event_type IN ('click','purchase') THEN 'append'
-      |         ELSE 'get' END AS op,
-      |    CAST(event_id AS VARCHAR) AS val
-      |  FROM events),
-      |w AS (
-      |  SELECT key, seq, op, val,
-      |    max(CASE WHEN op = 'put' THEN seq END) OVER (PARTITION BY key) AS last_put
-      |  FROM ops WHERE op <> 'get')
-      |SELECT key,
-      |  coalesce(max(CASE WHEN op = 'put' AND seq = last_put THEN val END), '') ||
-      |  coalesce(string_agg(CASE WHEN op = 'append' AND (last_put IS NULL OR seq > last_put) THEN val END, '' ORDER BY seq), '')
-      |    AS value
-      |FROM w GROUP BY key""".stripMargin
+  val oracleSql: String = oracleOver("events")
+
+  /** The [[oracleSql]] fold over any relation shaped like `events`. */
+  private def oracleOver(events: String): String =
+    s"""WITH ops AS (
+       |  SELECT event_id AS seq, CAST(user_id AS VARCHAR) AS key,
+       |    CASE WHEN event_type = 'signup' THEN 'put'
+       |         WHEN event_type IN ('click','purchase') THEN 'append'
+       |         ELSE 'get' END AS op,
+       |    CAST(event_id AS VARCHAR) AS val
+       |  FROM $events),
+       |w AS (
+       |  SELECT key, seq, op, val,
+       |    max(CASE WHEN op = 'put' THEN seq END) OVER (PARTITION BY key) AS last_put
+       |  FROM ops WHERE op <> 'get')
+       |SELECT key,
+       |  coalesce(max(CASE WHEN op = 'put' AND seq = last_put THEN val END), '') ||
+       |  coalesce(string_agg(CASE WHEN op = 'append' AND (last_put IS NULL OR seq > last_put) THEN val END, '' ORDER BY seq), '')
+       |    AS value
+       |FROM w GROUP BY key""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "kv_replay" -> (fromEvents _),

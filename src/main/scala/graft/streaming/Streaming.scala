@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.kv.KvOp
 
 /** Structured Streaming renditions of the batch analytics (SURVEY.md §2.8:
@@ -78,11 +78,13 @@ object Streaming {
     * for per-document queries like dedup — whereas here updates go
     * executor→parquet and only the driver-side read of the FINAL
     * aggregate is small. Checkpoint + per-batch overwrite also make the
-    * write path recoverable (memory sink is not). */
+    * write path recoverable (memory sink is not). The returned frame
+    * reads the sink directory lazily, so it lives under [[Scratch]]
+    * until the JVM exits. */
   private def runToParquet(updates: DataFrame, mode: OutputMode,
       name: String, stateParts: String = StatePartitions): DataFrame = {
     val spark = updates.sparkSession
-    val outDir = Files.createTempDirectory(s"graft-sink-$name-").toString
+    val outDir = Scratch.dir(s"graft-sink-$name-").toString
     val complete = mode == OutputMode.Complete()
     val sink: (DataFrame, Long) => Unit =
       if (complete)
@@ -108,7 +110,7 @@ object Streaming {
     // The checkpoint lives as long as the run: a terminated AvailableNow
     // query never reads it again, so it is deleted on success and on
     // failure alike.
-    val ckpt = Files.createTempDirectory("graft-ckpt-")
+    val ckpt = Scratch.dir("graft-ckpt-")
     try {
       val q = startWindow.synchronized {
         val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -153,7 +155,7 @@ object Streaming {
     * `df.write.parquet` produces). Cached per (sfDir, table). */
   private def staged(sfDir: String, table: String): String =
     stagedSrc.computeIfAbsent(s"$sfDir/$table", { _ =>
-      val d = Files.createTempDirectory("graft-stream-src-")
+      val d = Scratch.dir("graft-stream-src-")
       val src = Paths.get(s"$sfDir/$table.parquet")
       if (Files.isDirectory(src)) {
         val parts =
@@ -210,10 +212,10 @@ object Streaming {
     * event-time order. */
   private def stagedDaily(spark: SparkSession, sfDir: String): String =
     chunkStagedSrc.computeIfAbsent(s"$sfDir/events", { _ =>
-      val d = Files.createTempDirectory("graft-stream-days-")
+      val d = Scratch.dir("graft-stream-days-")
       // The write's scratch directory: once the days have moved out it
       // holds only markers, checksums and empty `chunk=` directories.
-      val tmp = Files.createTempDirectory("graft-stream-days-tmp-")
+      val tmp = Scratch.dir("graft-stream-days-tmp-")
       try {
         Tables.events(spark, sfDir)
           .withColumn("chunk", date_format(col("ts"), "yyyyMMdd"))

@@ -262,7 +262,7 @@ class MultimodalSpec extends SparkSpec {
       id -> ((w.toLong, h.toLong, r, g, b, ws))
     }.toMap
     val got = Multimodal.decodePng(spark, sf)
-      .as[Multimodal.PngDecoded].collect()
+      .as[Multimodal.RgbStats].collect()
     assert(got.length == want.size)
     got.foreach { d =>
       assert(want(d.doc_id) ==
@@ -304,7 +304,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("decodeBmp: wsum is position-sensitive (catches a row-order bug)") {
     val out = Multimodal.decodeBmp(spark, sf)
-      .as[Multimodal.BmpDecoded].collect()
+      .as[Multimodal.RgbStats].collect()
     assert(out.nonEmpty)
     out.foreach { d =>
       assert(d.width == 2 + d.doc_id % 5 && d.height == 2 + d.doc_id % 4)
@@ -349,7 +349,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("decodePpm: header fields come from the parse, sums from the plane") {
     val out = Multimodal.decodePpm(spark, sf)
-      .as[Multimodal.PpmDecoded].collect()
+      .as[MultimodalSpec.PpmStats].collect()
     assert(out.nonEmpty)
     out.foreach { d =>
       assert(d.width == 2 + d.doc_id % 4 && d.height == 2 + d.doc_id % 3)
@@ -388,6 +388,60 @@ class MultimodalSpec extends SparkSpec {
     assert(totals.count(_ > 0) >= 2)
   }
 
+  private val testDims = Multimodal.Dims(2, 5, 2, 4)
+
+  /** The BMP codec with `decoded` applied to its output: the seam the
+    * broken-codec cases below drive. */
+  private def bmpThen(decoded: Multimodal.BmpCodec.BmpImage => Option[Multimodal.BmpCodec.BmpImage])
+      : (Long, Int, Int, Array[Byte]) => Option[Multimodal.BmpCodec.BmpImage] =
+    (_, w, h, rgb) => Multimodal.BmpCodec.decode(
+      Multimodal.BmpCodec.encode(w, h, rgb)).flatMap(decoded)
+
+  test("round trip: a decode that returns None fails the query, naming the doc") {
+    val rows = Multimodal.mediaTable(spark, sf)
+    val bad = rows.collect().filter(_.payload.nonEmpty).map(_.doc_id).max
+    val good = bmpThen(Some(_))
+    val e = intercept[org.apache.spark.SparkException] {
+      Multimodal.rgbStats(rows, testDims, (id: Long, w: Int, h: Int, rgb: Array[Byte]) =>
+        if (id == bad) None else good(id, w, h, rgb)).collect()
+    }
+    assert(e.getMessage.contains(s"round-trip decode failed for doc $bad"),
+      e.getMessage)
+  }
+
+  test("round trip: a codec that swaps two rows is caught by the stats") {
+    // Reports the requested dims, but rows 0 and 1 come back swapped.
+    val swapped = bmpThen { img =>
+      val s = 3 * img.width
+      val px = img.pixels.clone()
+      System.arraycopy(img.pixels, s, px, 0, s)
+      System.arraycopy(img.pixels, 0, px, s, s)
+      Some(img.copy(pixels = px))
+    }
+    val rows = Multimodal.mediaTable(spark, sf)
+    val texts = rows.collect().filter(_.payload.nonEmpty)
+      .map(r => r.doc_id -> r.payload).toMap
+    val got = Multimodal.rgbStats(rows, testDims, swapped).collect()
+    assert(got.length == texts.size)
+    var differing = 0
+    got.foreach { d =>
+      val tb = texts(d.doc_id)
+      val (w, h) = testDims(d.doc_id)
+      val plane = Array.tabulate(3 * w * h)(i => tb(i % tb.length))
+      val (sums, ws) = Multimodal.planeStats(plane, 3)
+      val want = Multimodal.RgbStats(d.doc_id, w, h, sums(0), sums(1), sums(2), ws)
+      assert((d.width, d.height) == ((w.toLong, h.toLong)))
+      // Swapping rows a and b moves wsum by row_len·(Σa − Σb), so wsum
+      // sees every swap of two rows whose byte sums differ.
+      def rowSum(y: Int) = plane.slice(3 * w * y, 3 * w * (y + 1)).map(_ & 0xffL).sum
+      if (rowSum(0) != rowSum(1)) {
+        assert(d != want, s"doc ${d.doc_id}: a row swap went unseen")
+        differing += 1
+      }
+    }
+    assert(differing > 0)
+  }
+
   test("metadata-only consumers prune the payload column at the scan") {
     // Leaf scans (parquet or a cached InMemoryTableScan) must read only
     // doc_id — neither text nor the derived payload column.
@@ -402,4 +456,10 @@ class MultimodalSpec extends SparkSpec {
         s"scan not pruned: $leaf")
     }
   }
+}
+
+object MultimodalSpec {
+  /** `multimodal_decode_ppm`'s row. */
+  case class PpmStats(doc_id: Long, width: Long, height: Long, maxval: Long,
+      sum_r: Long, sum_g: Long, sum_b: Long)
 }

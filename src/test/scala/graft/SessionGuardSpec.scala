@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * state-partition count around `start()`), no query path registers a
   * function, and no code sweeps the session's persisted state. It also
   * keeps each written-once rule written once: the KV Put/Append
-  * transition (`KvOp.fold`) and the streaming in-order check
-  * (`Streaming.inOrder`). No SparkSession needed. */
+  * transition (`KvOp.fold`), the streaming in-order check
+  * (`Streaming.inOrder`) and the image codec round trip
+  * (`Multimodal.roundTrip`). No SparkSession needed. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO_DIR",
@@ -73,6 +74,12 @@ class SessionGuardSpec extends AnyFunSuite {
       s"\"out-of-order in ${occurrences("\"out-of-order")}")
     // and nothing else in the streaming module throws the same failure
     assert(occurrences("IllegalStateException(").get(streaming).contains(1))
+  }
+
+  test("the image round trip's decode failure is raised once, in Multimodal.roundTrip") {
+    val pattern = "round-trip decode failed"
+    assert(occurrences(pattern) == Map("graft/ext/Multimodal.scala" -> 1),
+      s"$pattern in ${occurrences(pattern)}")
   }
 
   test("no session-wide checkpoint sweep") {

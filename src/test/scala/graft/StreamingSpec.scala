@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -33,19 +33,25 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  /** Names in java.io.tmpdir that start with `prefix`. */
-  private def tmpEntries(prefix: String): Set[String] = {
+  /** Entries of `dir` (java.io.tmpdir by default) whose names start
+    * with `prefix`. */
+  private def tmpEntries(prefix: String,
+      dir: Path = Paths.get(System.getProperty("java.io.tmpdir"))): Set[Path] = {
     import scala.jdk.CollectionConverters._
-    val l = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
-    try l.iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith(prefix)).toSet
+    val l = Files.list(dir)
+    try l.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toSet
     finally l.close()
   }
 
+  /** `prefix` entries in java.io.tmpdir and in the [[Scratch]] root: the
+    * directories a run must free itself rather than leave to JVM exit. */
+  private def leftovers(prefix: String): Set[Path] =
+    tmpEntries(prefix) ++ tmpEntries(prefix, Scratch.root)
+
   test("a gated streaming query leaves no checkpoint directory behind") {
-    val before = tmpEntries("graft-ckpt-")
+    val before = leftovers("graft-ckpt-")
     assert(Streaming.queries("kv_replay_stream")(spark, sf).count() > 0)
-    assert(tmpEntries("graft-ckpt-") == before)
+    assert(leftovers("graft-ckpt-") == before)
   }
 
   test("the daily staging leaves no scratch directory behind") {
@@ -53,9 +59,20 @@ class StreamingSpec extends SparkSpec {
     val dir = tempDir("graft-days-sf-").toString
     spark.read.parquet(s"$sf/events.parquet")
       .coalesce(1).write.parquet(s"$dir/events.parquet")
-    val before = tmpEntries("graft-stream-days-tmp-")
+    val before = leftovers("graft-stream-days-tmp-")
     assert(Streaming.eventStreamDaily(spark, dir).isStreaming)
-    assert(tmpEntries("graft-stream-days-tmp-") == before)
+    assert(leftovers("graft-stream-days-tmp-") == before)
+  }
+
+  test("a gated streaming query adds no sink or staging entry to the temp directory") {
+    // A fresh table directory: the staging is cached per directory.
+    val dir = tempDir("graft-scratch-sf-").toString
+    spark.read.parquet(s"$sf/events.parquet")
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    def scratch = tmpEntries("graft-sink-") ++ tmpEntries("graft-stream-")
+    val before = scratch
+    assert(Streaming.queries("kv_replay_stream")(spark, dir).count() > 0)
+    assert((scratch -- before).isEmpty, scratch -- before)
   }
 
   test("kv mapGroupsWithState across micro-batches == batch replay") {
